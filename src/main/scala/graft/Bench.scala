@@ -24,8 +24,8 @@ object Bench {
     val spark = GraftSession.getOrCreate("graft-bench")
     // A handful of queries use windows that are UNPARTITIONED by
     // construction (bounded domains — d24/d62's top-1000 vocab cut,
-    // q28's calendar-day aggregate, e24's ≤2^16-bucket rank,
-    // TweetSink's opt-in parity ids); WindowExec warns per occurrence
+    // q28's calendar-day aggregate, e24's ≤2^16-bucket rank);
+    // WindowExec warns per occurrence
     // and the repeated lines crowd the driver's limited captured stderr
     // tail. Targeted silence for the bench session only — everything
     // else keeps its level.

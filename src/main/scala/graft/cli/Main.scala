@@ -76,11 +76,7 @@ object Main {
     if (!doSetup && !doStream) { log.info("nothing to do (force-stream without initial-setup)"); return }
     val spark = GraftSession.getOrCreate("graft-etl")
     try {
-      // The CLI is the reference-parity surface: dense SQLite-rowid ids
-      // (main.R INTEGER PRIMARY KEY), so opt into contiguous-id mode
-      // explicitly. Library users get the class default (sparse, fully
-      // parallel ids) — the scale path.
-      val sink = new ParquetTweetSink(spark, cfg.database, contiguousIds = true)
+      val sink = new ParquetTweetSink(spark, cfg.database)
       if (doSetup) {
         log.info("running initial setup")
         sink.ensureTable()

@@ -5,9 +5,9 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import org.slf4j.LoggerFactory
 
 /** The `tweet_data` sink contract (SURVEY.md §2.1 S5-S8):
@@ -61,19 +61,25 @@ object TweetSink {
   * JDBC formulation is [[JdbcTweetSink]]; swap via the CLI `--database`
   * URL scheme.)
   *
-  * tweet_id parity note: SQLite's INTEGER PRIMARY KEY assigns contiguous
-  * rowids in insertion order. `contiguousIds = true` reproduces that with
-  * max(id) + row_number over the batch's data order — correct, but the
-  * global row_number serializes the batch through one task, so it is the
-  * opt-in parity mode for modest batches (pinned by StreamingEtlSpec's S7
-  * parity test). The DEFAULT is the scale path: ids from
-  * monotonically_increasing_id + a base offset — unique and ascending per
-  * batch, not dense, fully parallel (the reference never promises density
-  * either; SQLite rowids skip after deletes). */
-final class ParquetTweetSink(spark: SparkSession, path: String,
-    contiguousIds: Boolean = false) extends TweetSink {
+  * tweet_id: dense like SQLite's INTEGER PRIMARY KEY rowids — each batch
+  * takes `highWater + 1 .. highWater + n`, one id per row, assigned in
+  * parallel: a partition's ids start after the rows of the partitions
+  * before it (the partition-offset scheme of [[graft.operators.GlobalRank]],
+  * here as DataFrame expressions so the write stays in codegen).
+  *
+  * S8: the high-water mark lives in this instance. It is seeded once — 0
+  * when [[ensureTable]] has just created the table, else the table's
+  * max(tweet_id) read at the first append (which also covers a restart) —
+  * and advanced after each committed write; any failure drops it, so the
+  * next append re-reads the table. The sink therefore never scans its
+  * table per batch. One writing sink instance per table: re-reading the
+  * max before every write would not make concurrent writers safe either,
+  * since read-max-then-write is not atomic. */
+final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSink {
   private val log = LoggerFactory.getLogger(getClass)
   private var resolved: Option[String] = None
+  /** Largest tweet_id in the table; None until seeded or after a failure. */
+  private var highWater: Option[Long] = None
 
   def tablePath: String = resolved.getOrElse(path)
 
@@ -86,32 +92,47 @@ final class ParquetTweetSink(spark: SparkSession, path: String,
     // S5: materialize the declared schema as an empty parquet table.
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       TweetSink.schema).write.mode(SaveMode.ErrorIfExists).parquet(target)
+    highWater = Some(0L)
     log.info(s"created table tweet_data at $target")
     target
   }
 
+  private def tableMax(target: String): Long =
+    if (Files.exists(Paths.get(target)))
+      spark.read.parquet(target).agg(coalesce(max(col("tweet_id")), lit(0L)))
+        .head().getLong(0)
+    else 0L
+
+  /** One evaluation of `df`: it is cached, counted per partition, and the
+    * write reads the cache — both passes read the same cached partitions,
+    * so the counts taken by the first hold for the second. S4: an empty
+    * batch warns and writes nothing (main.R:75-78, 114). */
   override def append(df: DataFrame): Unit = {
     val target = tablePath
-    // S8: "connection" per operation — each append re-reads current state,
-    // no session-held handles (mirrors dbConnect/dbDisconnect per load,
-    // main.R:117-119).
-    val base: Long =
-      if (Files.exists(Paths.get(target)))
-        spark.read.parquet(target).agg(coalesce(max(col("tweet_id")), lit(0L)))
-          .head().getLong(0)
-      else 0L
-    val ordered = df.columns.map(c => col(c).asc_nulls_last)
-    val withId =
-      if (contiguousIds) {
-        val w = Window.orderBy(ordered.toIndexedSeq: _*)
-        df.withColumn("tweet_id", lit(base) + row_number().over(w).cast("long"))
-      } else {
-        df.withColumn("tweet_id",
-          lit(base) + monotonically_increasing_id() + lit(1L))
+    val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val base = highWater.getOrElse(tableMax(target))
+      highWater = Some(base)
+      val counts = batch.groupBy(spark_partition_id()).count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val total = counts.values.sum
+      if (total == 0L) log.warn(s"no tweets after transform; nothing appended to $target")
+      else {
+        // starts(p): the id before partition p's first row. base is folded
+        // in so that only this array literal changes between batches.
+        val starts = (0 to counts.keys.max).scanLeft(base)((o, p) => o + counts.getOrElse(p, 0L))
+        val pid = spark_partition_id()
+        val indexInPartition = monotonically_increasing_id() - shiftleft(pid.cast("long"), 33)
+        batch.withColumn("tweet_id",
+            element_at(typedLit(starts.init.toArray), pid + 1) + indexInPartition + 1L)
+          .select(TweetSink.schema.fieldNames.map(col).toIndexedSeq: _*)
+          .write.mode(SaveMode.Append).parquet(target)
+        highWater = Some(base + total)
+        log.info(s"appended $total rows to tweet_data at $target")
       }
-    withId.select(TweetSink.schema.fieldNames.map(col).toIndexedSeq: _*)
-      .write.mode(SaveMode.Append).parquet(target)
-    log.info(s"appended batch to tweet_data at $target")
+    } catch {
+      case e: Throwable => highWater = None; throw e
+    } finally batch.unpersist()
   }
 }
 
@@ -142,7 +163,8 @@ final class JdbcTweetSink(spark: SparkSession, url: String,
 
   override def append(df: DataFrame): Unit = {
     // Sink assigns tweet_id (rowid) — write only the 7 transform columns,
-    // exactly like dbWriteTable(append=TRUE) (main.R:117-119).
+    // exactly like dbWriteTable(append=TRUE) (main.R:117-119). An empty
+    // batch inserts no rows.
     df.write.mode(SaveMode.Append)
       .jdbc(url, table, new java.util.Properties())
     log.info(s"appended batch to $table via $url")

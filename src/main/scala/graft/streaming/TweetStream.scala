@@ -45,16 +45,11 @@ object TweetStream {
       case None => raw
     }
 
-  /** One micro-batch: transform, guard the empty case (S4 observable
-    * behavior: warn + no sink write, main.R:75-78, 114), else append. */
-  def processBatch(sink: TweetSink)(batch: DataFrame, batchId: Long): Unit = {
-    val out = TweetPipeline.transform(batch)
-    if (out.isEmpty) log.warn(s"batch $batchId: no tweets after transform; skipping load")
-    else {
-      sink.append(out)
-      log.info(s"batch $batchId: loaded")
-    }
-  }
+  /** One micro-batch: transform, then append. The S4 empty-batch guard
+    * lives in the sink (main.R:114), so the transform is evaluated once:
+    * ParquetTweetSink counts and writes the same cached batch. */
+  def processBatch(sink: TweetSink)(batch: DataFrame, batchId: Long): Unit =
+    sink.append(TweetPipeline.transform(batch))
 
   /** Bounded streaming run: process `chunks` micro-batches (one bronze
     * file each, trigger interval = streamTimeout), then stop — the

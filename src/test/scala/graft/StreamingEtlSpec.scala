@@ -51,11 +51,40 @@ class StreamingEtlSpec extends SparkSpec {
     val users = out.select("user").as[String].collect().toSet
     assert(users == Set("ana", "hugo")) // eva lost in-batch; ana appears twice
     assert(out.filter($"user" === "ana").count() == 2)
-    // sink-assigned ids, scale-path default: unique and batch-ascending
-    // (dense SQLite-style rowids are the opt-in parity mode — see the S7
-    // parity test)
+    // sink-assigned ids: unique and batch-ascending (density is pinned by
+    // the S7 parity test)
     val ids = out.select("tweet_id").as[Long].collect()
     assert(ids.distinct.length == 3 && ids.forall(_ >= 1L))
+  }
+
+  test("C1: the transform runs once per micro-batch (numInputRows == chunk lines)") {
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    val bronze = tmpDir("bronze-once")
+    val dbDir = tmpDir("db-once")
+    val lines = Seq(anaLine, evaLine, hugoLine)
+    Files.writeString(bronze.resolve("stream_20191023_031500.json"),
+      lines.mkString("", "\n", "\n"))
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      TweetStream.runAvailableNow(spark, bronze.toString,
+        new ParquetTweetSink(spark, dbDir.resolve("t.db").toString), keys = None,
+        checkpointDir = dbDir.resolve("ckpt").toString)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    val mine = progress.asScala.toSeq
+      .filter(_.sources.exists(_.description.contains(bronze.toString)))
+    // every evaluation of the batch re-reads the source, so a second pass
+    // over the transform would count each line twice
+    assert(mine.map(_.numInputRows).sum == lines.length.toLong)
+    assert(spark.read.parquet(dbDir.resolve("t.db").toString).count() == 2L)
   }
 
   test("S7 parity: contiguousIds=true gives dense SQLite rowids; default is unique-ascending") {
@@ -65,10 +94,10 @@ class StreamingEtlSpec extends SparkSpec {
         null: String, null: String, null: String))
       .toDF("date_created", "user", "content", "source", "location",
         "quoted_user", "quoted_content")
-    // SQLite-parity mode: rowids 1..n in data order, continuing densely
-    // across appends (INTEGER PRIMARY KEY semantics, main.R:29-38).
+    // SQLite parity: rowids 1..n, continuing densely across appends
+    // (INTEGER PRIMARY KEY semantics, main.R:29-38).
     val parityTable = tmpDir("db-parity").resolve("tweet_data.db").toString
-    val parity = new ParquetTweetSink(spark, parityTable, contiguousIds = true)
+    val parity = new ParquetTweetSink(spark, parityTable)
     parity.ensureTable()
     parity.append(batch("ana", "eva"))
     parity.append(batch("hugo", "ines"))
@@ -76,8 +105,8 @@ class StreamingEtlSpec extends SparkSpec {
       .select("user", "tweet_id").as[(String, Long)].collect().toMap
     assert(byUser.values.toSeq.sorted == Seq(1L, 2L, 3L, 4L))
     assert(Set(byUser("hugo"), byUser("ines")) == Set(3L, 4L)) // dense continuation
-    // Scale-path default: unique, every batch strictly above the previous
-    // max, no global-window serialization (ids may be sparse).
+    // The same sink on a second table: unique, every batch strictly above
+    // the previous max.
     val scaleTable = tmpDir("db-scale").resolve("tweet_data.db").toString
     val scale = new ParquetTweetSink(spark, scaleTable)
     scale.ensureTable()
@@ -90,6 +119,9 @@ class StreamingEtlSpec extends SparkSpec {
     assert(all.map(_._2).distinct.length == 4)
     assert(all.filter(r => r._1 == "hugo" || r._1 == "ines")
       .forall(_._2 > b1Max))
+    // dense continuation from the sink's high-water mark
+    assert(all.filter(r => r._1 == "hugo" || r._1 == "ines").map(_._2).sorted
+      .toSeq == Seq(b1Max + 1, b1Max + 2))
   }
 
   test("F2: keys pattern matches any key, case-insensitive, quoted") {
