@@ -5,9 +5,9 @@ import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 import org.slf4j.LoggerFactory
 
 /** The `tweet_data` sink contract (SURVEY.md §2.1 S5-S8):
@@ -74,7 +74,18 @@ object TweetSink {
   * next append re-reads the table. The sink therefore never scans its
   * table per batch. One writing sink instance per table: re-reading the
   * max before every write would not make concurrent writers safe either,
-  * since read-max-then-write is not atomic. */
+  * since read-max-then-write is not atomic.
+  *
+  * The batch is held by a lazy local checkpoint, not `persist`. A loaded
+  * batch then runs three jobs: the transform's exchange (run while the
+  * checkpoint is built), the per-partition count (which stores the blocks)
+  * and the write. A persisted plan would add AQE's separate cache-stage job,
+  * and AQE may not coalesce a cached plan's output partitions, so a small
+  * batch would land as one file per shuffle partition; from a checkpoint it
+  * lands as one file. Both passes read the same stored blocks or fail — a
+  * checkpoint is never recomputed, so the counts cannot drift from the
+  * write. The blocks are executor-local: a lost executor fails the batch,
+  * and the S8 reset above makes the next append re-read the table. */
 final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSink {
   private val log = LoggerFactory.getLogger(getClass)
   private var resolved: Option[String] = None
@@ -103,18 +114,23 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
         .head().getLong(0)
     else 0L
 
-  /** One evaluation of `df`: it is cached, counted per partition, and the
-    * write reads the cache — both passes read the same cached partitions,
-    * so the counts taken by the first hold for the second. S4: an empty
-    * batch warns and writes nothing (main.R:75-78, 114). */
+  /** One evaluation of `df`, held by a lazy local checkpoint: a per-partition
+    * count, then the write. The count computes the batch and stores its
+    * blocks; the write reads those blocks, so the counts taken by the first
+    * pass hold for the second. S4: an empty batch warns and writes nothing
+    * (main.R:75-78, 114). */
   override def append(df: DataFrame): Unit = {
+    import spark.implicits._
     val target = tablePath
-    val batch = df.persist(StorageLevel.MEMORY_AND_DISK)
+    var batch: DataFrame = null
     try {
       val base = highWater.getOrElse(tableMax(target))
       highWater = Some(base)
-      val counts = batch.groupBy(spark_partition_id()).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      batch = df.localCheckpoint(eager = false)
+      // (partition id, rows) for each non-empty partition, without a shuffle
+      val counts = batch.select(spark_partition_id()).as[Int]
+        .mapPartitions(pids => pids.nextOption().map(p => p -> (1L + pids.size)).iterator)
+        .collect().toMap
       val total = counts.values.sum
       if (total == 0L) log.warn(s"no tweets after transform; nothing appended to $target")
       else {
@@ -132,7 +148,9 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
       }
     } catch {
       case e: Throwable => highWater = None; throw e
-    } finally batch.unpersist()
+    } finally Option(batch).foreach(_.queryExecution.logical.collectFirst {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false) // the checkpoint's blocks
+    })
   }
 }
 

@@ -47,7 +47,7 @@ object TweetStream {
 
   /** One micro-batch: transform, then append. The S4 empty-batch guard
     * lives in the sink (main.R:114), so the transform is evaluated once:
-    * ParquetTweetSink counts and writes the same cached batch. */
+    * ParquetTweetSink counts and writes the same checkpointed batch. */
   def processBatch(sink: TweetSink)(batch: DataFrame, batchId: Long): Unit =
     sink.append(TweetPipeline.transform(batch))
 

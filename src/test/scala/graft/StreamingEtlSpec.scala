@@ -87,6 +87,50 @@ class StreamingEtlSpec extends SparkSpec {
     assert(spark.read.parquet(dbDir.resolve("t.db").toString).count() == 2L)
   }
 
+  test("C1: a loaded micro-batch runs at most 3 jobs and adds one parquet file; " +
+      "ids stay dense") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val bronze = tmpDir("bronze-jobs")
+    val dbDir = tmpDir("db-jobs")
+    // 40 distinct tweets per chunk: enough distinct contents to hash to
+    // every shuffle partition of the dedup
+    val chunks = 3
+    val perChunk = 40
+    (0 until chunks).foreach { k =>
+      val f = bronze.resolve(f"stream_20191023_11$k%02d00.json")
+      Files.writeString(f, (0 until perChunk).map(i =>
+        s"""{"created_at":"Wed Oct 23 03:15:02 +0000 2019","screen_name":"u$k-$i","text":"chunk $k tweet numero $i distinto","source":"s","location":null,"quoted_screen_name":null,"quoted_text":null,"is_retweet":false,"lang":"es"}"""
+      ).mkString("", "\n", "\n"))
+      f.toFile.setLastModified(1000000L * (k + 1))
+    }
+    val table = dbDir.resolve("tweet_data.db").toString
+    val sink = new ParquetTweetSink(spark, table)
+    sink.ensureTable()
+    def parquetFiles(): Int =
+      Files.list(Paths.get(table)).iterator().asScala.count(_.toString.endsWith(".parquet"))
+    val filesBefore = parquetFiles()
+    // jobs submitted from foreachBatch carry the micro-batch id
+    val jobsByBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobsByBatch.merge(b, 1, (x: Integer, y: Integer) => x + y))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      TweetStream.runAvailableNow(spark, bronze.toString, sink, keys = None,
+        checkpointDir = dbDir.resolve("ckpt").toString)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = jobsByBatch.asScala.toMap
+    assert(jobs.size == chunks, s"jobs per batch: $jobs")
+    assert(jobs.values.forall(_ <= 3), s"a batch ran more than 3 jobs: $jobs")
+    assert(parquetFiles() - filesBefore == chunks, "each batch must add exactly one file")
+    val ids = spark.read.parquet(table).select("tweet_id").as[Long].collect().sorted.toSeq
+    assert(ids == (1L to chunks.toLong * perChunk))
+  }
+
   test("S7 parity: contiguousIds=true gives dense SQLite rowids; default is unique-ascending") {
     import java.sql.Timestamp
     def batch(users: String*) = users.toSeq.map(u =>

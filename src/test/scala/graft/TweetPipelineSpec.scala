@@ -67,19 +67,20 @@ class TweetPipelineSpec extends SparkSpec {
     assert(TweetPipeline.transform(empty).isEmpty)
   }
 
-  test("plan quality: two bounded shuffles, pushed filters, partial dedup before exchange") {
+  test("plan quality: one bounded shuffle, pushed filters, partial dedup below the exchange") {
     val df = TweetPipeline.transform(raw)
     df.collect() // finalize the adaptive plan
     // AQE toString repeats the initial plan below the final one — keep final only
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-    // stage-1 exchange on (content, salt) over the full input; stage-2
-    // exchange on content over per-salt winners only (≈ distinct keys).
-    // F1/P1/P2 stay narrow — no other exchange may appear.
-    assert("Exchange".r.findAllIn(plan).size == 2, s"expected 2 exchanges:\n$plan")
+    // the dedup's exchange on content is the only one: F1/P1/P2 stay narrow
+    assert(shuffles(plan) == 1, s"expected 1 exchange:\n$plan")
     // both filter conjuncts reach the JSON scan
     assert(plan.contains("PushedFilters") && plan.contains("EqualTo(lang,es)"))
-    // map-side keep-first (WindowGroupLimit Partial) bounds shuffle volume
-    assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"))
+    // map-side keep-first (WindowGroupLimit Partial) runs below the exchange,
+    // so it ships at most one row per key per map partition
+    val below = plan.linesIterator.dropWhile(!_.contains("- Exchange ")).drop(1).toSeq
+    assert(below.exists(l => l.contains("WindowGroupLimit") && l.contains("Partial")),
+      s"no partial WindowGroupLimit below the exchange:\n$plan")
   }
 
   test("D1: dedup output is stable under input row/partition reordering") {
@@ -100,5 +101,39 @@ class TweetPipelineSpec extends SparkSpec {
     assert(out.length == 2)
     val nullRow = out.find(_.isNullAt(0)).get
     assert(nullRow.getString(2) == "u1") // earliest (date, user) wins
+  }
+
+  test("D1: a large NULL-content group ships at most one row per map partition " +
+      "and keeps its ord-min") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val parts = 8
+    // ids 0..11999 in 8 range partitions of 1,500; content is NULL except
+    // for 4 keys, each on two rows of one partition. `when` without
+    // `otherwise` keeps the NULL from folding to a constant.
+    val df = spark.range(0, 12000, 1, parts).select(
+      when($"id" % 3000 < 2, concat(lit("k"), ($"id" / 3000).cast("int").cast("string")))
+        .as("content"),
+      (lit(20000L) - $"id").as("v"))
+    val keys = 4
+    val written = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => written.addAndGet(m.shuffleWriteMetrics.recordsWritten))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try {
+        val rows = TweetPipeline.dedupKeepFirst(df).as[(String, Long)].collect()
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+        rows
+      } finally spark.sparkContext.removeSparkListener(listener)
+    val nulls = out.filter(_._1 == null)
+    assert(nulls.length == 1, s"NULL survivors: ${nulls.toSeq}")
+    // largest NULL id is 11999 (11999 % 3000 >= 2): v = 20000 - 11999
+    assert(nulls.head._2 == 8001L)
+    assert(out.length == 1 + keys)
+    assert(written.get > 0L, "the dedup wrote no shuffle records")
+    assert(written.get <= parts + keys,
+      s"dedup shuffle wrote ${written.get} records, want <= ${parts + keys}")
   }
 }

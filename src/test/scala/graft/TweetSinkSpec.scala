@@ -133,6 +133,23 @@ class TweetSinkSpec extends SparkSpec {
         .otherwise($"content"))
     intercept[Exception](sink.append(bad))
     assert(spark.read.parquet(table).count() == 2L, "the failed batch wrote rows")
+    assert(persisted() -- cached0 == Set.empty,
+      "a batch that failed in its count stayed cached")
+    // raise_error below the exchange: the append fails while its local
+    // checkpoint is being built, before any count
+    val early = spark.range(2).select(
+        lit(Timestamp.valueOf("2019-10-23 03:15:09")).as("date_created"),
+        concat(lit("early"), $"id").as("user"),
+        when($"id" === 1L, raise_error(lit("early boom")).cast("string"))
+          .otherwise(lit("content early")).as("content"),
+        lit("s").as("source"), lit(null).cast("string").as("location"),
+        lit(null).cast("string").as("quoted_user"),
+        lit(null).cast("string").as("quoted_content"))
+      .repartition(3)
+    intercept[Exception](sink.append(early))
+    assert(spark.read.parquet(table).count() == 2L, "the early-failing batch wrote rows")
+    assert(persisted() -- cached0 == Set.empty,
+      "a batch that failed before its checkpoint stayed cached")
     // A failure can leave files behind (a write that failed after some of
     // its output landed); stand-in rows written outside the sink raise the
     // table's max, which the next append must read instead of trusting
