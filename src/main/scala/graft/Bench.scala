@@ -33,8 +33,7 @@ object Bench {
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
     // Dev loop: SPARK_GRAFT_BENCH_ONLY=q01,d12 times just those queries.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = MainEnv.only("SPARK_GRAFT_BENCH_ONLY")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") match {
@@ -74,8 +73,7 @@ object Bench {
     // default 300): a hung query reports one null-with-reason entry
     // instead of eating the round's whole bench window (QueryBudget
     // cancels its job group on expiry).
-    val timeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(300)
+    val timeoutSec = MainEnv.positiveInt("SPARK_GRAFT_BENCH_TIMEOUT", 300)
     // Variance control: the whole timed pass runs SPARK_GRAFT_BENCH_RUNS
     // times (default 2) and each query reports its MINIMUM across passes.
     // A single pass conflates the query's cost with where it happens to
@@ -85,8 +83,7 @@ object Bench {
     // min across passes is the right point estimate for "what does this
     // plan cost": suite-position noise is strictly additive, so the min
     // converges on the true cost while mean/median still carry it.
-    val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(2)
+    val runs = MainEnv.positiveInt("SPARK_GRAFT_BENCH_RUNS", 2)
     def timedPass(): Seq[(String, Double, Option[String])] =
       selected.map { case (name, fn) =>
         // Collect the previous query's garbage OUTSIDE the timed window —
@@ -125,16 +122,6 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT), the diagnosable-from-artifacts copy.
     def ms(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    // JSON string escape for error messages (same contract as Verify's q).
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     def qsJson(key: String => String) = results.map { case (k, v, err) =>
       "\"" + key(k) + "\":" + (if (err.isEmpty) ms(v) else "null")
     }.mkString("{", ",", "}")
@@ -142,7 +129,8 @@ object Bench {
     // is the diagnostic; a full analysis-error tree would swamp the tail).
     // Normally {} so the trailing summary fields still fit the tail.
     def errsJson(key: String => String) = results.collect {
-      case (k, _, Some(e)) => "\"" + key(k) + "\":" + q(e.take(200))
+      case (k, _, Some(e)) =>
+        "\"" + key(k) + "\":" + MainEnv.jsonString(e.take(200))
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, v, None) => v }.sum
     val failures = results.count(_._3.nonEmpty)

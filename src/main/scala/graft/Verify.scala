@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import MainEnv.jsonString
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,8 +13,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // Dev loop: SPARK_GRAFT_VERIFY_ONLY=e02,e03 dumps just those queries
     // (same knob shape as Bench's SPARK_GRAFT_BENCH_ONLY).
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = MainEnv.only("SPARK_GRAFT_VERIFY_ONLY")
     // Failures are collected into errors.json (name → message) next to
     // oracle_sql.json: a query that throws writes no parquet, so without
     // the artifact the driver's CORRECTNESS file silently OMITS it and
@@ -25,8 +25,7 @@ object Verify {
     // not the whole round's correctness gate. On timeout the query's job
     // group is cancelled (interruptOnCancel frees its executor threads)
     // and the failure lands in errors.json like any other.
-    val timeoutSec = sys.env.get("SPARK_GRAFT_VERIFY_TIMEOUT")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(300)
+    val timeoutSec = MainEnv.positiveInt("SPARK_GRAFT_VERIFY_TIMEOUT", 300)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -41,23 +40,12 @@ object Verify {
           errors(name) = msg
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Files.writeString(Paths.get(s"$outDir/errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    def json(kv: Iterable[(String, String)]) = kv
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      json(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/errors.json"), json(errors))
     spark.stop()
   }
 }

@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{TextExprs, TextFunctions}
+import graft.functions.{MinHashExprs, TextExprs, TextFunctions}
 
 /** Near-duplicate detection at scale — the three standard families, each
   * bucketed so candidate generation never goes all-pairs:
@@ -29,6 +30,19 @@ import graft.functions.{TextExprs, TextFunctions}
   * Docs too short to sign get a per-doc unique bucket (`coalesce` with
   * doc_id) instead of a shared null bucket — a null hot-key would send
   * every short doc to one task.
+  *
+  * Production/oracle twins. d15/d53 share one election
+  * ([[minhashLshRepresentatives]], the band family a parameter), but
+  * three pairs cannot merge into one operator:
+  *   - d12/d47 and d11/d51 differ in which pairs survive, not only in
+  *     the hash. d12 and d11 keep a pair only in the FIRST band where its
+  *     signatures collide, so a capped first bucket drops the pair. d47
+  *     and d51 keep a pair if it collides in ANY bucket under the cap
+  *     (a distinct over the pair table).
+  *   - d10/d50 (and so d11/d51): the oracle needs an md5-derived
+  *     signature emitted as a bit string, which xxhash64 does not give —
+  *     DuckDB has no xxhash64, and a 64-bit unsigned word has no portable
+  *     integer form in both engines.
   */
 object NearDup {
 
@@ -180,46 +194,158 @@ object NearDup {
       .filter(col("jaccard_dist") <= maxDistance)
   }
 
+  /** An LSH band family: how a doc's token list becomes one minhash
+    * signature per band table. Two families, because two kinds of caller
+    * need different hashes:
+    *   - [[Bands.Xxhash64]] — 8 tables of xxhash64 minhash over the
+    *     hashed token-3-gram shingles (MinHashExprs.minhashSigs): the
+    *     production family (d15); DuckDB cannot replay it.
+    *   - [[Bands.Md5Grams]] — 4 tables, table t's signature the min of
+    *     md5('t:' || gram) over the word-3-grams
+    *     (MinHashExprs.bandMd5Sigs): DuckDB replays it exactly, so every
+    *     query built on it is oracle-checked (d47/d52/d53/d66/d72/d77/d91).
+    * `sigs` is NULL for a doc too short to sign (no 3-gram). */
+  sealed abstract class Bands(val tables: Int) {
+    def sigs(toks: Column): Column
+  }
+  object Bands {
+    case object Xxhash64 extends Bands(8) {
+      def sigs(toks: Column): Column = MinHashExprs.minhashSigs(toks, tables)
+    }
+    case object Md5Grams extends Bands(4) {
+      def sigs(toks: Column): Column = ofGrams(TextExprs.wordNgrams(toks, 3))
+      /** The signatures of an already-built word-3-gram list. */
+      def ofGrams(grams: Column): Column = MinHashExprs.bandMd5Sigs(grams, tables)
+    }
+  }
+
+  /** (id [, extra...], t, mh) band rows: one per (doc, table), t the
+    * table index and mh its signature. A NULL signature array emits no
+    * rows — docs too short to sign never reach a bucket. `sigs` must be
+    * the signature EXPRESSION, never a column alias of it: over an
+    * attribute input, InferFiltersFromGenerate adds an
+    * `isnotnull(sigs) AND size(sigs) > 0` filter that pushdown then
+    * rewrites with the whole signature chain substituted, computing every
+    * signature twice per row. */
+  private def bandRows(frame: DataFrame, sigs: Column,
+      idCol: String = "doc_id", extra: Seq[Column] = Nil): DataFrame =
+    frame.select((col(idCol) +: extra :+
+      posexplode(sigs).as(Seq("t", "mh"))): _*)
+
+  /** (doc_id [, extra...], t, mh) band rows of the Md5Grams family over a
+    * prebuilt gram frame (a `sh` word-3-gram column) — ONE definition for
+    * d47/d52 (via [[md5BandedPairs]]) and d72 (best-rep); a drifted copy
+    * of the salt separator, table count or empty-guard would silently
+    * break the pinned equivalence with the d53 election. The native
+    * bandMd5Sigs pass replaced an interpreted T-sweep lambda form (byte
+    * parity pinned by NearDupSpec). */
+  def md5Banded(withSh: DataFrame, extra: Column*): DataFrame =
+    bandRows(withSh, Bands.Md5Grams.ofGrams(col("sh")), extra = extra)
+
+  /** md5-banded near-dup pairs with an exact Jaccard verify — ONE
+    * lineage for d47 (the pairs) and d52 (its capstone edges). `docs` has
+    * (doc_id, toks). Returns (a_id, b_id, jaccard), a_id < b_id, every
+    * pair colliding in ANY (t, mh) bucket of at most `maxBucket` docs and
+    * with jaccard >= 0.5.
+    *
+    * Shuffle shape: buckets carry ONLY doc ids — the (t, mh) exchange
+    * moves T ~50-byte rows per doc instead of T copies of the full
+    * string-shingle array — and pairs seen in several tables collapse in
+    * a distinct over the bounded pair table. The verify then joins the
+    * 8-byte HASHED shingle sets (shingleHashes; hashed-set Jaccard ==
+    * string-set Jaccard up to 2^-64 collisions, so the DuckDB oracle
+    * keeps the string sets and still hash-matches) back onto that table.
+    * No forced broadcast on the pair side: bounded-per-bucket is not
+    * bounded-in-total at 100 TB — AQE picks broadcast when the pair table
+    * is actually small. */
+  def md5BandedPairs(docs: DataFrame, maxBucket: Int): DataFrame = {
+    val banded = md5Banded(
+      docs.select(col("doc_id"), TextExprs.wordNgrams(col("toks"), 3).as("sh")))
+    val grouped = cappedBuckets(
+      banded.select(col("t"), col("mh"), col("doc_id")),
+      Seq("t", "mh"), col("doc_id"), col("doc_id"), maxBucket)
+    val pairs = pairsWithinBuckets(grouped)
+      .select(col("a").as("a_id"), col("b").as("b_id"))
+      .distinct()
+    val hashed = docs.select(col("doc_id"),
+      MinHashExprs.shingleHashes(col("toks")).as("hs"))
+    pairs
+      .join(hashed.select(col("doc_id").as("a_id"), col("hs").as("a_hs")),
+        Seq("a_id"))
+      .join(hashed.select(col("doc_id").as("b_id"), col("hs").as("b_hs")),
+        Seq("b_id"))
+      .select(col("a_id"), col("b_id"),
+        MinHashExprs.jaccardSorted(col("a_hs"), col("b_hs")).as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+  }
+
+  /** Single-band candidate pairs with the hashed-shingle Jaccard — ONE
+    * lineage for d09/d27 (TextQueries.candidatePairs), d31, d38 and d100.
+    * `signed` has (doc_id, toks), the bucket key `bucket` and the
+    * `payload` columns; returns (a, b, jaccard), where a and b are the two
+    * docs' structs (doc_id, hs, payload...) with a.doc_id < b.doc_id.
+    *
+    * Docs whose bucket key is NULL (unsignable) get a unique per-doc
+    * `solo:` bucket via `coalesce` instead of a filter: size-1 buckets
+    * produce no pairs (identical output), there is no NULL hot-key
+    * straggler at 100 TB, and a `filter(bucket.isNotNull)` would be pushed
+    * down with the signature chain substituted into it (the d27 lesson:
+    * 9.3 s of 13.2 s at sf0.1). The verify payload is the HASHED shingle
+    * set (shingleHashes): 8-byte longs shuffle instead of ~30-byte
+    * trigram strings. Buckets over `maxBucket` docs are dropped whole
+    * ([[cappedBuckets]]). */
+  def singleBandPairs(signed: DataFrame, bucket: Column, maxBucket: Int,
+      payload: String*): DataFrame = {
+    val fields = (Seq(col("doc_id"),
+      MinHashExprs.shingleHashes(col("toks")).as("hs")) ++ payload.map(col))
+    val grouped = cappedBuckets(
+      signed.select((fields :+
+        coalesce(bucket, concat(lit("solo:"), col("doc_id"))).as("bucket")): _*),
+      Seq("bucket"), struct((Seq("doc_id", "hs") ++ payload).map(col): _*),
+      col("doc_id"), maxBucket)
+    pairsWithinBuckets(grouped)
+      .withColumn("jaccard",
+        MinHashExprs.jaccardSorted(col("a.hs"), col("b.hs")))
+  }
+
   /** Near-dup CLUSTERING (the 100 TB dedup shape): every doc maps to a
     * representative — the minimum doc id sharing any LSH band bucket with
     * it (itself if nothing collides; unsignable short docs are their own
-    * representative). Output (doc_id, rep_id), one row per input row.
+    * representative). ONE election for both band families: d15
+    * (Xxhash64, production) and d53/d66/d77/d91 (Md5Grams, oracle-checked).
+    *
+    * Output: `onto` (default: the docs' ids) with `rep_id` appended, one
+    * row per `onto` row — callers that need more per-doc columns pass a
+    * narrow frame of their own instead of carrying them through the
+    * bands.
     *
     * This is the scale-safe alternative to emitting candidate PAIRS: a
     * duplicate group of size g produces g² pairs but only g cluster rows —
     * measured on an 8×-replicated corpus, the pair form degrades
     * super-linearly (1.4 s → 48 s for 8× rows at sf0.1) while this form
     * stays linear. Training-data dedup (keep one per cluster:
-    * `filter(doc_id = rep_id)`) never needs the pairs.
+    * `filter(doc_id = rep_id)`) never needs the pairs. UNCAPPED: the
+    * bucket window-min folds a mega-bucket in constant window state.
     *
     * One-pass approximation of connected components: transitive chains
     * (A~B~C without A~C sharing a bucket) may land in different clusters;
     * near-exact duplicates share all/most buckets, so real dup groups
     * collapse correctly. Iterate the mapping if full transitivity is
     * required. */
-  def minhashLshRepresentatives(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", numTables: Int = 8): DataFrame = {
-    import graft.functions.MinHashExprs
-    import org.apache.spark.sql.expressions.Window
-    val sigs = docs
-      .withColumn("toks", TextFunctions.tokens(col(textCol)))
-      .select(col(idCol),
-        MinHashExprs.minhashSigs(col("toks"), numTables).as("sigs"))
-    // Short docs (null sigs) emit no bucket rows via a null-guard INSIDE
-    // the generator — explode(null) produces zero rows. A
-    // filter(sigs.isNotNull) here would be pushed below the select with
-    // the whole sig chain substituted into the condition, evaluating it
-    // twice per row (the d27/round-11 pushdown trap, in miniature).
-    val banded = sigs.select(col(idCol), explode(when(col("sigs").isNotNull,
-      expr(s"transform(sequence(0, ${numTables - 1}), t -> struct(t AS t, sigs[t] AS mh))")))
-      .as("bk"))
-    val bucketMin = banded.withColumn("bucket_rep",
-      min(col(idCol)).over(Window.partitionBy(col("bk.t"), col("bk.mh"))))
-    val reps = bucketMin.groupBy(col(idCol))
+  def minhashLshRepresentatives(docs: DataFrame,
+      bands: Bands = Bands.Xxhash64, onto: Option[DataFrame] = None,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val banded = bandRows(docs,
+      bands.sigs(TextFunctions.tokens(col(textCol))), idCol)
+    val reps = banded
+      .withColumn("bucket_rep",
+        min(col(idCol)).over(Window.partitionBy(col("t"), col("mh"))))
+      .groupBy(col(idCol))
       .agg(min(col("bucket_rep")).as("rep_id"))
     // short docs (no signature) are their own representative
-    docs.select(col(idCol)).join(reps, Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("rep_id"), col(idCol)).as("rep_id"))
+    onto.getOrElse(docs.select(col(idCol)))
+      .join(reps, Seq(idCol), "left")
+      .withColumn("rep_id", coalesce(col("rep_id"), col(idCol)))
   }
 
   /** SimHash-64 of a whitespace-tokenized string column — a native codegen

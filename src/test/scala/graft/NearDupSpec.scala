@@ -10,6 +10,9 @@ class NearDupSpec extends SparkSpec {
 
   lazy val docs = Tables.documents(spark, sfDir).cache()
 
+  /** Both band families of the representative election. */
+  private val bandFamilies = Seq(NearDup.Bands.Xxhash64, NearDup.Bands.Md5Grams)
+
   test("minMd5Shingle matches the array_min(transform(md5)) SQL formulation") {
     // The native expression replaced the interpreted HOF chain in
     // TextQueries.minhashed (d08/d09/d27's oracle-pinned bucket key); the
@@ -185,10 +188,13 @@ class NearDupSpec extends SparkSpec {
       .select("a_id", "b_id").as[(Long, Long)].collect()
     assert(pairs.length == 45, s"expected C(10,2)=45 pairs, got ${pairs.length}")
     assert(pairs.forall { case (a, b) => a >= 1000L && b >= 1000L && a < b })
-    // the linear-output clustering form handles the giant cluster instead
-    val reps = NearDup.minhashLshRepresentatives(df)
-      .as[(Long, Long)].collect().toMap
-    assert((0L until 200L).forall(reps(_) == 0L))
+    // the linear-output clustering form handles the giant cluster instead,
+    // under either band family (the md5 one is d53/d66/d77/d91's)
+    bandFamilies.foreach { bands => withClue(s"$bands: ") {
+      val reps = NearDup.minhashLshRepresentatives(df, bands)
+        .as[(Long, Long)].collect().toMap
+      assert((0L until 200L).forall(reps(_) == 0L))
+    } }
   }
 
   test("minhashLshRepresentatives: replicas collapse, one row per doc, short docs self-rep") {
@@ -199,22 +205,26 @@ class NearDupSpec extends SparkSpec {
       (20L, "totally different content nothing shared whatsoever here"),
       (30L, "too short") // < 3 tokens: unsignable
     ).toDF("doc_id", "text")
-    val reps = NearDup.minhashLshRepresentatives(df)
-      .as[(Long, Long)].collect().toMap
-    assert(reps.size == 5) // one row per input row — linear, never pairs
-    assert(reps(10L) == 10L && reps(11L) == 10L && reps(12L) == 10L)
-    assert(reps(20L) == 20L)
-    assert(reps(30L) == 30L)
-    // dedup = keep rep rows only
-    assert(reps.count { case (id, rep) => id == rep } == 3)
+    bandFamilies.foreach { bands => withClue(s"$bands: ") {
+      val reps = NearDup.minhashLshRepresentatives(df, bands)
+        .as[(Long, Long)].collect().toMap
+      assert(reps.size == 5) // one row per input row — linear, never pairs
+      assert(reps(10L) == 10L && reps(11L) == 10L && reps(12L) == 10L)
+      assert(reps(20L) == 20L)
+      assert(reps(30L) == 30L)
+      // dedup = keep rep rows only
+      assert(reps.count { case (id, rep) => id == rep } == 3)
+    } }
   }
 
   test("minhashLshRepresentatives is partitioning-invariant") {
     val base = docs.limit(50)
-    def run(parts: Int) = NearDup
-      .minhashLshRepresentatives(base.repartition(parts))
-      .as[(Long, Long)].collect().toSet
-    assert(run(1) == run(7))
+    bandFamilies.foreach { bands => withClue(s"$bands: ") {
+      def run(parts: Int) = NearDup
+        .minhashLshRepresentatives(base.repartition(parts), bands)
+        .as[(Long, Long)].collect().toSet
+      assert(run(1) == run(7))
+    } }
   }
 
   test("nearestCentroidCos / pqEncodeCodes match the literal " +

@@ -5,6 +5,10 @@ Usage: oracle_check.py <sfDir> <verifyOutDir>
 Reads each <out>/<name>/ parquet dir written by graft.Verify, runs the
 matching SQL from oracle_sql.json in DuckDB (tables registered as views on
 the sf dir), sorts columns by name and rows by value, and diffs.
+
+A query that failed in Verify (listed in errors.json; it writes no output
+dir) counts as a failure. Exits 1 when any query fails, so a scripted
+verify can gate on the exit code.
 """
 import sys, json, glob, os
 import duckdb
@@ -16,9 +20,14 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem","ev
     con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
 
 oracle = json.load(open(os.path.join(outdir, "oracle_sql.json")))
-names = sorted([d for d in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, d))])
+errors_path = os.path.join(outdir, "errors.json")
+errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
+names = sorted(set(errors) |
+               {d for d in os.listdir(outdir) if os.path.isdir(os.path.join(outdir, d))})
 fails = 0
 for name in names:
+    if name in errors:
+        print(f"{name}: VERIFY ERROR: {errors[name][:200]}"); fails += 1; continue
     files = glob.glob(os.path.join(outdir, name, "*.parquet"))
     if not files:
         print(f"{name}: NO ENGINE OUTPUT"); fails += 1; continue
