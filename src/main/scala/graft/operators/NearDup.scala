@@ -17,7 +17,8 @@ import graft.functions.{MinHashExprs, TextExprs, TextFunctions}
   *     share a 16-bit band; verification = Hamming distance on candidates
   *
   * Candidate generation is a groupBy on the bucket key + within-bucket pair
-  * expansion ([[pairsWithinBuckets]]) rather than a bucket self-join: the
+  * expansion ([[pairsWithinBuckets]], two codegen'd generators shared by
+  * every pair family in the engine) rather than a bucket self-join: the
   * self-join form computes the signature pipeline once per side (Catalyst
   * does not reuse the exchange across differently-aliased sides) and — worse
   * — inlines the whole signature expression into the join's pushed-down
@@ -98,27 +99,30 @@ object NearDup {
           .otherwise(expr("cast(array() as array<string>)")))
       .drop("toks")
 
-  /** The in-bucket i<j pair expansion over a `docs` array<struct> column:
-    * one generator row per unordered pair, as struct(a, b). ONE definition
-    * for every bucketed pair family (md5-minhash, banded LSH, simhash) —
-    * the expansion's range arithmetic (sequence(0, -1) is a DESCENDING
-    * range, not empty, hence the size > 1 guard at every call site) lives
-    * in one place instead of drifting across copies. */
-  private val pairExpansion: Column = explode(expr(
-    """flatten(transform(sequence(0, size(docs)-2),
-      |  i -> transform(sequence(i+1, size(docs)-1),
-      |    j -> struct(docs[i] AS a, docs[j] AS b))))""".stripMargin))
-
-  /** All unordered (i<j) pairs within each group of `grouped`, where
-    * `grouped` has a `docs` column holding the group's sorted
-    * array<struct<...>>; emits one row per pair with columns `a`/`b` (the
-    * two structs). Groups of size 1 produce nothing. The expansion is a
-    * generator expression — no join, no second pass over the input. */
-  def pairsWithinBuckets(grouped: DataFrame): DataFrame =
+  /** All unordered (i<j) pairs within each `docs` array of `grouped`:
+    * one row per pair, (keys..., a, b) with `a` the element that comes
+    * first in the array — for the sorted arrays every caller builds,
+    * a < b. Arrays of size 0 or 1 (and NULL) produce nothing. ONE
+    * expansion for every in-bucket pair family (md5-minhash, banded LSH,
+    * simhash, winnowing, the embedding buckets, the source and brand
+    * co-occurrence sets).
+    *
+    * Two codegen'd generators, no lambda: `posexplode` gives each element
+    * `a` its position i, and `explode(slice(docs, i + 2, size - i - 1))`
+    * pairs it with the elements after it (slice is 1-based, so i + 2 is
+    * position i + 1; the last element's slice is empty). The former
+    * `flatten(transform(sequence(...), i -> transform(sequence(...), j ->
+    * struct(...))))` form is an interpreted higher-order function: a
+    * lambda dispatch per element, a `sequence` array per i and a
+    * `flatten` copy of every pair. `keys` are the caller's grouping
+    * columns carried onto each pair row. */
+  def pairsWithinBuckets(grouped: DataFrame, keys: String*): DataFrame = {
+    val k = keys.map(col)
     grouped
-      .filter(size(col("docs")) > 1)
-      .select(pairExpansion.as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .select((k :+ col("docs") :+ posexplode(col("docs")).as(Seq("__i", "a"))): _*)
+      .select((k :+ col("a") :+ explode(
+        expr("slice(docs, __i + 2, size(docs) - __i - 1)")).as("b")): _*)
+  }
 
   /** Banded MinHash near-dup pairs, natively: hashed 3-gram shingles →
     * `numTables` independent minhash values (one codegen'd expression, see
@@ -181,15 +185,14 @@ object NearDup {
       Seq("t", "mh"),
       struct(col(idCol).as("id"), col("hs"), col("sigs")),
       col(idCol), maxBucket)
-    grouped
-      .select(col("t"), pairExpansion.as("p"))
+    pairsWithinBuckets(grouped, "t")
       // first-collision dedup (guard t = 0: sequence(0, -1) would be the
       // DESCENDING range [0, -1], not empty)
-      .filter(expr("t = 0 OR NOT exists(sequence(0, t-1), i -> p.a.sigs[i] = p.b.sigs[i])"))
-      .select(col("p.a.id").as("a_id"), col("p.b.id").as("b_id"),
+      .filter(expr("t = 0 OR NOT exists(sequence(0, t-1), i -> a.sigs[i] = b.sigs[i])"))
+      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
         // hs is sorted-distinct (shingleHashes contract) → merge-scan
         // jaccard, no per-pair hash sets
-        (lit(1.0) - MinHashExprs.jaccardSorted(col("p.a.hs"), col("p.b.hs")))
+        (lit(1.0) - MinHashExprs.jaccardSorted(col("a.hs"), col("b.hs")))
           .as("jaccard_dist"))
       .filter(col("jaccard_dist") <= maxDistance)
   }
@@ -392,15 +395,14 @@ object NearDup {
       Seq("band", "v"),
       struct(col(idCol).as("id"), col("simhash")),
       col(idCol), maxBucket)
-    grouped
-      .select(col("band"), pairExpansion.as("p"))
+    pairsWithinBuckets(grouped, "band")
       // first-collision dedup (guard band = 0: sequence(0, -1) would be
       // the DESCENDING range [0, -1], not empty)
       .filter(expr("""band = 0 OR NOT exists(sequence(0, band-1),
-        |  i -> (shiftrightunsigned(p.a.simhash, i*16) & 65535)
-        |     = (shiftrightunsigned(p.b.simhash, i*16) & 65535))""".stripMargin))
-      .select(col("p.a.id").as("a_id"), col("p.b.id").as("b_id"),
-        bit_count(col("p.a.simhash").bitwiseXOR(col("p.b.simhash"))).cast("bigint").as("hamming"))
+        |  i -> (shiftrightunsigned(a.simhash, i*16) & 65535)
+        |     = (shiftrightunsigned(b.simhash, i*16) & 65535))""".stripMargin))
+      .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("bigint").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 }

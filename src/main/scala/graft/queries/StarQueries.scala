@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.GlobalRank
+import graft.operators.{GlobalRank, NearDup}
 import graft.queries.GraftQuery.{dec, dsum, dsumSql, floorDiv}
 import graft.sources.Tables
 
@@ -2253,13 +2253,9 @@ object StarQueries {
         val tot = baskets.agg(count(lit(1)).cast("bigint").as("n"))
         val marg = baskets.select(explode(col("bs")).as("p_brand"))
           .groupBy(col("p_brand")).agg(count(lit(1)).as("cnt"))
-        val pairs = baskets
-          .filter(size(col("bs")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(bs, (a, i) ->
-                 transform(slice(bs, i + 2, size(bs)),
-                   b -> struct(a AS ba, b AS bb))))""")).as("p"))
-          .groupBy(col("p.ba").as("brand_a"), col("p.bb").as("brand_b"))
+        val pairs = NearDup.pairsWithinBuckets(
+            baskets.select(col("bs").as("docs")))
+          .groupBy(col("a").as("brand_a"), col("b").as("brand_b"))
           .agg(count(lit(1)).as("n_ab"))
           .filter(col("n_ab") >= 3)
         pairs

@@ -2282,15 +2282,10 @@ object TextQueries {
           .select(col("source"), explode(col("chunks")).as("c"))
           .select(col("source"), md5(col("c")).as("ch"))
           .distinct()
-        chunks
-          .groupBy(col("ch"))
-          .agg(sort_array(collect_set(col("source"))).as("srcs"))
-          .filter(size(col("srcs")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(srcs, (a, i) ->
-                 transform(slice(srcs, i + 2, size(srcs)),
-                   b -> struct(a AS src_a, b AS src_b))))""")).as("p"))
-          .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
+        NearDup.pairsWithinBuckets(chunks
+            .groupBy(col("ch"))
+            .agg(sort_array(collect_set(col("source"))).as("docs")))
+          .groupBy(col("a").as("src_a"), col("b").as("src_b"))
           .agg(count(lit(1)).as("n_shared_chunks"))
       },
       Some(s"""WITH toks AS (SELECT doc_id, source, $sqlToks AS toks
@@ -2437,17 +2432,13 @@ object TextQueries {
                 md5(array_join(slice(sigs, i*$r + 1, $r), '|')) AS bh))"""))
               .as("bd"))
         }.reduce(_ union _)
-        val pairs = NearDup.cappedBuckets(
+        val buckets = NearDup.cappedBuckets(
           bands.select(col("cfg"), col("bd.bi").as("bi"),
             col("bd.bh").as("bh"), col("doc_id")),
           Seq("cfg", "bi", "bh"), col("doc_id"), col("doc_id"),
           lshMaxBucket)
-          .select(col("cfg"), explode(expr(
-            """flatten(transform(docs, (a, i) ->
-                 transform(slice(docs, i + 2, size(docs)),
-                   x -> struct(a AS a_id, x AS b_id))))""")).as("p"))
-          .select(col("cfg"), col("p.a_id").as("a_id"),
-            col("p.b_id").as("b_id"))
+        val pairs = NearDup.pairsWithinBuckets(buckets, "cfg")
+          .select(col("cfg"), col("a").as("a_id"), col("b").as("b_id"))
           .distinct()
         pairs
           .join(sigs.select(col("doc_id").as("a_id"),
@@ -2767,13 +2758,9 @@ object TextQueries {
             .agg(sort_array(collect_set(col("source"))).as("srcs")))
         val perSrc = srcSets.select(explode(col("srcs")).as("source"))
           .groupBy(col("source")).agg(count(lit(1)).as("n"))
-        val pairs = srcSets
-          .filter(size(col("srcs")) >= 2)
-          .select(explode(expr(
-            """flatten(transform(srcs, (a, i) ->
-                 transform(slice(srcs, i + 2, size(srcs)),
-                   b -> struct(a AS src_a, b AS src_b))))""")).as("p"))
-          .groupBy(col("p.src_a").as("src_a"), col("p.src_b").as("src_b"))
+        val pairs = NearDup.pairsWithinBuckets(
+            srcSets.select(col("srcs").as("docs")))
+          .groupBy(col("a").as("src_a"), col("b").as("src_b"))
           .agg(count(lit(1)).as("n_shared"))
         pairs
           .join(broadcast(perSrc.select(col("source").as("src_a"),
@@ -4150,48 +4137,21 @@ object TextQueries {
     // padded markup). Per doc: bigram count, distinct bigrams, entropy
     // (nats), and exp(H) as the effective alphabet size.
     //
-    // Scale shape: the bigram explode is chars-linear via ONE char
-    // split per row (zip_with over two slices — never an index lambda
-    // re-evaluating the array per element, the d27/d52 pushdown trap);
-    // the count fold is map-side on (doc, bigram); the entropy fold
-    // rides one doc_id exchange. The d43 envelope at char grain.
+    // Scale shape: one codegen'd expression per row
+    // (TextExprs.CharBigramStats holds the doc's bigram counts in a
+    // per-row map) — one scan, zero exchanges, no join-back. The former
+    // explode → (doc, bigram) shuffle → two-level aggregation spent most
+    // of its time in one single-task stage; it is kept test-side as the
+    // reference the kernel is compared against (Round19OpsSpec).
     //
     // Exactness: d43's template — per-bigram ln rounds at 6 dp (libm
     // absorb) and weights as exact decimal c·term sums; the final
     // divide/exp run on identical doubles (exp matches empirically,
-    // the d67 precedent).
+    // the d67 precedent). The kernel replicates that round/cast pipeline
+    // verbatim (BigDecimal), so the DuckDB SQL below checks it directly.
     GraftQuery(
       "d86_char_bigram_entropy",
-      (s, d) => {
-        val bg = Tables.documents(s, d)
-          .withColumn("cs", expr("filter(split(text, ''), x -> x <> '')"))
-          .filter(size(col("cs")) >= 2)
-          .select(col("doc_id"), explode(expr(
-            """zip_with(slice(cs, 1, size(cs) - 1),
-                 slice(cs, 2, size(cs) - 1), (x, y) -> concat(x, y))"""))
-            .as("bg"))
-        val wd = Window.partitionBy(col("doc_id"))
-        val perDoc = bg.groupBy(col("doc_id"), col("bg"))
-          .agg(count(lit(1)).as("c"))
-          .withColumn("n", sum(col("c")).over(wd))
-          .withColumn("k", count(lit(1)).over(wd))
-          .select(col("doc_id"), col("n"), col("k"),
-            (col("c") * round(log(col("c").cast("double")
-              / col("n").cast("double")), 6).cast("decimal(18,6)"))
-              .as("w"))
-          .groupBy(col("doc_id"))
-          .agg((-(sum(col("w")).cast("double"))
-            / first(col("n")).cast("double")).as("h"),
-            first(col("n")).as("n_bigrams"),
-            first(col("k")).as("n_distinct"))
-        Tables.documents(s, d).select(col("doc_id"))
-          .join(perDoc, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-            coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
-            round(col("h"), 6).as("entropy"),
-            round(exp(col("h")), 6).as("eff_alphabet"))
-      },
+      charBigramEntropy,
       Some("""WITH cs AS (SELECT doc_id,
             list_filter(string_split(text, ''), x -> x <> '') AS c
           FROM documents),
@@ -4341,16 +4301,6 @@ object TextQueries {
             AS BIGINT) AS max_abs_diff
         FROM documents GROUP BY 1""")),
 
-    // ---- char-bigram entropy, NATIVE single-pass production path ----------
-    // d86's measurement without d86's plan: the explode → shuffle →
-    // two-level aggregation becomes ONE codegen'd expression holding a
-    // per-row bigram map (TextExprs.CharBigramStats) — zero exchanges,
-    // the d50/d10 native-vs-pinned pattern. Rows-only by design (a
-    // per-row hash-map fold has no single-statement SQL analog);
-    // semantics are pinned by frame EQUALITY with the oracle-gated d86
-    // (Round19OpsSpec, both exceptAll directions empty — the native
-    // BigDecimal pipeline replicates Spark's round/cast ops verbatim)
-    // and GOLDEN.json regression-pins the executable.
     // ---- verified-pair Jaccard histogram (threshold calibration) -----------
     // The distribution BEHIND every similarity threshold the dedup
     // stack applies (d14's gate, d09's 0.5 cut, d59's band sweep): per
@@ -4457,19 +4407,10 @@ object TextQueries {
             AS dup_doc_share
         FROM t""")),
 
-    GraftQuery(
-      "d89_bigram_entropy_native",
-      (s, d) =>
-        Tables.documents(s, d)
-          .select(col("doc_id"),
-            graft.functions.TextExprs.charBigramStats(col("text"))
-              .as("st"))
-          .select(col("doc_id"),
-            coalesce(col("st.n_bigrams"), lit(0L)).as("n_bigrams"),
-            coalesce(col("st.n_distinct"), lit(0L)).as("n_distinct"),
-            col("st.entropy").as("entropy"),
-            col("st.eff_alphabet").as("eff_alphabet")),
-      None),
+    // ---- char-bigram entropy, rows-only registration ----------------------
+    // d86's own function under the name GOLDEN.json pins; no oracle SQL
+    // of its own (d86 carries it).
+    GraftQuery("d89_bigram_entropy_native", charBigramEntropy, None),
 
     // ---- BPE corpus ENCODER (the apply side of d80's training) ------------
     // d80 trains the merge table; THIS is the corpus-scale pass every
@@ -5736,6 +5677,20 @@ object TextQueries {
             * (1.0 - CASE WHEN length(text) = 0 THEN 0.0
                 ELSE CAST(len(regexp_extract_all(text, '[A-Z]')) AS DOUBLE)
                   / CAST(length(text) AS DOUBLE) END))"""
+
+  /** d86/d89: per-doc char-bigram count, distinct count, entropy (nats)
+    * and exp(entropy), from the native CharBigramStats kernel. A doc
+    * with fewer than 2 chars reads 0 / 0 / NULL / NULL. */
+  private def charBigramEntropy(s: org.apache.spark.sql.SparkSession,
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.documents(s, d)
+      .select(col("doc_id"),
+        graft.functions.TextExprs.charBigramStats(col("text")).as("st"))
+      .select(col("doc_id"),
+        coalesce(col("st.n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("st.n_distinct"), lit(0L)).as("n_distinct"),
+        col("st.entropy").as("entropy"),
+        col("st.eff_alphabet").as("eff_alphabet"))
 
   /** The d32 unigram-LM scoring lineage, shared with d70's bucketing:
     * train the top-1000-vocab unigram LM over the corpus, score each doc

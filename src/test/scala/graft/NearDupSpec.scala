@@ -130,6 +130,41 @@ class NearDupSpec extends SparkSpec {
     assert(java.lang.Long.bitCount(a ^ b) <= 16)
   }
 
+  test("pairsWithinBuckets equals the nested-lambda expansion: exact " +
+      "(key, a, b) multiset, a before b in array order") {
+    // The historical form the two-generator expansion replaced; kept
+    // here as the reference (sequence(0, -1) descends, hence its guard).
+    def lambdaPairs(grouped: org.apache.spark.sql.DataFrame) =
+      grouped.filter(size(col("docs")) > 1)
+        .select(col("k"), explode(expr(
+          """flatten(transform(sequence(0, size(docs)-2),
+            |  i -> transform(sequence(i+1, size(docs)-1),
+            |    j -> struct(docs[i] AS a, docs[j] AS b))))""".stripMargin))
+          .as("p"))
+        .select(col("k"), col("p.a").as("a"), col("p.b").as("b"))
+    // distinct elements in scrambled (unsorted) order, so "a before b"
+    // tests array order, not value order; plus a NULL array
+    val sizes = Seq(0, 1, 2, 3, 64, 65)
+    val longs = (sizes.zipWithIndex.map { case (n, k) =>
+      (k.toLong, Option((0 until n).map(i => ((i * 37 + k) % 101).toLong)))
+    } :+ ((sizes.size.toLong, Option.empty[Seq[Long]]))).toDF("k", "docs")
+    val structs = longs.withColumn("docs", expr(
+      "transform(docs, x -> named_struct('id', x, 'tag', concat('t', x)))"))
+    val expected = sizes.map(n => n * (n - 1) / 2).sum.toLong
+    for ((payload, grouped) <- Seq("long" -> longs, "struct" -> structs)) {
+      val got = NearDup.pairsWithinBuckets(grouped, "k")
+      assert(got.columns.toSeq == Seq("k", "a", "b"), payload)
+      val ref = lambdaPairs(grouped)
+      assert(ref.count() == expected && got.count() == expected, payload)
+      assert(got.exceptAll(ref).isEmpty && ref.exceptAll(got).isEmpty,
+        s"$payload pair multisets differ")
+      val misordered = got.join(grouped, "k").filter(
+        array_position(col("docs"), col("a")) >=
+          array_position(col("docs"), col("b")))
+      assert(misordered.isEmpty, s"$payload: b precedes a")
+    }
+  }
+
   test("simhashPairs finds the exact-dup pair, a_id < b_id, deduped bands") {
     val df = Seq(
       (1L, "one two three four five six seven eight nine ten"),

@@ -807,7 +807,7 @@ class PlanShapeSpec extends SparkSpec {
     "q67_abc_classes" -> 1, "q68_referential_audit" -> 3,
     "q69_weekend_effect_u" -> 2,
     "d84_bm25_topk" -> 5, "d85_readability" -> 0,
-    "d86_char_bigram_entropy" -> 2, "d87_max_token_run" -> 1,
+    "d86_char_bigram_entropy" -> 0, "d87_max_token_run" -> 1,
     "d88_metadata_consistency" -> 1, "d89_bigram_entropy_native" -> 0,
     "d90_pair_jaccard_histogram" -> 3, "d91_dup_cluster_sizes" -> 5,
     "e35_ivf_cell_quality" -> 3, "e36_range_search" -> 1,
@@ -844,6 +844,25 @@ class PlanShapeSpec extends SparkSpec {
     // distinct, the (n, source) fold, and the totals fold — the bench
     // set and the 3-row n grid broadcast.
     "d104_decontam_sweep" -> 4)
+
+  test("text kernels stay codegen'd: d86 is one Generate-free pass; no " +
+      "pair family plans a lambda pair expansion") {
+    // d86 runs the CharBigramStats kernel per row — no bigram explode
+    // (its zero-exchange budget is in the table below).
+    val d86 = plan("d86_char_bigram_entropy")
+    assert(!d86.contains("Generate"),
+      s"d86 must not explode its bigrams:\n$d86")
+    // Every in-bucket pair expansion goes through
+    // NearDup.pairsWithinBuckets (posexplode + explode(slice)), never the
+    // interpreted flatten(transform(...)) nested lambda.
+    val lambda = Seq("d11_simhash_pairs", "d12_minhash_lsh_pairs",
+      "d17_winnow_shared_pairs", "d39_prefix_jaccard_join",
+      "d47_banded_lsh_md5", "d51_simhash_md5_pairs", "d57_source_overlap",
+      "d59_lsh_band_sweep", "d63_source_dup_matrix", "q51_copurchase_lift")
+      .filter(name => plan(name).contains("flatten(transform("))
+    assert(lambda.isEmpty,
+      s"lambda pair expansion in: ${lambda.mkString(", ")}")
+  }
 
   test("round-19/20 queries hold their exchange budgets") {
     val over = exchangeBudgets.flatMap { case (name, budget) =>

@@ -2,8 +2,9 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
@@ -488,30 +489,106 @@ class Round19OpsSpec extends SparkSpec {
     assert(ratios.size == 1)
   }
 
-  test("d89 native bigram entropy equals the oracle-pinned d86 frame " +
-      "bit-for-bit on the fixture corpus") {
-    // The d50/d10 native-vs-pinned contract: the single-pass expression
-    // must reproduce the explode-form's EXACT doubles (same BigDecimal
-    // round/cast pipeline), not approximately.
-    val d86 = query("d86_char_bigram_entropy").run(spark, sfDir)
-    val d89 = query("d89_bigram_entropy_native").run(spark, sfDir)
-    assert(d86.exceptAll(d89).isEmpty && d89.exceptAll(d86).isEmpty,
-      "native and explode-form bigram entropy frames diverge")
-    // and on the degenerate shapes the fixture lacks — including an
-    // ASTRAL (non-BMP) char, where split('') yields code points and a
-    // UTF-16-unit iteration would cut the surrogate pair in half
-    val dir = docsDir(Seq((1L, "aaaa", "en", "s"), (2L, "", "en", "s"),
+  /** d86's former explode form, verbatim: one row per char bigram →
+    * (doc, bigram) counts → per-doc window totals → entropy fold, joined
+    * back onto every doc. The reference the CharBigramStats kernel (d86's
+    * and d89's production path) must reproduce bit-for-bit. */
+  private def explodeFormBigramEntropy(dir: String): DataFrame = {
+    val bg = Tables.documents(spark, dir)
+      .withColumn("cs", expr("filter(split(text, ''), x -> x <> '')"))
+      .filter(size(col("cs")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        """zip_with(slice(cs, 1, size(cs) - 1),
+             slice(cs, 2, size(cs) - 1), (x, y) -> concat(x, y))"""))
+        .as("bg"))
+    val wd = Window.partitionBy(col("doc_id"))
+    val perDoc = bg.groupBy(col("doc_id"), col("bg"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("n", sum(col("c")).over(wd))
+      .withColumn("k", count(lit(1)).over(wd))
+      .select(col("doc_id"), col("n"), col("k"),
+        (col("c") * round(log(col("c").cast("double")
+          / col("n").cast("double")), 6).cast("decimal(18,6)"))
+          .as("w"))
+      .groupBy(col("doc_id"))
+      .agg((-(sum(col("w")).cast("double"))
+        / first(col("n")).cast("double")).as("h"),
+        first(col("n")).as("n_bigrams"),
+        first(col("k")).as("n_distinct"))
+    Tables.documents(spark, dir).select(col("doc_id"))
+      .join(perDoc, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
+        coalesce(col("n_distinct"), lit(0L)).as("n_distinct"),
+        round(col("h"), 6).as("entropy"),
+        round(exp(col("h")), 6).as("eff_alphabet"))
+  }
+
+  /** The degenerate shapes the fixture lacks — including an ASTRAL
+    * (non-BMP) char, where split('') yields code points and a UTF-16-unit
+    * iteration would cut the surrogate pair in half. */
+  private lazy val bigramEdgeDir: String =
+    docsDir(Seq((1L, "aaaa", "en", "s"), (2L, "", "en", "s"),
       (3L, null, "en", "s"), (4L, "xy", "en", "s"),
       (5L, "a𝄞b", "en", "s"), // a 𝄞 b: bigrams a𝄞, 𝄞b
-      (6L, "𝄞", "en", "s"))) // lone astral char: no bigram
-    val a = query("d86_char_bigram_entropy").run(spark, dir)
+      (6L, "𝄞", "en", "s"), // lone astral char: no bigram
+      (7L, "a", "en", "s")))
+
+  private def sameFrame(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
+
+  test("d89 native bigram entropy equals the oracle-pinned d86 frame " +
+      "bit-for-bit on the fixture corpus") {
+    // The kernel d86 and d89 both run must reproduce the explode form's
+    // EXACT doubles (same BigDecimal round/cast pipeline), not
+    // approximately.
+    val ref = explodeFormBigramEntropy(sfDir)
+    val d86 = query("d86_char_bigram_entropy").run(spark, sfDir)
+    val d89 = query("d89_bigram_entropy_native").run(spark, sfDir)
+    assert(sameFrame(d86, ref),
+      "kernel and explode-form bigram entropy frames diverge")
+    assert(sameFrame(d89, d86), "d89 and d86 frames diverge")
+    // and on the degenerate shapes the fixture lacks
+    val dir = bigramEdgeDir
+    val a = explodeFormBigramEntropy(dir)
     val b = query("d89_bigram_entropy_native").run(spark, dir)
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
+    assert(sameFrame(a, b))
+    assert(sameFrame(query("d86_char_bigram_entropy").run(spark, dir), b))
     val r5 = b.filter(col("doc_id") === 5L).collect().head
     assert(r5.getAs[Long]("n_bigrams") == 2L,
       "astral char must count as one code point")
     val r6 = b.filter(col("doc_id") === 6L).collect().head
     assert(r6.getAs[Long]("n_bigrams") == 0L)
+  }
+
+  test("CharBigramStats: interpreted eval and generated code both equal " +
+      "the explode-form reference (d86 with whole-stage codegen off)") {
+    // d86's oracle checks the kernel's generated code; this pins its
+    // interpreted `eval` too. With whole-stage codegen off the projection
+    // is built per expression: NO_CODEGEN takes InterpretedUnsafeProjection
+    // (CharBigramStats.eval), CODEGEN_ONLY the generated projection
+    // (doGenCode). The references are collected under the default
+    // settings first, so only d86 runs under each mode.
+    val dirs = Seq(sfDir, bigramEdgeDir)
+    val refs = dirs.map { dir =>
+      val ref = explodeFormBigramEntropy(dir)
+      spark.createDataFrame(ref.collect().toSeq.asJava, ref.schema)
+    }
+    val conf = spark.conf
+    val saved = Seq("spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode").map(k => k -> conf.getOption(k))
+    try {
+      conf.set("spark.sql.codegen.wholeStage", "false")
+      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY");
+           (dir, ref) <- dirs.zip(refs)) {
+        conf.set("spark.sql.codegen.factoryMode", mode)
+        val got = query("d86_char_bigram_entropy").run(spark, dir)
+        assert(sameFrame(got, ref), s"$mode on $dir diverges")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 
   test("q69 Mann-Whitney U: a separated ledger reaches the maximal U; " +

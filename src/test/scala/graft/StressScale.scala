@@ -298,8 +298,8 @@ object StressScale {
     "m16_resolution_audit" -> ("documents" -> "doc_id"),
     "m17_loudness_gain" -> ("documents" -> "doc_id"),
     // q65 folds onto the (month × priority) grid (the q58 activity
-    // shape); d86's char-bigram explode is chars-linear into map-side
-    // (doc, bigram) partials (the d43 envelope at char grain); e38's
+    // shape); d86 is one codegen'd per-row bigram fold (CharBigramStats),
+    // a zero-exchange chars-linear scan; e38's
     // cell sizes are an 8-row fold of the assignment scan; m18 rides
     // m11's bounded frame explode and one media_id exchange.
     "q65_priority_mix_drift" -> ("orders" -> "o_orderkey"),
@@ -321,9 +321,7 @@ object StressScale {
     "d87_max_token_run" -> ("documents" -> "doc_id"),
     "d88_metadata_consistency" -> ("documents" -> "doc_id"),
     "q68_referential_audit" -> ("orders" -> "o_orderkey"),
-    // d89 is d86 with the explode/shuffle replaced by one codegen'd
-    // per-row fold — a zero-exchange scan, expected ~linear CPU with a
-    // much smaller constant than d86's 0.93-exponent explode path.
+    // d89 runs d86's function (its GOLDEN-pinned rows-only name).
     "d89_bigram_entropy_native" -> ("documents" -> "doc_id"),
     // d90 rides d09's capped-bucket pair family (replicas duplicate
     // text → pair OUTPUT grows ~8² within caps, the d59/d61 rule) into
