@@ -1,7 +1,8 @@
 package graft
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
-  * prints one JSON line for the driver (BENCH_r{N}.json).
+  * prints two JSON lines for its consumer (BENCH_r{N}.json): the per-query
+  * timings, then a compact summary.
   *
   * Timing uses a full materialization through the noop sink — a `.count()`
   * would let Catalyst prune every column and bench a near-empty scan
@@ -110,54 +111,66 @@ object Bench {
       if (ok.nonEmpty) (name, ok.map(_._2).min, None: Option[String])
       else (name, 0.0, mine.last._3)
     }
-    // failed queries report null (not their time-to-failure) so the driver
-    // can't mistake a crash for a fast run; they're excluded from total.
-    // Times round to ms and the summary fields (errors/total/failures/sf)
-    // come AFTER the per-query map: the driver keeps only the LAST ~2000
-    // chars of stdout, so with 90+ queries a leading summary scrolls out of
-    // the captured tail while a trailing one always survives. With 94
-    // queries the map alone (~25 chars/entry) EXCEEDS 2000 chars, so the
-    // captured tail starts mid-map and is unparseable as a whole object —
-    // the full line is therefore also written to bench_full.json (cwd, or
+    val erroredRuns = passes.map(_.count(_._3.nonEmpty)).sum
+    // STDOUT: the per-query line with short keys, then the summary line.
+    // A consumer that keeps only the last ~2,000 chars of stdout still gets
+    // the summary line whole; at 236 queries the per-query line alone is
+    // longer than that. The full-name form goes to bench_full.json (cwd, or
     // SPARK_GRAFT_BENCH_OUT), the diagnosable-from-artifacts copy.
-    def ms(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def qsJson(key: String => String) = results.map { case (k, v, err) =>
-      "\"" + key(k) + "\":" + (if (err.isEmpty) ms(v) else "null")
-    }.mkString("{", ",", "}")
-    // Failure reasons ride along (truncated: exception class + message head
-    // is the diagnostic; a full analysis-error tree would swamp the tail).
-    // Normally {} so the trailing summary fields still fit the tail.
-    def errsJson(key: String => String) = results.collect {
-      case (k, _, Some(e)) =>
-        "\"" + key(k) + "\":" + MainEnv.jsonString(e.take(200))
-    }.mkString("{", ",", "}")
-    val total = results.collect { case (_, v, None) => v }.sum
-    val failures = results.count(_._3.nonEmpty)
-    // "keys" declares which key form the map uses, so a future prefix
-    // collision (which silently flips the stdout map back to full names)
-    // is visible to the consumer instead of a surprise format change.
-    def line(key: String => String, keyForm: String) =
-      s"""{"metric":"total","keys":"$keyForm","runs":$runs,"agg":"min","queries":${qsJson(key)},"unit":"sec","errors":${errsJson(key)},"failures":$failures,"value":${ms(total)},"sf":"$sfDir"}"""
-    // STDOUT gets the short-key form (q01, d45, …): the driver captures
-    // only the last ~2000 chars of stdout, and at 97 queries the
-    // full-name map alone exceeds that, truncating the captured JSON
-    // mid-map. Short prefixes are unique by construction (BenchKeySpec
-    // pins that at build time) and cut the line to ~1.3k chars so the
-    // whole object survives the tail. The full-name form goes to
-    // bench_full.json (cwd, or SPARK_GRAFT_BENCH_OUT) — the
-    // diagnosable-from-artifacts copy.
-    val shortOk = results.map(_._1.split("_").head).distinct.size == results.size
-    val shortKey: String => String =
-      if (shortOk) _.split("_").head
-      else identity // prefix collision: full names beat a silently-merged map
-    println(line(shortKey, if (shortOk) "short" else "full"))
+    val shortKey = shortKeys(results.map(_._1))
+    println(line(results, runs, sfDir, shortKey.getOrElse(identity[String] _),
+      if (shortKey.isDefined) "short" else "full"))
+    println(summaryLine(results, runs, erroredRuns, sfDir))
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outFile), line(identity, "full") + "\n")
+      java.nio.file.Paths.get(outFile), line(results, runs, sfDir, identity, "full") + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outFile: ${e.getMessage}")
     }
     spark.stop()
   }
+
+  /** One query's outcome: (name, min seconds over its successful passes,
+    * error when every pass failed). */
+  type Result = (String, Double, Option[String])
+
+  private def ms(v: Double): String = BigDecimal(v)
+    .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
+  private def total(results: Seq[Result]): Double =
+    results.collect { case (_, v, None) => v }.sum
+
+  /** The short-prefix key form (q01, d45, …) when prefixes are unique
+    * (BenchKeySpec pins that at build time); None on a collision, where
+    * full names beat a silently-merged map. */
+  def shortKeys(names: Seq[String]): Option[String => String] =
+    if (names.map(_.split("_").head).distinct.size == names.size)
+      Some(_.split("_").head)
+    else None
+
+  /** The full result line. Failed queries report null (not their
+    * time-to-failure) so a consumer can't mistake a crash for a fast run;
+    * they're excluded from the total. Failure reasons ride along, truncated
+    * (exception class + message head is the diagnostic). "keys" declares
+    * which key form the map uses, so a prefix collision (which flips the
+    * map back to full names) is visible to the consumer instead of a
+    * surprise format change. */
+  def line(results: Seq[Result], runs: Int, sfDir: String,
+      key: String => String, keyForm: String): String = {
+    val qs = results.map { case (k, v, err) =>
+      "\"" + key(k) + "\":" + (if (err.isEmpty) ms(v) else "null")
+    }.mkString("{", ",", "}")
+    val errs = results.collect {
+      case (k, _, Some(e)) => "\"" + key(k) + "\":" + MainEnv.jsonString(e.take(200))
+    }.mkString("{", ",", "}")
+    s"""{"metric":"total","keys":"$keyForm","runs":$runs,"agg":"min","queries":$qs,"unit":"sec","errors":$errs,"failures":${results.count(_._3.nonEmpty)},"value":${ms(total(results))},"sf":${MainEnv.jsonString(sfDir)}}"""
+  }
+
+  /** The last stdout line: the total, the failed queries, the failed query
+    * runs over all passes (`errors`, which a query that failed in only some
+    * passes also adds to), the passes and the corpus — a size independent
+    * of the registry, so it always fits a ~2,000-char stdout
+    * tail, which the per-query line above it outgrew at 236 queries. */
+  def summaryLine(results: Seq[Result], runs: Int, erroredRuns: Int, sfDir: String): String =
+    s"""{"metric":"total","unit":"sec","value":${ms(total(results))},"failures":${results.count(_._3.nonEmpty)},"errors":$erroredRuns,"queries":${results.size},"runs":$runs,"sf":${MainEnv.jsonString(sfDir)}}"""
 }

@@ -1,8 +1,13 @@
 package graft.sinks
 
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -67,14 +72,26 @@ object TweetSink {
   * before it (the partition-offset scheme of [[graft.operators.GlobalRank]],
   * here as DataFrame expressions so the write stays in codegen).
   *
-  * S8: the high-water mark lives in this instance. It is seeded once — 0
-  * when [[ensureTable]] has just created the table, else the table's
-  * max(tweet_id) read at the first append (which also covers a restart) —
-  * and advanced after each committed write; any failure drops it, so the
-  * next append re-reads the table. The sink therefore never scans its
-  * table per batch. One writing sink instance per table: re-reading the
-  * max before every write would not make concurrent writers safe either,
-  * since read-max-then-write is not atomic.
+  * S8: the high-water mark lives in this instance and is advanced after
+  * each committed write; any failure drops it. Beside the data, the table
+  * keeps one small record, `_graft_high_water` (the `_` prefix hides it
+  * from Spark's readers), holding the mark and the number of data files
+  * the table then has. [[ensureTable]] writes it with mark 0, and every
+  * non-empty write replaces it atomically (a temp file, then an atomic
+  * move) — one tiny local write per batch, no job, no listing, since the
+  * write adds a known number of files. An instance without a mark (its
+  * first append, or the first after a failure) lists the table directory
+  * by name, with no Spark job, and takes the record's mark when the
+  * record's file count equals the data files listed. A missing,
+  * unreadable or stale record — a crash between a write and its record,
+  * or files written outside the sink — falls back to a `max(tweet_id)`
+  * scan of the table, which rewrites the record. A restart therefore
+  * costs a names-only listing, not a scan that grows with the table.
+  * One writing sink instance per table: the record trusts that no one
+  * else both adds and removes files, and re-reading the max before every
+  * write would not make concurrent writers safe either, since
+  * read-max-then-write is not atomic. Delivery stays at-least-once: a
+  * batch replayed after a failure takes fresh ids.
   *
   * The batch is held by a lazy local checkpoint, not `persist`. A loaded
   * batch then runs three jobs: the transform's exchange (run while the
@@ -85,12 +102,15 @@ object TweetSink {
   * lands as one file. Both passes read the same stored blocks or fail — a
   * checkpoint is never recomputed, so the counts cannot drift from the
   * write. The blocks are executor-local: a lost executor fails the batch,
-  * and the S8 reset above makes the next append re-read the table. */
+  * and the S8 reset above makes the next append re-check the table. */
 final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSink {
+  import ParquetTweetSink._
+
   private val log = LoggerFactory.getLogger(getClass)
   private var resolved: Option[String] = None
-  /** Largest tweet_id in the table; None until seeded or after a failure. */
-  private var highWater: Option[Long] = None
+  /** The table's largest tweet_id and data-file count; None until seeded
+    * or after a failure. */
+  private var mark: Option[Mark] = None
 
   def tablePath: String = resolved.getOrElse(path)
 
@@ -103,16 +123,44 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
     // S5: materialize the declared schema as an empty parquet table.
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       TweetSink.schema).write.mode(SaveMode.ErrorIfExists).parquet(target)
-    highWater = Some(0L)
+    val dir = Paths.get(target)
+    val created = Mark(0L, dataFiles(dir))
+    mark = Some(created)
+    writeRecord(dir, created)
     log.info(s"created table tweet_data at $target")
     target
   }
 
-  private def tableMax(target: String): Long =
-    if (Files.exists(Paths.get(target)))
-      spark.read.parquet(target).agg(coalesce(max(col("tweet_id")), lit(0L)))
+  private def tableMax(dir: Path): Long =
+    if (Files.exists(dir))
+      spark.read.parquet(dir.toString).agg(coalesce(max(col("tweet_id")), lit(0L)))
         .head().getLong(0)
     else 0L
+
+  /** The mark of a table this instance holds none for: the record's when
+    * its file count matches the listing, else the table's max (recorded). */
+  private def seed(dir: Path): Mark = {
+    val files = dataFiles(dir)
+    readRecord(dir).filter(_.files == files).getOrElse {
+      val scanned = Mark(tableMax(dir), files)
+      if (Files.isDirectory(dir)) writeRecord(dir, scanned)
+      scanned
+    }
+  }
+
+  /** Replaces the record; the mark in memory stays right if this fails,
+    * and the record left behind no longer matches the table's files. */
+  private def writeRecord(dir: Path, m: Mark): Unit =
+    try {
+      val tmp = Files.createTempFile(dir, RecordName + ".", ".tmp")
+      try {
+        Files.write(tmp, m.render.getBytes(StandardCharsets.UTF_8))
+        Files.move(tmp, dir.resolve(RecordName), StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      } finally Files.deleteIfExists(tmp)
+    } catch {
+      case NonFatal(e) => log.warn(s"could not record the high-water mark in $dir: $e")
+    }
 
   /** One evaluation of `df`, held by a lazy local checkpoint: a per-partition
     * count, then the write. The count computes the batch and stores its
@@ -122,10 +170,12 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
   override def append(df: DataFrame): Unit = {
     import spark.implicits._
     val target = tablePath
+    val dir = Paths.get(target)
     var batch: DataFrame = null
     try {
-      val base = highWater.getOrElse(tableMax(target))
-      highWater = Some(base)
+      val seeded = mark.getOrElse(seed(dir))
+      mark = Some(seeded)
+      val base = seeded.highWater
       batch = df.localCheckpoint(eager = false)
       // (partition id, rows) for each non-empty partition, without a shuffle
       val counts = batch.select(spark_partition_id()).as[Int]
@@ -143,21 +193,63 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
             element_at(typedLit(starts.init.toArray), pid + 1) + indexInPartition + 1L)
           .select(TweetSink.schema.fieldNames.map(col).toIndexedSeq: _*)
           .write.mode(SaveMode.Append).parquet(target)
-        highWater = Some(base + total)
+        // Spark's writer leaves one file per non-empty partition, and
+        // partition 0's file even when it is empty (it carries the schema).
+        val written = counts.size + (if (counts.contains(0)) 0 else 1)
+        val next = Mark(base + total, seeded.files + written)
+        mark = Some(next)
+        writeRecord(dir, next)
         log.info(s"appended $total rows to tweet_data at $target")
       }
     } catch {
-      case e: Throwable => highWater = None; throw e
+      case e: Throwable => mark = None; throw e
     } finally Option(batch).foreach(_.queryExecution.logical.collectFirst {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false) // the checkpoint's blocks
     })
   }
 }
 
+object ParquetTweetSink {
+  /** The high-water record's file name under the table directory. */
+  val RecordName = "_graft_high_water"
+
+  /** A table's largest tweet_id and the number of data files it has. */
+  private[sinks] final case class Mark(highWater: Long, files: Long) {
+    def render: String = s"high_water=$highWater\ndata_files=$files\n"
+  }
+
+  private val RecordFormat = """high_water=(\d+)\ndata_files=(\d+)\n""".r
+
+  /** The record under `dir`; None when it is missing, unreadable or not a
+    * whole record (a truncated one lacks its final newline). */
+  private[sinks] def readRecord(dir: Path): Option[Mark] =
+    try new String(Files.readAllBytes(dir.resolve(RecordName)), StandardCharsets.UTF_8) match {
+      case RecordFormat(h, f) => for (hw <- h.toLongOption; n <- f.toLongOption) yield Mark(hw, n)
+      case _ => None
+    } catch { case NonFatal(_) => None }
+
+  /** Spark's file index skips names starting with `_` (unless they hold
+    * `=`, a partition directory) or `.`, and in-flight `._COPYING_` copies. */
+  private def hiddenFromReaders(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  /** Entries of `dir` that Spark's reader would take as data, by name
+    * alone (0 when there is no table yet). */
+  private[sinks] def dataFiles(dir: Path): Long =
+    if (!Files.isDirectory(dir)) 0L
+    else Using.resource(Files.list(dir))(_.iterator().asScala
+      .count(p => !hiddenFromReaders(p.getFileName.toString)).toLong)
+}
+
 /** JDBC formulation of the same contract (S5-S8) for environments that do
   * ship a driver (e.g. sqlite-jdbc, postgres). Not exercisable offline —
   * no JDBC driver jar is present — but the code path is the documented
-  * production shape: DDL pass-through + df.write.jdbc append per batch. */
+  * production shape: DDL pass-through + df.write.jdbc append per batch.
+  *
+  * Delivery is at-least-once: a batch replayed after a failure between its
+  * insert and the stream's commit is inserted again. The sink keeps no
+  * high-water record, since the database assigns the rowids itself. */
 final class JdbcTweetSink(spark: SparkSession, url: String,
     table: String = "tweet_data") extends TweetSink {
   private val log = LoggerFactory.getLogger(getClass)

@@ -148,4 +148,21 @@ class EmbeddingSkewSpec extends SparkSpec {
         s"$name: bucket self-join resurfaced:\n$p")
     }
   }
+
+  test("corpus sizing follows a rewrite in place: e05 over a rewritten " +
+      "embeddings table equals e05 over a fresh directory") {
+    val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val small = corpus.filter(col("vec_id") < 64L)
+    val large = corpus.filter(col("vec_id") < 600L)
+    assert(small.count() == 64L && large.count() > 400L,
+      "the fixture must size e05 at 8 cells, then at more")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val rewritten = asSfDir(small)
+    run("e05_ivf_topk", rewritten).collect() // sizes e05 at the 64-row corpus
+    large.write.mode("overwrite").parquet(s"$rewritten/embeddings.parquet")
+    val fresh = asSfDir(large)
+    assert(rows(run("e05_ivf_topk", rewritten)) == rows(run("e05_ivf_topk", fresh)),
+      "e05 kept the cell count of the table it saw before the rewrite")
+  }
 }
+
