@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Dense-vector column math over ArrayType columns.
   *
-  * All folds are strict left-to-right (`aggregate`), so double results are
+  * dot, norm and cosine are native Catalyst expressions (VectorExprs),
+  * codegen'd one-pass loops; asDouble is the builtin `transform`. Every
+  * fold accumulates strictly left to right, so double results are
   * deterministic under any partitioning AND bit-identical to DuckDB's
-  * list_sum in the oracle (verified empirically at sf0.01). Everything is
-  * codegen-friendly builtin higher-order functions — no UDFs.
+  * list_sum in the oracle (verified empirically at sf0.01). No UDFs.
   */
 object VectorFunctions {
 

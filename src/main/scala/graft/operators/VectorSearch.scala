@@ -9,21 +9,30 @@ import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
-  * Two tiers:
+  * Index tiers:
   *   - `bruteTopK`: exact cosine top-k against one probe vector — the
   *     correctness baseline. One narrow pass + TakeOrdered; fine at any
   *     scale for single probes.
   *   - IVF (inverted-file) index: k-means-lite coarse quantizer (seeded
-  *     deterministically, `iters` Lloyd steps via [[CentroidAggregator]]),
-  *     vectors assigned to their nearest centroid's cell; a query probes
-  *     only the `nprobe` nearest cells. At 100 TB the cell assignment is
-  *     one narrow pass (centroids broadcast as literals), the index is
-  *     cell-partitioned, and a probe touches nprobe/k of the data instead
-  *     of all of it.
+  *     deterministically, `iters` Lloyd steps), vectors assigned to their
+  *     nearest centroid's cell; a query probes only the `nprobe` nearest
+  *     cells. At 100 TB the cell assignment is one narrow pass (centroids
+  *     ride inside one native expression), the index is cell-partitioned,
+  *     and a probe touches nprobe/k of the data instead of all of it.
+  *   - PQ (product quantization): per-subspace codebooks, codes, and
+  *     asymmetric-distance scoring without decoding the corpus.
+  *   - IVF-PQ: the composed index (cells + residual PQ codes) with its
+  *     exact-refine tier.
+  *   - sign-bit LSH clustering (`signLshRepresentatives`).
   *
-  * The coarse quantizer (k centroids) is driver-side by design — real IVF
-  * quantizers are tiny (k ≤ 2^16) next to the vector set; only the cell
-  * assignment and per-cell scans distribute.
+  * The evaluation helpers the e-queries share live here too:
+  * [[normalized]] (the zero-guarded L2 normalise), [[probeVector]] (one
+  * probe row's vector) and [[rankCells]] (the driver-side probe-to-cell
+  * ranking).
+  *
+  * The quantizers (k centroids, m × k codewords) are driver-side by
+  * design — real quantizers are tiny (k ≤ 2^16) next to the vector set;
+  * only the assignment, encoding and per-cell scans distribute.
   */
 object VectorSearch {
 
@@ -116,23 +125,49 @@ object VectorSearch {
     * query vector; exact cosine within those cells only. */
   def ivfTopK(assigned: DataFrame, centroids: Seq[Seq[Double]],
       idCol: String, probeId: Long, k: Int, nprobe: Int): DataFrame = {
-    val probeRows = assigned.filter(col(idCol) === probeId)
-      .select(col("emb")).head(1)
-    if (probeRows.isEmpty) // probe absent (e.g. empty corpus): zero rows,
-      return assigned      // correct schema — never a driver-side crash
-        .select(col(idCol), lit(0.0).as("cos_sim"), col("cell"))
-        .filter(lit(false))
-    val probeVec = probeRows.head.getSeq[Double](0)
-    val probeCells = centroids.zipWithIndex
-      .map { case (c, i) => (cosineLocal(probeVec, c), i) }
-      .sortBy { case (s, i) => (-s, i) }.take(nprobe).map(_._2)
-    assigned
-      .filter(col("cell").isin(probeCells: _*) && col(idCol) =!= probeId)
-      .select(col(idCol), cosine(col("emb"), typedlit(probeVec)).as("cos_sim"),
-        col("cell"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    probeVector(assigned, idCol, probeId) match {
+      case None => // probe absent (e.g. empty corpus): zero rows, correct
+        assigned   // schema — never a driver-side crash
+          .select(col(idCol), lit(0.0).as("cos_sim"), col("cell"))
+          .filter(lit(false))
+      case Some(probeVec) =>
+        val probeCells = rankCells(probeVec, centroids).take(nprobe)
+        assigned
+          .filter(col("cell").isin(probeCells: _*) && col(idCol) =!= probeId)
+          .select(col(idCol), cosine(col("emb"), typedlit(probeVec)).as("cos_sim"),
+            col("cell"))
+          .orderBy(col("cos_sim").desc, col(idCol).asc)
+          .limit(k)
+    }
   }
+
+  /** L2-normalised vectors: (idCol, emb) with emb = vecCol widened to
+    * double and divided elementwise by its norm. A zero vector passes
+    * through un-normalised — 0/0 would be a NaN score everywhere
+    * downstream (the e01 cosine guard). The input the PQ-family queries
+    * (e13/e15/e19/e20/e21/e40) train and score on. */
+  def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol), asDouble(col(vecCol)).as("e"))
+      .withColumn("nrm", norm(col("e")))
+      .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
+        .otherwise(transform(col("e"), x => x / col("nrm"))))
+      .select(col(idCol), col("emb"))
+
+  /** The `emb` vector of the row whose `idCol` is `id` — one bounded
+    * head(1) job at plan-build time; None when the row is absent (e.g. an
+    * empty corpus). */
+  def probeVector(df: DataFrame, idCol: String, id: Long): Option[Seq[Double]] =
+    df.filter(col(idCol) === id).select(col("emb")).head(1)
+      .headOption.map(_.getSeq[Double](0))
+
+  /** Every cell index, nearest first: descending driver-side cosine of
+    * `probe` to each centroid, ties to the lower cell — the order the
+    * native [[cellOf]] assignment elects its argmax by. The nprobe cells
+    * a query scans are a prefix of it. */
+  def rankCells(probe: Seq[Double], centroids: Seq[Seq[Double]]): Seq[Int] =
+    centroids.zipWithIndex
+      .map { case (c, i) => (cosineLocal(probe, c), i) }
+      .sortBy { case (s, i) => (-s, i) }.map(_._2)
 
   /** Embedding near-dup CLUSTERING: every vector maps to the minimum id
     * sharing its sign-bit LSH bucket over the leading `bits` dimensions —
@@ -376,9 +411,7 @@ object VectorSearch {
   def ivfPqTopK(index: DataFrame, centroids: Seq[Seq[Double]],
       books: Seq[Seq[Seq[Double]]], probe: Seq[Double], idCol: String,
       k: Int, nprobe: Int, excludeId: Long): DataFrame = {
-    val probeCells = centroids.zipWithIndex
-      .map { case (c, i) => (cosineLocal(probe, c), i) }
-      .sortBy { case (s, i) => (-s, i) }.take(nprobe).map(_._2)
+    val probeCells = rankCells(probe, centroids).take(nprobe)
     val qDotCell =
       if (centroids.isEmpty) lit(0.0)
       else element_at(typedlit(centroids.map(c => dotLocal(probe, c))),

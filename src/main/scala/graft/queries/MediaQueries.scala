@@ -56,6 +56,40 @@ object MediaQueries {
       FROM documents
       WHERE text IS NOT NULL)"""
 
+  /** DuckDB mirror of Multimodal.perceptualHashGroups' aHash over a
+    * `med` CTE (media_id, kind, hx = md5 hex): the 8 payload bytes `byt`,
+    * then `ph` with bit j set iff 8·b_j > Σb (the integer-domain mean
+    * threshold). `carry` lists extra `med` columns to keep, each followed
+    * by ", ". ONE definition for m04/m09/m13. */
+  private def sqlAhashCtes(carry: String = ""): String = {
+    val byteCols = (0 until 8)
+      .map(j => s"${hexByte("hx", j)} AS b$j").mkString(", ")
+    val tot = (0 until 8).map(j => s"b$j").mkString(" + ")
+    val bits = (0 until 8)
+      .map(j => s"CASE WHEN b$j * 8 > tot THEN ${1L << j} ELSE 0 END")
+      .mkString(" + ")
+    s"""byt AS (SELECT media_id, kind, $carry$byteCols FROM med),
+          ph AS (SELECT media_id, kind, ${carry}CAST($bits AS BIGINT) AS phash
+            FROM (SELECT *, $tot AS tot FROM byt))"""
+  }
+
+  /** DuckDB mirror of Multimodal.audioChunks' stream metadata: `aud`
+    * (sample rate, duration and byte 3 from the md5 payload of the audio
+    * rows) and `base` (n_samples, 1 s window, 50% hop). ONE definition for
+    * m05/m12/m17. */
+  private val sqlAudioBaseCtes: String =
+    s"""aud AS (SELECT doc_id AS media_id,
+            8000 * (1 + (${hexByte("md5(text)", 1)} % 4)) AS sample_rate,
+            (1 + (${hexByte("md5(text)", 2)} % 8)) AS dur_s,
+            ${hexByte("md5(text)", 3)} AS b3
+          FROM documents
+          WHERE text IS NOT NULL AND CAST(doc_id % 3 AS INT) = 1),
+        base AS (SELECT media_id, sample_rate,
+            CAST(sample_rate * dur_s + b3 * 100 AS BIGINT) AS n_samples,
+            CAST(sample_rate AS BIGINT) AS win,
+            CAST(sample_rate AS BIGINT) // 2 AS hop
+          FROM aud)"""
+
   /** The m07/m14 shared cost chain: c (media rows + md5 hex + text
     * tokens) → m (decoded stub metadata) → t exposing (media_id, source,
     * kind, n_text, n_media) — ONE definition mirroring
@@ -205,25 +239,15 @@ object MediaQueries {
       (s, d) =>
         Multimodal.perceptualHashGroups(
           Multimodal.syntheticMedia(Tables.documents(s, d))),
-      Some {
-        val byteCols = (0 until 8)
-          .map(j => s"${hexByte("hx", j)} AS b$j").mkString(", ")
-        val tot = (0 until 8).map(j => s"b$j").mkString(" + ")
-        val bits = (0 until 8)
-          .map(j => s"CASE WHEN b$j * 8 > tot THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        s"""WITH med AS (SELECT doc_id AS media_id,
+      Some(s"""WITH med AS (SELECT doc_id AS media_id,
             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
               WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
             md5(text) AS hx FROM documents WHERE text IS NOT NULL),
-          byt AS (SELECT media_id, kind, $byteCols FROM med),
-          ph AS (SELECT media_id, kind, CAST($bits AS BIGINT) AS phash
-            FROM (SELECT *, $tot AS tot FROM byt))
+          ${sqlAhashCtes()}
           SELECT media_id, kind, phash,
             min(media_id) OVER (PARTITION BY kind, phash) AS rep_id,
             count(*) OVER (PARTITION BY kind, phash) AS group_n
-          FROM ph"""
-      }),
+          FROM ph""")),
 
     // audio chunking: strided fixed-duration sample windows (1 s window,
     // 50% hop) from decoded stream metadata — the audio analog of m02's
@@ -233,17 +257,7 @@ object MediaQueries {
       "m05_audio_chunks",
       (s, d) =>
         Multimodal.audioChunks(Multimodal.syntheticMedia(Tables.documents(s, d))),
-      Some(s"""WITH aud AS (SELECT doc_id AS media_id,
-            8000 * (1 + (${hexByte("md5(text)", 1)} % 4)) AS sample_rate,
-            (1 + (${hexByte("md5(text)", 2)} % 8)) AS dur_s,
-            ${hexByte("md5(text)", 3)} AS b3
-          FROM documents
-          WHERE text IS NOT NULL AND CAST(doc_id % 3 AS INT) = 1),
-        base AS (SELECT media_id, sample_rate,
-            CAST(sample_rate * dur_s + b3 * 100 AS BIGINT) AS n_samples,
-            CAST(sample_rate AS BIGINT) AS win,
-            CAST(sample_rate AS BIGINT) // 2 AS hop
-          FROM aud),
+      Some(s"""WITH $sqlAudioBaseCtes,
         ch AS (SELECT media_id, sample_rate, n_samples, win, hop,
             unnest(generate_series(0,
               CASE WHEN n_samples <= win THEN 0
@@ -365,29 +379,19 @@ object MediaQueries {
           .select(col("kind"), col("phash"), col("n_media"),
             col("n_captions"), (col("n_captions") >= 2).as("multi_caption"))
       },
-      Some {
-        val byteCols = (0 until 8)
-          .map(j => s"${hexByte("hx", j)} AS b$j").mkString(", ")
-        val tot = (0 until 8).map(j => s"b$j").mkString(" + ")
-        val bits = (0 until 8)
-          .map(j => s"CASE WHEN b$j * 8 > tot THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        s"""WITH med AS (SELECT doc_id AS media_id,
+      Some(s"""WITH med AS (SELECT doc_id AS media_id,
             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
               WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
             md5(text) AS hx, ${TextQueries.sqlFingerprint} AS fp
             FROM documents WHERE text IS NOT NULL),
-          byt AS (SELECT media_id, kind, fp, $byteCols FROM med),
-          ph AS (SELECT media_id, kind, fp, CAST($bits AS BIGINT) AS phash
-            FROM (SELECT *, $tot AS tot FROM byt)),
+          ${sqlAhashCtes("fp, ")},
           pc AS (SELECT kind, phash, fp, COUNT(*) AS c
             FROM ph GROUP BY 1, 2, 3),
           g AS (SELECT kind, phash, CAST(SUM(c) AS BIGINT) AS n_media,
             CAST(COUNT(*) AS BIGINT) AS n_captions FROM pc GROUP BY 1, 2)
           SELECT kind, phash, n_media, n_captions,
             n_captions >= 2 AS multi_caption
-          FROM g WHERE n_media >= 2"""
-      }),
+          FROM g WHERE n_media >= 2""")),
 
     // ---- shared frames across videos (intro/outro boilerplate) -----------
     // The video-corpus analog of d22's chunk dedup: a FRAME key that
@@ -549,17 +553,7 @@ object MediaQueries {
             round(col("n_voiced").cast("double")
               / col("n_chunks").cast("double"), 6))
       },
-      Some(s"""WITH aud AS (SELECT doc_id AS media_id,
-            8000 * (1 + (${hexByte("md5(text)", 1)} % 4)) AS sample_rate,
-            (1 + (${hexByte("md5(text)", 2)} % 8)) AS dur_s,
-            ${hexByte("md5(text)", 3)} AS b3
-          FROM documents
-          WHERE text IS NOT NULL AND CAST(doc_id % 3 AS INT) = 1),
-        base AS (SELECT media_id, sample_rate,
-            CAST(sample_rate * dur_s + b3 * 100 AS BIGINT) AS n_samples,
-            CAST(sample_rate AS BIGINT) AS win,
-            CAST(sample_rate AS BIGINT) // 2 AS hop
-          FROM aud),
+      Some(s"""WITH $sqlAudioBaseCtes,
         ch AS (SELECT media_id,
             unnest(generate_series(0,
               CASE WHEN n_samples <= win THEN 0
@@ -628,20 +622,11 @@ object MediaQueries {
             col("canon_phash"), col("n_merged"),
             (col("canon_phash") =!= col("phash")).cast("int").as("merged"))
       },
-      Some {
-        val byteCols = (0 until 8)
-          .map(j => s"${hexByte("hx", j)} AS b$j").mkString(", ")
-        val tot = (0 until 8).map(j => s"b$j").mkString(" + ")
-        val bits = (0 until 8)
-          .map(j => s"CASE WHEN b$j * 8 > tot THEN ${1L << j} ELSE 0 END")
-          .mkString(" + ")
-        s"""WITH med AS (SELECT doc_id AS media_id,
+      Some(s"""WITH med AS (SELECT doc_id AS media_id,
             CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
               WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
             md5(text) AS hx FROM documents WHERE text IS NOT NULL),
-          byt AS (SELECT media_id, kind, $byteCols FROM med),
-          ph AS (SELECT media_id, kind, CAST($bits AS BIGINT) AS phash
-            FROM (SELECT *, $tot AS tot FROM byt)),
+          ${sqlAhashCtes()},
           g AS (SELECT kind, phash, CAST(COUNT(*) AS BIGINT) AS n_media
             FROM ph GROUP BY 1, 2),
           nb AS (SELECT a.kind, a.phash, a.n_media,
@@ -654,8 +639,7 @@ object MediaQueries {
               AS BIGINT) AS n_merged,
             CAST(CASE WHEN canon_phash <> phash THEN 1 ELSE 0 END AS INT)
               AS merged
-          FROM nb"""
-      }),
+          FROM nb""")),
 
     // ---- modality token-budget report --------------------------------------
     // The "what will this mix cost to train on" readout a multimodal run
@@ -846,17 +830,7 @@ object MediaQueries {
               .otherwise((lit(0.5) / col("mean_energy") > 4.0).cast("int"))
               .as("limited"))
       },
-      Some(s"""WITH aud AS (SELECT doc_id AS media_id,
-            8000 * (1 + (${hexByte("md5(text)", 1)} % 4)) AS sample_rate,
-            (1 + (${hexByte("md5(text)", 2)} % 8)) AS dur_s,
-            ${hexByte("md5(text)", 3)} AS b3
-          FROM documents
-          WHERE text IS NOT NULL AND CAST(doc_id % 3 AS INT) = 1),
-        base AS (SELECT media_id, sample_rate,
-            CAST(sample_rate * dur_s + b3 * 100 AS BIGINT) AS n_samples,
-            CAST(sample_rate AS BIGINT) AS win,
-            CAST(sample_rate AS BIGINT) // 2 AS hop
-          FROM aud),
+      Some(s"""WITH $sqlAudioBaseCtes,
         ch AS (SELECT media_id,
             unnest(generate_series(0,
               CASE WHEN n_samples <= win THEN 0

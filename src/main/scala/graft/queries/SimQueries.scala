@@ -7,24 +7,25 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** Similarity-search queries over embeddings.parquet (ArrayType(FloatType),
-  * 64-dim).
+  * 64-dim): the e-family.
   *
-  * Two tiers, per the brief:
-  *   - brute-force cosine top-k vs one query vector (the correctness
-  *     baseline; query side is a broadcast single row, candidate side is a
-  *     narrow scan — fine at any scale for a single probe);
-  *   - sign-bit LSH (random-hyperplane family, axis-aligned instance):
-  *     bucket on the sign pattern of the leading dimensions, then join
-  *     WITHIN buckets only — candidate pairs instead of all-pairs, the
-  *     100 TB shape (shuffle key = bucket id, small groups).
+  * The search tiers are brute-force cosine top-k vs one query vector (the
+  * correctness baseline), sign-bit LSH buckets (candidate pairs WITHIN
+  * buckets only, never all-pairs), and the IVF / PQ / IVF-PQ indexes of
+  * [[graft.operators.VectorSearch]]. Most queries are evaluations of those
+  * tiers against an exact truth set on one bounded probe panel; the shared
+  * eval scaffold (probe panel, truth top-3, recall@3 tail, pinned
+  * quantizers) is defined once below, with its DuckDB mirror next to it.
   *
-  * Determinism: all arithmetic is widened to double first; dot products and
-  * norms are strict left-to-right folds (`aggregate`), mirrored in the
-  * DuckDB oracle with list_sum over the same element order, so doubles are
-  * bit-identical across engines.
+  * Determinism: all arithmetic is widened to double first; dot, norm and
+  * cosine are the native one-pass expressions (VectorExprs), whose strict
+  * left-to-right accumulation is mirrored in the DuckDB oracle with list_sum
+  * over the same element order, so doubles are bit-identical across
+  * engines.
   */
 object SimQueries {
   import graft.functions.VectorFunctions._
+  import graft.operators.VectorSearch
 
   /** Sign-bit LSH bucket over the first `bits` dimensions (1-based
     * element_at in Spark matches DuckDB's 1-based subscripts). */
@@ -174,6 +175,193 @@ object SimQueries {
           FROM el GROUP BY pos),
         ma AS (SELECT list(mu ORDER BY pos) AS mus FROM m)"""
 
+  // ---- the e-family eval scaffold ----------------------------------------
+  // Every recall eval scores one BOUNDED deterministic probe panel against
+  // the corpus. The panel modulus grows with the corpus (max(20, n/100)) so
+  // the sample stays ~100 probes at ANY corpus size — a fixed 5% rate made
+  // the exact side probes×corpus ≈ n²/20 (measured 31 s at 16k vectors vs
+  // 1.1 s at 2k), and recall precision only needs ~1/√probes anyway. The
+  // probe set broadcasts against the corpus (narrow scan, no corpus
+  // shuffle); recall is an integer hit-count / 3.0 (0, 1/3, 2/3, 1 —
+  // identical IEEE doubles in both engines). Each rule below has exactly
+  // one Spark definition and one DuckDB mirror.
+
+  /** The probe-panel predicate over `vec_id`. */
+  private def probePanel(s: SparkSession, d: String): Column =
+    col("vec_id") % math.max(20L, ivfCorpusSize(s, d) / 100L) === 0
+
+  /** DuckDB mirror of [[probePanel]]. */
+  private val sqlProbePanel: String =
+    s"""vec_id % (SELECT greatest(20, COUNT(*) // 100)
+            FROM embeddings WHERE $sqlValidEmb) = 0"""
+
+  /** The `probes` CTE: the panel rows of `from` as (a_id, `cols`), plus an
+    * `extra` predicate suffix (e27's live-probe rule). */
+  private def sqlProbesCte(cols: String = "e AS ae", from: String = "b",
+      extra: String = ""): String =
+    s"""probes AS (SELECT vec_id AS a_id, $cols FROM $from
+          WHERE $sqlProbePanel$extra)"""
+
+  /** Per-probe top-3 (a_id, b_id) of a scored candidate frame, ties to the
+    * lower b_id (row_number ≤ 3 gets map-side WindowGroupLimit before the
+    * a_id exchange). */
+  private def top3(scored: DataFrame, score: String): DataFrame =
+    scored
+      .withColumn("rn", row_number().over(Window.partitionBy(col("a_id"))
+        .orderBy(col(score).desc, col("b_id").asc)))
+      .filter(col("rn") <= 3)
+      .select(col("a_id"), col("b_id"))
+
+  /** The exact-cosine truth top-3 of each probe over the (vec_id, emb)
+    * corpus, probe self-excluded; `probes` carries (a_id, a_emb). */
+  private def truthTop3(corpus: DataFrame, probes: DataFrame,
+      score: String): DataFrame =
+    top3(corpus.select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
+      .crossJoin(broadcast(probes))
+      .filter(col("a_id") =!= col("b_id"))
+      .withColumn(score, cosine(col("a_emb"), col("b_emb"))), score)
+
+  /** DuckDB mirror of [[top3]] over `probes p JOIN from c ON on`, ranked
+    * by `score` — named `name`. */
+  private def sqlTop3Cte(name: String, score: String, from: String = "b",
+      on: String = "p.a_id <> c.vec_id"): String =
+    s"""$name AS (SELECT a_id, b_id FROM (
+          SELECT p.a_id, c.vec_id AS b_id,
+            row_number() OVER (PARTITION BY p.a_id
+              ORDER BY $score DESC, c.vec_id ASC) AS rn
+          FROM probes p JOIN $from c ON $on) t WHERE rn <= 3)"""
+
+  /** DuckDB mirror of [[truthTop3]]: the `truth` CTE over `from`'s e. */
+  private def sqlTruthCte(from: String = "b"): String =
+    sqlTop3Cte("truth", sqlCos("p.ae", "c.e"), from)
+
+  /** The recall@3 tail: every panel probe (a probe with no hit reads 0),
+    * `extra` columns between a_id and recall_at_3. `hits` carries
+    * (a_id, n_hit). */
+  private def recallAt3(probes: DataFrame, hits: DataFrame,
+      extra: Column*): DataFrame =
+    probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
+      .select((col("a_id") +: extra :+
+        (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
+          .as("recall_at_3")): _*)
+
+  /** DuckDB mirror of [[recallAt3]]'s final select over a `hits` CTE. */
+  private val sqlRecallSelect: String =
+    """SELECT p.a_id,
+          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
+        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id"""
+
+  /** The `hits` CTE (truth ∩ `approx` per probe) and the recall select. */
+  private def sqlRecallTail(approx: String): String =
+    s"""hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
+          FROM truth t JOIN $approx a ON t.a_id = a.a_id AND t.b_id = a.b_id
+          GROUP BY 1)
+        $sqlRecallSelect"""
+
+  /** The valid embeddings as (vec_id, `as`: array<double>). */
+  private def embAsDouble(s: SparkSession, d: String, as: String): DataFrame =
+    Tables.validEmbeddings(s, d)
+      .select(col("vec_id"), asDouble(col("embedding")).as(as))
+
+  /** DuckDB mirror of [[embAsDouble]]: CTE `name` (vec_id, e). */
+  private def sqlEmbCte(name: String): String =
+    s"""$name AS (SELECT vec_id,
+          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+        FROM embeddings WHERE $sqlValidEmb)"""
+
+  /** The valid embeddings L2-normalised (VectorSearch.normalized) as
+    * (vec_id, emb). */
+  private def normalizedEmb(s: SparkSession, d: String): DataFrame =
+    VectorSearch.normalized(Tables.validEmbeddings(s, d), "vec_id", "embedding")
+
+  /** DuckDB mirror of [[normalizedEmb]]: `v` (doubles) and `b` (normalised,
+    * zero vectors passed through) CTEs. */
+  private val sqlNormalizedCtes: String =
+    s"""${sqlEmbCte("v")},
+        b AS (SELECT vec_id, CASE WHEN ${sqlNorm("e")} = 0 THEN e
+            ELSE list_transform(e, x -> x / ${sqlNorm("e")}) END AS e
+          FROM v)"""
+
+  /** The probe row's vector CTE `q` (vec_id = 0 of `from`). */
+  private def sqlProbeCte(from: String): String =
+    s"q AS (SELECT e AS qe FROM $from WHERE vec_id = 0)"
+
+  // The PINNED quantizers: the oracle-replayable degenerate training the
+  // *_pinned queries and their audits run through the production code
+  // path — centroids = the 8 lowest-id vectors verbatim (0 Lloyd steps),
+  // PQ codebooks = the m=8 subvectors of the 16 lowest-id vectors (0
+  // refinement steps).
+
+  /** The pinned IVF index over the valid embeddings' raw vectors. */
+  private def pinnedIvf(emb: DataFrame): (Seq[Seq[Double]], DataFrame) =
+    VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
+
+  /** The pinned PQ codebooks over a (vec_id, emb) frame. */
+  private def pinnedPqBooks(base: DataFrame): Seq[Seq[Seq[Double]]] =
+    VectorSearch.pqTrain(base, "vec_id", "emb", m = 8, k = 16, sample = 16,
+      iters = 0)
+
+  /** The pinned IVF-PQ index over a (vec_id, emb) frame. */
+  private def pinnedIvfPq(base: DataFrame)
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) =
+    VectorSearch.ivfPqIndex(base, "vec_id", "emb", kCells = 8, m = 8,
+      k = 16, iters = 0, sample = 16, pqIters = 0)
+
+  /** DuckDB mirror of the pinned centroids: `c` (cell, ce) over `from`. */
+  private def sqlPinnedCentroidsCte(from: String): String =
+    s"""c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
+            e AS ce
+          FROM $from ORDER BY vec_id ASC LIMIT 8)"""
+
+  /** The probe-to-cell rank (nearest centroid first, ties to the lower
+    * cell) over `c` and `q` — the mirror of VectorSearch.rankCells. */
+  private val sqlCellRank: String =
+    s"""row_number() OVER (
+                ORDER BY ${sqlCos("c.ce", "qe")} DESC, c.cell ASC)"""
+
+  /** The nprobe=2 probed cells `pc` of the pinned index. */
+  private val sqlProbeCellsCte: String =
+    s"""pc AS (SELECT cell FROM (
+            SELECT c.cell, $sqlCellRank AS rn
+            FROM c, q) t WHERE rn <= 2)"""
+
+  /** DuckDB mirror of the pinned PQ training + encoding over vector column
+    * `vec` of relation `from`: codebooks `cb` (ci, c<vec>), their m=8
+    * subvectors `sub` (ci, j, c), and the codes `enc` (vec_id, j, ci) by
+    * the expanded-form L2 argmin ‖c‖² − 2·x·c, ties to the lower ci. */
+  private def sqlPinnedPqCtes(from: String, vec: String): String =
+    s"""cb AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS ci,
+            $vec AS c$vec
+          FROM $from ORDER BY vec_id ASC LIMIT 16),
+        sub AS (SELECT ci, j,
+            c$vec[CAST(j*8+1 AS INT):CAST(j*8+8 AS INT)] AS c
+          FROM cb, (SELECT unnest(range(0, 8)) AS j) jj),
+        enc AS (SELECT vec_id, j, ci FROM (
+            SELECT w.vec_id, s.j, s.ci,
+              row_number() OVER (PARTITION BY w.vec_id, s.j ORDER BY
+                (list_sum(list_transform(s.c, x -> x * x))
+                  - 2.0e0 * list_sum(list_transform(list_zip(
+                      w.$vec[CAST(s.j*8+1 AS INT):CAST(s.j*8+8 AS INT)], s.c),
+                    p -> p[1] * p[2]))) ASC,
+                s.ci ASC) AS rn
+            FROM $from w, sub s) t WHERE rn = 1)"""
+
+  /** DuckDB mirror of [[pinnedIvfPq]] over the normalised vectors: the
+    * pinned centroids `c`, the argmax-cosine cell assignment `ac`, the
+    * residuals `res` (vec_id, cell, ce, r) and the pinned PQ chain over r. */
+  private lazy val sqlPinnedIvfPqCtes: String =
+    s"""$sqlNormalizedCtes,
+        ${sqlPinnedCentroidsCte("b")},
+        ac AS (SELECT vec_id, e, cell, ce FROM (
+            SELECT w.vec_id, w.e, c.cell, c.ce,
+              row_number() OVER (PARTITION BY w.vec_id
+                ORDER BY ${sqlCos("w.e", "c.ce")} DESC, c.cell ASC) AS rn
+            FROM b w, c) t WHERE rn = 1),
+        res AS (SELECT vec_id, cell, ce,
+            list_transform(list_zip(e, ce), p -> p[1] - p[2]) AS r
+          FROM ac),
+        ${sqlPinnedPqCtes("res", "r")}"""
+
   private def bucketed(s: SparkSession, d: String): DataFrame =
     Tables.validEmbeddings(s, d).select(
       col("vec_id"),
@@ -231,7 +419,7 @@ object SimQueries {
     // ---- brute-force cosine top-k vs the vec_id=0 probe ------------------
     GraftQuery(
       "e01_cosine_topk",
-      (s, d) => graft.operators.VectorSearch.bruteTopK(
+      (s, d) => VectorSearch.bruteTopK(
         Tables.validEmbeddings(s, d), "vec_id", "embedding",
         probeId = 0L, k = 10),
       Some(s"""WITH q AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
@@ -307,7 +495,7 @@ object SimQueries {
     // same window-min in SQL) ---------------------------------------------
     GraftQuery(
       "e06_embedding_clusters",
-      (s, d) => graft.operators.VectorSearch
+      (s, d) => VectorSearch
         .signLshRepresentatives(Tables.validEmbeddings(s, d), "vec_id", "embedding",
           derivedBits(s, d)),
       Some(s"""WITH $sqlBitsCte
@@ -317,75 +505,39 @@ object SimQueries {
         FROM embeddings, nb WHERE $sqlValidEmb""")),
 
     // ---- ANN recall@3: bucketed-LSH answers vs brute-force truth ---------
-    // The evaluation harness every approximate index needs: on a BOUNDED
-    // deterministic probe sample, compare the e03-style in-bucket top-3
-    // against the exact cosine top-3 and emit per-probe recall. The probe
-    // modulus grows with the corpus (max(20, n/100)) so the sample stays
-    // ~100 probes at ANY corpus size — a fixed 5% rate made the exact
-    // side probes×corpus ≈ n²/20 (measured 31 s at 16k vectors vs 1.1 s
-    // at 2k), and recall precision only needs ~1/√probes anyway. Scale
-    // shape: the probe set broadcasts against the corpus for the exact
-    // side (narrow scan, no corpus shuffle); the ANN side is the usual
-    // bucket join; recall is an integer hit-count / 3.0 (0, 1/3, 2/3,
-    // 1 — identical IEEE doubles in both engines).
+    // The evaluation harness every approximate index needs: on the probe
+    // panel, compare the e03-style in-bucket top-3 against the exact
+    // cosine top-3 and emit per-probe recall. The ANN side is the usual
+    // bucket join.
     GraftQuery(
       "e07_ann_recall",
       (s, d) => {
         val bb = bucketed(s, d)
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = bb.filter(col("vec_id") % mod === 0)
+        val probes = bb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"),
             col("bucket"))
-        val w = Window.partitionBy(col("a_id"))
-          .orderBy(col("cos_sim").desc, col("b_id").asc)
-        val truth = bb
-          .select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
-          .crossJoin(broadcast(probes.select(col("a_id"), col("a_emb"))))
-          .filter(col("a_id") =!= col("b_id"))
-          .withColumn("cos_sim", cosine(col("a_emb"), col("b_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .select(col("a_id"), col("b_id"))
-        val ann = probes
+        val truth = truthTop3(bb, probes.select(col("a_id"), col("a_emb")),
+          "cos_sim")
+        val ann = top3(probes
           .join(bb.select(col("vec_id").as("b_id"), col("emb").as("b_emb"),
               col("bucket").as("bucket_b")),
             col("bucket") === col("bucket_b") && col("a_id") =!= col("b_id"))
-          .withColumn("cos_sim", cosine(col("a_emb"), col("b_emb")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3)
-          .select(col("a_id"), col("b_id"))
+          .withColumn("cos_sim", cosine(col("a_emb"), col("b_emb"))),
+          "cos_sim")
         val hits = truth.join(ann, Seq("a_id", "b_id"))
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
       Some(s"""WITH $sqlBitsCte,
         b AS (SELECT vec_id,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
           ${sqlSignBucket("embedding", "bits")} AS bucket
         FROM embeddings, nb WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae, bucket FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
-        truth AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
-        ann AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c
-            ON p.bucket = c.bucket AND p.a_id <> c.vec_id) t WHERE rn <= 3),
-        hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-          FROM truth t JOIN ann a ON t.a_id = a.a_id AND t.b_id = a.b_id
-          GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+        ${sqlProbesCte("e AS ae, bucket")},
+        ${sqlTruthCte()},
+        ${sqlTop3Cte("ann", sqlCos("p.ae", "c.e"),
+          on = "p.bucket = c.bucket AND p.a_id <> c.vec_id")},
+        ${sqlRecallTail("ann")}""")),
 
     // ---- IVF ANN top-k (coarse quantizer + nprobe cells) -----------------
     // No SQL oracle (k-means-lite centroids from a custom Aggregator);
@@ -393,7 +545,6 @@ object SimQueries {
     GraftQuery(
       "e05_ivf_topk",
       (s, d) => {
-        import graft.operators.VectorSearch
         val emb = Tables.validEmbeddings(s, d)
         // Cell count scales with the corpus (the standard nlist ≈ √n), so
         // a cell stays ~√n vectors instead of a fixed 1/8 of all rows —
@@ -490,15 +641,13 @@ object SimQueries {
     GraftQuery(
       "e09_matryoshka_recall",
       (s, d) => {
-        val emb = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
+        val emb = embAsDouble(s, d, "emb")
         // The prefix slice is taken ONCE PER ROW on each side of the probe
         // join (e16's per-row projection pattern) — sliced inside the
         // pair-level cosine it paid 2 slice allocations per candidate PAIR
         // (n·|probes| of each) instead of per row. Same values, same plan
         // topology; only the evaluation point moves below the crossJoin.
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val probes = emb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"),
             slice(col("emb"), 1, TruncDims).as("a_tr"))
         // ONE scoring pass: both cosines on the same broadcast-probe scan,
@@ -519,34 +668,14 @@ object SimQueries {
           .withColumn("rn_tr", row_number().over(rankW(col("cos_tr"))))
           .filter(col("rn_full") <= 3 && col("rn_tr") <= 3)
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
-        truth AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
-        trunc AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos(s"p.ae[1:$TruncDims]", s"c.e[1:$TruncDims]")}
-                DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
-        hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-          FROM truth t JOIN trunc a ON t.a_id = a.a_id AND t.b_id = a.b_id
-          GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte()},
+        ${sqlTruthCte()},
+        ${sqlTop3Cte("trunc",
+          sqlCos(s"p.ae[1:$TruncDims]", s"c.e[1:$TruncDims]"))},
+        ${sqlRecallTail("trunc")}""")),
 
     // ---- per-dim mean centering (whitening/PCA preprocessing pass) -------
     // The global-statistics rewrite every embedding pipeline runs before
@@ -567,8 +696,7 @@ object SimQueries {
     GraftQuery(
       "e10_mean_center",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
+        val e = embAsDouble(s, d, "xs")
         val means = e.select(posexplode(col("xs")).as(Seq("pos", "x")))
           .groupBy(col("pos"))
           .agg((sum(round(col("x"), 6).cast("decimal(18,6)")).cast("double")
@@ -619,8 +747,7 @@ object SimQueries {
           col("vec_id"), asDouble(col("embedding")).as("emb"),
           signWord(col("embedding"), 0).as("w0"),
           signWord(col("embedding"), 32).as("w1"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = base.filter(col("vec_id") % mod === 0)
+        val probes = base.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"),
             col("w0").as("a_w0"), col("w1").as("a_w1"))
         val wH = Window.partitionBy(col("a_id"))
@@ -647,9 +774,7 @@ object SimQueries {
           ${sqlSignWord("embedding", 0)} AS w0,
           ${sqlSignWord("embedding", 32)} AS w1
         FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae, w0 AS aw0, w1 AS aw1
-          FROM b WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+        ${sqlProbesCte("e AS ae, w0 AS aw0, w1 AS aw1")},
         h AS (SELECT p.a_id, c.vec_id AS b_id, p.ae, c.e,
             CAST(bit_count(xor(p.aw0, c.w0)) + bit_count(xor(p.aw1, c.w1))
               AS BIGINT) AS hamming
@@ -738,8 +863,7 @@ object SimQueries {
     GraftQuery(
       "e12_topvar_recall",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
+        val e = embAsDouble(s, d, "xs")
         // The 16-entry top-variance dim list is a BOUNDED collect at
         // DataFrame-construction time (the e17 cell-rank pattern: a
         // 64-row aggregate folded to one array row, deterministic, inlined
@@ -771,8 +895,7 @@ object SimQueries {
         def gather(xs: Column): Column =
           if (dimsSeq.isEmpty) typedlit(Seq.empty[Double])
           else array(dimsSeq.map(i => element_at(xs, i)): _*)
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = e.filter(col("vec_id") % mod === 0)
+        val probes = e.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"),
             gather(col("xs")).as("a_tv"))
         def rankW(c: Column) = Window.partitionBy(col("a_id"))
@@ -788,14 +911,9 @@ object SimQueries {
           .withColumn("rn_tv", row_number().over(rankW(col("cos_tv"))))
           .filter(col("rn_full") <= 3 && col("rn_tv") <= 3)
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
+      Some(s"""WITH ${sqlEmbCte("b")},
         el AS (SELECT unnest(e) AS x, unnest(range(1, len(e) + 1)) AS pos
           FROM b),
         m AS (SELECT pos,
@@ -807,14 +925,8 @@ object SimQueries {
           (sx2 - sx * sx / n) / n AS variance FROM m),
         dm AS (SELECT (list(pos ORDER BY variance DESC, pos ASC))[1:$TruncDims]
           AS dims FROM v),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
-        truth AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
+        ${sqlProbesCte()},
+        ${sqlTruthCte()},
         tv AS (SELECT a_id, b_id FROM (
           SELECT p.a_id, c.vec_id AS b_id,
             row_number() OVER (PARTITION BY p.a_id
@@ -822,12 +934,7 @@ object SimQueries {
                 "list_transform(dims, i -> c.e[i])")} DESC,
                 c.vec_id ASC) AS rn
           FROM probes p JOIN b c ON p.a_id <> c.vec_id, dm) t WHERE rn <= 3),
-        hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-          FROM truth t JOIN tv a ON t.a_id = a.a_id AND t.b_id = a.b_id
-          GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+        ${sqlRecallTail("tv")}""")),
 
     // ---- PQ (product quantization) ADC recall eval -----------------------
     // The code-compression tier between SQ (e08) and binary signs (e11):
@@ -845,45 +952,22 @@ object SimQueries {
     GraftQuery(
       "e13_pq_adc_recall",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          // zero vectors pass through un-normalized (0/0 is a NaN score
-          // everywhere downstream otherwise — the e01 cosine guard)
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
+        val base = normalizedEmb(s, d)
         val books = VectorSearch.pqTrain(base, "vec_id", "emb", m = 8, k = 16)
         val encoded = base
           .withColumn("codes", VectorSearch.pqEncode(col("emb"), books))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = base.filter(col("vec_id") % mod === 0)
+        val probes = base.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
-        val w = Window.partitionBy(col("a_id"))
-          .orderBy(col("score").desc, col("b_id").asc)
-        val truth = base
-          .select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
-          .crossJoin(broadcast(probes))
-          .filter(col("a_id") =!= col("b_id"))
-          .withColumn("score", cosine(col("a_emb"), col("b_emb")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(col("a_id"), col("b_id"))
-        val adc = encoded
+        val truth = truthTop3(base, probes, "score")
+        val adc = top3(encoded
           .select(col("vec_id").as("b_id"),
             VectorSearch.pqReconstruct(col("codes"), books).as("recon"))
           .crossJoin(broadcast(probes))
           .filter(col("a_id") =!= col("b_id"))
-          .withColumn("score", dot(col("a_emb"), col("recon")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .select(col("a_id"), col("b_id"))
+          .withColumn("score", dot(col("a_emb"), col("recon"))), "score")
         val hits = truth.join(adc, Seq("a_id", "b_id"))
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
       None),
 
@@ -905,30 +989,20 @@ object SimQueries {
     GraftQuery(
       "e14_ivf_pinned",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val emb = Tables.validEmbeddings(s, d)
-        val (centroids, assigned) =
-          VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
+        val (centroids, assigned) = pinnedIvf(Tables.validEmbeddings(s, d))
         VectorSearch.ivfTopK(assigned, centroids, "vec_id",
           probeId = 0L, k = 10, nprobe = 2)
           .withColumn("cell", col("cell").cast("bigint"))
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM v ORDER BY vec_id ASC LIMIT 8),
+      Some(s"""WITH ${sqlEmbCte("v")},
+        ${sqlPinnedCentroidsCte("v")},
         ac AS (SELECT vec_id, e, cell FROM (
             SELECT v.vec_id, v.e, c.cell,
               row_number() OVER (PARTITION BY v.vec_id
                 ORDER BY ${sqlCos("v.e", "c.ce")} DESC, c.cell ASC) AS rn
             FROM v, c) t WHERE rn = 1),
-        q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-        pc AS (SELECT cell FROM (
-            SELECT c.cell, row_number() OVER (
-                ORDER BY ${sqlCos("c.ce", "qe")} DESC, c.cell ASC) AS rn
-            FROM c, q) t WHERE rn <= 2)
+        ${sqlProbeCte("v")},
+        $sqlProbeCellsCte
         SELECT a.vec_id, ${sqlCos("a.e", "qe")} AS cos_sim,
           CAST(a.cell AS BIGINT) AS cell
         FROM ac a, pc, q
@@ -956,16 +1030,8 @@ object SimQueries {
     GraftQuery(
       "e15_pq_pinned",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
-        val books = VectorSearch.pqTrain(base, "vec_id", "emb",
-          m = 8, k = 16, sample = 16, iters = 0)
+        val base = normalizedEmb(s, d)
+        val books = pinnedPqBooks(base)
         val probe = base.filter(col("vec_id") === 0)
           .select(col("emb").as("a_emb"))
         base
@@ -980,33 +1046,14 @@ object SimQueries {
           .orderBy(col("adc_score").desc, col("b_id").asc)
           .limit(10)
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        b AS (SELECT vec_id, CASE WHEN ${sqlNorm("e")} = 0 THEN e
-            ELSE list_transform(e, x -> x / ${sqlNorm("e")}) END AS e
-          FROM v),
-        cb AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS ci,
-            e AS ce
-          FROM b ORDER BY vec_id ASC LIMIT 16),
-        sub AS (SELECT ci, j,
-            ce[CAST(j*8+1 AS INT):CAST(j*8+8 AS INT)] AS c
-          FROM cb, (SELECT unnest(range(0, 8)) AS j) jj),
-        enc AS (SELECT vec_id, j, ci FROM (
-            SELECT w.vec_id, s.j, s.ci,
-              row_number() OVER (PARTITION BY w.vec_id, s.j ORDER BY
-                (list_sum(list_transform(s.c, x -> x * x))
-                  - 2.0e0 * list_sum(list_transform(list_zip(
-                      w.e[CAST(s.j*8+1 AS INT):CAST(s.j*8+8 AS INT)], s.c),
-                    p -> p[1] * p[2]))) ASC,
-                s.ci ASC) AS rn
-            FROM b w, sub s) t WHERE rn = 1),
+      Some(s"""WITH $sqlNormalizedCtes,
+        ${sqlPinnedPqCtes("b", "e")},
         recon AS (SELECT e.vec_id,
             flatten(list(s.c ORDER BY e.j)) AS r,
             array_to_string(list(e.ci ORDER BY e.j), ',') AS codes_str
           FROM enc e JOIN sub s ON e.j = s.j AND e.ci = s.ci
           GROUP BY 1),
-        q AS (SELECT e AS qe FROM b WHERE vec_id = 0)
+        ${sqlProbeCte("b")}
         SELECT r.vec_id AS b_id, r.codes_str,
           ${sqlDot("qe", "r.r")} AS adc_score
         FROM recon r, q WHERE r.vec_id <> 0
@@ -1037,9 +1084,7 @@ object SimQueries {
     GraftQuery(
       "e16_randproj_recall",
       (s, d) => {
-        val emb = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
+        val emb = embAsDouble(s, d, "emb")
         // Native sign projection (round 21): the array-of-16-dots tree
         // inlined 16 sign-row literals (~16 KB of plan text) and re-read
         // the child array per dot; SignProject is one node, one child
@@ -1047,7 +1092,7 @@ object SimQueries {
         // NearDupSpec's sign-projection test).
         def project(e: Column): Column =
           graft.functions.VectorExprs.signProject(e, rpSigns)
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val probes = emb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"),
             project(col("emb")).as("a_pe"))
         val scored = emb
@@ -1064,34 +1109,14 @@ object SimQueries {
           .withColumn("rn_pr", row_number().over(rankW(col("cos_pr"))))
           .filter(col("rn_full") <= 3 && col("rn_pr") <= 3)
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
+      Some(s"""WITH ${sqlEmbCte("b")},
         pb AS (SELECT vec_id, e, ${sqlRpProj("e")} AS pe FROM b),
-        probes AS (SELECT vec_id AS a_id, e AS ae, pe AS ape FROM pb
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
-        truth AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN pb c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
-        pr AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ape", "c.pe")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN pb c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
-        hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-          FROM truth t JOIN pr a ON t.a_id = a.a_id AND t.b_id = a.b_id
-          GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+        ${sqlProbesCte("e AS ae, pe AS ape", "pb")},
+        ${sqlTruthCte("pb")},
+        ${sqlTop3Cte("pr", sqlCos("p.ape", "c.pe"), "pb")},
+        ${sqlRecallTail("pr")}""")),
 
     // ---- IVF recall-vs-nprobe tuning sweep -------------------------------
     // The curve an index operator reads before fixing nprobe: recall@10
@@ -1108,32 +1133,26 @@ object SimQueries {
     // embedding), and each sweep point + the exact truth is a bounded
     // TakeOrderedAndProject off that cache — never a corpus-sized window
     // (a global row_number rank would funnel the corpus through one
-    // reducer). The probe-to-centroid ranking is 8 driver-side cosines
-    // (cosineLocal — the production ivfTopK path, cross-engine-validated
-    // by e14's hash match).
+    // reducer). The probe-to-centroid ranking is VectorSearch.rankCells
+    // (the production ivfTopK path, cross-engine-validated by e14's hash
+    // match).
     GraftQuery(
       "e17_nprobe_sweep",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val emb = Tables.validEmbeddings(s, d)
-        val (centroids, assigned) =
-          VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
-        val probeRows = assigned.filter(col("vec_id") === 0L)
-          .select(col("emb")).head(1)
-        if (centroids.isEmpty || probeRows.isEmpty) {
+        val (centroids, assigned) = pinnedIvf(Tables.validEmbeddings(s, d))
+        val probe = VectorSearch.probeVector(assigned, "vec_id", 0L)
+        if (centroids.isEmpty || probe.isEmpty) {
           import s.implicits._
           Seq.empty[(Int, Long, Double)]
             .toDF("nprobe", "n_hit", "recall_at_10")
         } else {
-          val probeVec = probeRows.head.getSeq[Double](0)
+          val probeVec = probe.get
           // cell → 1-based rank by probe-centroid cosine (ties to the
           // lower cell, exactly ivfTopK's ordering)
-          val rankByCell: Seq[Long] = centroids.zipWithIndex
-            .map { case (c, i) => (VectorSearch.cosineLocal(probeVec, c), i) }
-            .sortBy { case (sc, i) => (-sc, i) }
-            .zipWithIndex
-            .map { case ((_, cell), r) => cell -> (r + 1).toLong }
-            .sortBy(_._1).map(_._2)
+          val rankByCell: Seq[Long] =
+            VectorSearch.rankCells(probeVec, centroids).zipWithIndex
+              .map { case (cell, r) => cell -> (r + 1).toLong }
+              .sortBy(_._1).map(_._2)
           // shared barrier (reliable checkpoint when a dir is configured)
           val scored = graft.operators.Checkpoints.barrier(
             assigned.filter(col("vec_id") =!= 0L)
@@ -1157,18 +1176,14 @@ object SimQueries {
                 .as("recall_at_10"))
         }
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM v ORDER BY vec_id ASC LIMIT 8),
+      Some(s"""WITH ${sqlEmbCte("v")},
+        ${sqlPinnedCentroidsCte("v")},
         ac AS (SELECT vec_id, e, cell FROM (
             SELECT v.vec_id, v.e, c.cell,
               row_number() OVER (PARTITION BY v.vec_id
                 ORDER BY ${sqlCos("v.e", "c.ce")} DESC, c.cell ASC) AS rn
             FROM v, c) t WHERE rn = 1),
-        q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+        ${sqlProbeCte("v")},
         cr AS (SELECT cell, row_number() OVER (
               ORDER BY ${sqlCos("ce", "qe")} DESC, cell ASC) AS crank
           FROM c, q),
@@ -1222,8 +1237,7 @@ object SimQueries {
         val emb = Tables.validEmbeddings(s, d)
           .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
             col("label"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val probes = emb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"),
             col("label").as("a_label"))
         val w = Window.partitionBy(col("a_id"))
@@ -1246,9 +1260,7 @@ object SimQueries {
       Some(s"""WITH b AS (SELECT vec_id, label,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
         FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, label AS a_label, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+        ${sqlProbesCte("label AS a_label, e AS ae")},
         nn AS (SELECT a_label, b_label FROM (
           SELECT p.a_id, p.a_label, c.label AS b_label,
             row_number() OVER (PARTITION BY p.a_id
@@ -1279,28 +1291,21 @@ object SimQueries {
     GraftQuery(
       "e19_ivfpq_topk",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
+        val base = normalizedEmb(s, d)
         val n = ivfCorpusSize(s, d)
         val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
         val (centroids, books, index) = VectorSearch.ivfPqIndex(
           base, "vec_id", "emb", kCells = cells, m = 8, k = 16)
-        val probeRows = base.filter(col("vec_id") === 0L)
-          .select(col("emb")).head(1)
-        if (probeRows.isEmpty) // probe absent (empty corpus): zero rows,
-          index                // correct schema — the ivfTopK guard
-            .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
-              lit(0.0).as("adc_score"))
-            .filter(lit(false))
-        else VectorSearch.ivfPqTopK(index, centroids, books,
-          probeRows.head.getSeq[Double](0), "vec_id", k = 10,
-          nprobe = math.max(2, cells / 8), excludeId = 0L)
+        VectorSearch.probeVector(base, "vec_id", 0L) match {
+          case None => // probe absent (empty corpus): zero rows, correct
+            index      // schema — the ivfTopK guard
+              .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
+                lit(0.0).as("adc_score"))
+              .filter(lit(false))
+          case Some(probeVec) => VectorSearch.ivfPqTopK(index, centroids,
+            books, probeVec, "vec_id", k = 10,
+            nprobe = math.max(2, cells / 8), excludeId = 0L)
+        }
       },
       None),
 
@@ -1323,85 +1328,38 @@ object SimQueries {
     GraftQuery(
       "e20_ivfpq_pinned",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
-        val (centroids, books, index) = VectorSearch.ivfPqIndex(
-          base, "vec_id", "emb", kCells = 8, m = 8, k = 16,
-          iters = 0, sample = 16, pqIters = 0)
-        val probeRows = base.filter(col("vec_id") === 0L)
-          .select(col("emb")).head(1)
-        if (probeRows.isEmpty)
-          index
-            .select(col("vec_id").as("b_id"),
-              col("cell").cast("bigint").as("cell"),
-              lit("").as("codes_str"), lit(0.0).as("adc_score"))
-            .filter(lit(false))
-        else {
-          val probeVec = probeRows.head.getSeq[Double](0)
-          val probeCells = centroids.zipWithIndex
-            .map { case (c, i) => (VectorSearch.cosineLocal(probeVec, c), i) }
-            .sortBy { case (sc, i) => (-sc, i) }.take(2).map(_._2)
-          index
-            .filter(col("cell").isin(probeCells: _*) &&
-              col("vec_id") =!= 0L)
-            .select(col("vec_id").as("b_id"),
-              col("cell").cast("bigint").as("cell"),
-              array_join(col("codes"), ",").as("codes_str"),
-              dot(typedlit(probeVec),
-                VectorSearch.pqReconstructInCell(col("codes"), col("cell"),
-                  centroids, books)).as("adc_score"))
-            .orderBy(col("adc_score").desc, col("b_id").asc)
-            .limit(10)
+        val base = normalizedEmb(s, d)
+        val (centroids, books, index) = pinnedIvfPq(base)
+        VectorSearch.probeVector(base, "vec_id", 0L) match {
+          case None =>
+            index
+              .select(col("vec_id").as("b_id"),
+                col("cell").cast("bigint").as("cell"),
+                lit("").as("codes_str"), lit(0.0).as("adc_score"))
+              .filter(lit(false))
+          case Some(probeVec) =>
+            val probeCells = VectorSearch.rankCells(probeVec, centroids).take(2)
+            index
+              .filter(col("cell").isin(probeCells: _*) &&
+                col("vec_id") =!= 0L)
+              .select(col("vec_id").as("b_id"),
+                col("cell").cast("bigint").as("cell"),
+                array_join(col("codes"), ",").as("codes_str"),
+                dot(typedlit(probeVec),
+                  VectorSearch.pqReconstructInCell(col("codes"), col("cell"),
+                    centroids, books)).as("adc_score"))
+              .orderBy(col("adc_score").desc, col("b_id").asc)
+              .limit(10)
         }
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        b AS (SELECT vec_id, CASE WHEN ${sqlNorm("e")} = 0 THEN e
-            ELSE list_transform(e, x -> x / ${sqlNorm("e")}) END AS e
-          FROM v),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM b ORDER BY vec_id ASC LIMIT 8),
-        ac AS (SELECT vec_id, e, cell, ce FROM (
-            SELECT w.vec_id, w.e, c.cell, c.ce,
-              row_number() OVER (PARTITION BY w.vec_id
-                ORDER BY ${sqlCos("w.e", "c.ce")} DESC, c.cell ASC) AS rn
-            FROM b w, c) t WHERE rn = 1),
-        res AS (SELECT vec_id, cell, ce,
-            list_transform(list_zip(e, ce), p -> p[1] - p[2]) AS r
-          FROM ac),
-        cb AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS ci,
-            r AS cr
-          FROM res ORDER BY vec_id ASC LIMIT 16),
-        sub AS (SELECT ci, j,
-            cr[CAST(j*8+1 AS INT):CAST(j*8+8 AS INT)] AS c
-          FROM cb, (SELECT unnest(range(0, 8)) AS j) jj),
-        enc AS (SELECT vec_id, j, ci FROM (
-            SELECT w.vec_id, s.j, s.ci,
-              row_number() OVER (PARTITION BY w.vec_id, s.j ORDER BY
-                (list_sum(list_transform(s.c, x -> x * x))
-                  - 2.0e0 * list_sum(list_transform(list_zip(
-                      w.r[CAST(s.j*8+1 AS INT):CAST(s.j*8+8 AS INT)], s.c),
-                    p -> p[1] * p[2]))) ASC,
-                s.ci ASC) AS rn
-            FROM res w, sub s) t WHERE rn = 1),
+      Some(s"""WITH $sqlPinnedIvfPqCtes,
         recon AS (SELECT e.vec_id,
             flatten(list(s.c ORDER BY e.j)) AS rr,
             array_to_string(list(e.ci ORDER BY e.j), ',') AS codes_str
           FROM enc e JOIN sub s ON e.j = s.j AND e.ci = s.ci
           GROUP BY 1),
-        q AS (SELECT e AS qe FROM b WHERE vec_id = 0),
-        pc AS (SELECT cell FROM (
-            SELECT c.cell, row_number() OVER (
-                ORDER BY ${sqlCos("c.ce", "qe")} DESC, c.cell ASC) AS rn
-            FROM c, q) t WHERE rn <= 2)
+        ${sqlProbeCte("b")},
+        $sqlProbeCellsCte
         SELECT a.vec_id AS b_id, CAST(a.cell AS BIGINT) AS cell,
           rc.codes_str,
           ${sqlDot("qe",
@@ -1431,86 +1389,39 @@ object SimQueries {
     GraftQuery(
       "e21_ivfpq_rerank",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
-        val (centroids, books, index) = VectorSearch.ivfPqIndex(
-          base, "vec_id", "emb", kCells = 8, m = 8, k = 16,
-          iters = 0, sample = 16, pqIters = 0)
-        val probeRows = base.filter(col("vec_id") === 0L)
-          .select(col("emb")).head(1)
-        if (probeRows.isEmpty)
-          base.select(col("vec_id").as("b_id"), lit(0.0).as("cos_sim"),
-            lit(0.0).as("adc_score")).filter(lit(false))
-        else {
-          val probeVec = probeRows.head.getSeq[Double](0)
-          val probeCells = centroids.zipWithIndex
-            .map { case (c, i) => (VectorSearch.cosineLocal(probeVec, c), i) }
-            .sortBy { case (sc, i) => (-sc, i) }.take(2).map(_._2)
-          val adcTop = index
-            .filter(col("cell").isin(probeCells: _*) &&
-              col("vec_id") =!= 0L)
-            .select(col("vec_id").as("b_id"),
-              dot(typedlit(probeVec),
-                VectorSearch.pqReconstructInCell(col("codes"), col("cell"),
-                  centroids, books)).as("adc_score"))
-            .orderBy(col("adc_score").desc, col("b_id").asc)
-            .limit(30)
-          base.select(col("vec_id").as("b_id"), col("emb"))
-            .join(adcTop, "b_id")
-            .select(col("b_id"),
-              cosine(col("emb"), typedlit(probeVec)).as("cos_sim"),
-              col("adc_score"))
-            .orderBy(col("cos_sim").desc, col("b_id").asc)
-            .limit(10)
+        val base = normalizedEmb(s, d)
+        val (centroids, books, index) = pinnedIvfPq(base)
+        VectorSearch.probeVector(base, "vec_id", 0L) match {
+          case None =>
+            base.select(col("vec_id").as("b_id"), lit(0.0).as("cos_sim"),
+              lit(0.0).as("adc_score")).filter(lit(false))
+          case Some(probeVec) =>
+            val probeCells = VectorSearch.rankCells(probeVec, centroids).take(2)
+            val adcTop = index
+              .filter(col("cell").isin(probeCells: _*) &&
+                col("vec_id") =!= 0L)
+              .select(col("vec_id").as("b_id"),
+                dot(typedlit(probeVec),
+                  VectorSearch.pqReconstructInCell(col("codes"), col("cell"),
+                    centroids, books)).as("adc_score"))
+              .orderBy(col("adc_score").desc, col("b_id").asc)
+              .limit(30)
+            base.select(col("vec_id").as("b_id"), col("emb"))
+              .join(adcTop, "b_id")
+              .select(col("b_id"),
+                cosine(col("emb"), typedlit(probeVec)).as("cos_sim"),
+                col("adc_score"))
+              .orderBy(col("cos_sim").desc, col("b_id").asc)
+              .limit(10)
         }
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        b AS (SELECT vec_id, CASE WHEN ${sqlNorm("e")} = 0 THEN e
-            ELSE list_transform(e, x -> x / ${sqlNorm("e")}) END AS e
-          FROM v),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM b ORDER BY vec_id ASC LIMIT 8),
-        ac AS (SELECT vec_id, e, cell, ce FROM (
-            SELECT w.vec_id, w.e, c.cell, c.ce,
-              row_number() OVER (PARTITION BY w.vec_id
-                ORDER BY ${sqlCos("w.e", "c.ce")} DESC, c.cell ASC) AS rn
-            FROM b w, c) t WHERE rn = 1),
-        res AS (SELECT vec_id, cell, ce,
-            list_transform(list_zip(e, ce), p -> p[1] - p[2]) AS r
-          FROM ac),
-        cb AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS ci,
-            r AS cr
-          FROM res ORDER BY vec_id ASC LIMIT 16),
-        sub AS (SELECT ci, j,
-            cr[CAST(j*8+1 AS INT):CAST(j*8+8 AS INT)] AS c
-          FROM cb, (SELECT unnest(range(0, 8)) AS j) jj),
-        enc AS (SELECT vec_id, j, ci FROM (
-            SELECT w.vec_id, s.j, s.ci,
-              row_number() OVER (PARTITION BY w.vec_id, s.j ORDER BY
-                (list_sum(list_transform(s.c, x -> x * x))
-                  - 2.0e0 * list_sum(list_transform(list_zip(
-                      w.r[CAST(s.j*8+1 AS INT):CAST(s.j*8+8 AS INT)], s.c),
-                    p -> p[1] * p[2]))) ASC,
-                s.ci ASC) AS rn
-            FROM res w, sub s) t WHERE rn = 1),
+      Some(s"""WITH $sqlPinnedIvfPqCtes,
         recon AS (SELECT e.vec_id,
             flatten(list(s.c ORDER BY e.j)) AS rr
           FROM enc e JOIN sub s ON e.j = s.j AND e.ci = s.ci
           GROUP BY 1),
-        q AS (SELECT e AS qe FROM b WHERE vec_id = 0),
-        pc AS (SELECT cell FROM (
-            SELECT c.cell, row_number() OVER (
-                ORDER BY ${sqlCos("c.ce", "qe")} DESC, c.cell ASC) AS rn
-            FROM c, q) t WHERE rn <= 2),
+        ${sqlProbeCte("b")},
+        $sqlProbeCellsCte,
         adc AS (SELECT a.vec_id AS b_id,
             ${sqlDot("qe",
               "list_transform(list_zip(a.ce, rc.rr), p -> p[1] + p[2])")}
@@ -1548,8 +1459,7 @@ object SimQueries {
     GraftQuery(
       "e22_sq8_recall",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
+        val e = embAsDouble(s, d, "xs")
         val code = (x: Column) =>
           greatest(lit(0L), least(lit(255L),
             floor((x - col("mn")) * 256.0 / col("scl"))))
@@ -1562,8 +1472,7 @@ object SimQueries {
               .otherwise(transform(col("xs"), x =>
                 col("mn") + (code(x).cast("double") + 0.5) *
                   col("scl") / 256.0)).as("b_deq"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = e.filter(col("vec_id") % mod === 0)
+        val probes = e.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"))
         def rankW(c: Column) = Window.partitionBy(col("a_id"))
           .orderBy(c.desc, col("b_id").asc)
@@ -1576,14 +1485,9 @@ object SimQueries {
           .withColumn("rn_sq", row_number().over(rankW(col("cos_sq"))))
           .filter(col("rn_full") <= 3 && col("rn_sq") <= 3)
           .groupBy(col("a_id")).agg(count(lit(1)).as("n_hit"))
-        probes.select(col("a_id")).join(hits, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, hits)
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
+      Some(s"""WITH ${sqlEmbCte("b")},
         dq AS (SELECT vec_id AS b_id, e AS be,
             CASE WHEN scl = 0 THEN list_transform(e, x -> mn)
               ELSE list_transform(e, x -> mn +
@@ -1592,25 +1496,14 @@ object SimQueries {
                   + 0.5) * scl / 256.0) END AS bq
           FROM (SELECT vec_id, e, list_min(e) AS mn,
               list_max(e) - list_min(e) AS scl FROM b) s),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
-        truth AS (SELECT a_id, b_id FROM (
-          SELECT p.a_id, c.vec_id AS b_id,
-            row_number() OVER (PARTITION BY p.a_id
-              ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rn
-          FROM probes p JOIN b c ON p.a_id <> c.vec_id) t WHERE rn <= 3),
+        ${sqlProbesCte()},
+        ${sqlTruthCte()},
         sq AS (SELECT a_id, b_id FROM (
           SELECT p.a_id, c.b_id,
             row_number() OVER (PARTITION BY p.a_id
               ORDER BY ${sqlCos("p.ae", "c.bq")} DESC, c.b_id ASC) AS rn
           FROM probes p JOIN dq c ON p.a_id <> c.b_id) t WHERE rn <= 3),
-        hits AS (SELECT t.a_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-          FROM truth t JOIN sq a ON t.a_id = a.a_id AND t.b_id = a.b_id
-          GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+        ${sqlRecallTail("sq")}""")),
 
     // ---- filtered ANN: post-filter recall vs the pre-filter truth --------
     // The filtered-search design question every deployed vector store
@@ -1644,8 +1537,7 @@ object SimQueries {
           .filter(col("label").isNotNull)
           .select(col("vec_id"), asDouble(col("embedding")).as("xs"),
             col("label"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = e.filter(col("vec_id") % mod === 0)
+        val probes = e.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"),
             col("label").as("a_label"))
         def rankW(c: Column) = Window.partitionBy(col("a_id"))
@@ -1667,18 +1559,13 @@ object SimQueries {
           .agg(sum(when(col("is_post"), 1L).otherwise(0L)).as("n_post"),
             sum(when(col("is_post") && col("rn_pre") <= 3, 1L).otherwise(0L))
               .as("n_hit"))
-        probes.select(col("a_id")).join(agg, Seq("a_id"), "left")
-          .select(col("a_id"),
-            coalesce(col("n_post"), lit(0L)).cast("bigint").as("n_post"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, agg,
+          coalesce(col("n_post"), lit(0L)).cast("bigint").as("n_post"))
       },
       Some(s"""WITH b AS (SELECT vec_id,
           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e, label
         FROM embeddings WHERE $sqlValidEmb AND label IS NOT NULL),
-        probes AS (SELECT vec_id AS a_id, e AS ae, label AS al FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+        ${sqlProbesCte("e AS ae, label AS al")},
         scored AS (SELECT p.a_id, p.al, c.vec_id AS b_id, c.label AS bl,
             ${sqlCos("p.ae", "c.e")} AS cos,
             row_number() OVER (PARTITION BY p.a_id
@@ -1788,13 +1675,11 @@ object SimQueries {
     GraftQuery(
       "e25_matryoshka_rerank",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
+        val e = embAsDouble(s, d, "xs")
         // Prefix slices per ROW, not per candidate pair (the e09/e16
         // per-row projection pattern — same values, evaluation point
         // below the crossJoin).
-        val probes = e.filter(col("vec_id") % mod === 0)
+        val probes = e.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"),
             slice(col("xs"), 1, TruncDims).as("a_tr"))
         def rankW(c: Column) = Window.partitionBy(col("a_id"))
@@ -1815,17 +1700,10 @@ object SimQueries {
           .groupBy(col("a_id"))
           .agg(sum(when(col("is_final") && col("rn_full") <= 3, 1L)
             .otherwise(0L)).as("n_hit"))
-        probes.select(col("a_id")).join(agg, Seq("a_id"), "left")
-          .select(col("a_id"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, agg)
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte()},
         scored AS (SELECT p.a_id, c.vec_id AS b_id,
             ${sqlCos("p.ae", "c.e")} AS cos_full,
             ${sqlCos(s"p.ae[1:$TruncDims]", s"c.e[1:$TruncDims]")} AS cos_pre
@@ -1845,9 +1723,7 @@ object SimQueries {
               AND rn_coarse <= 12 AND rn_full <= 3 THEN 1 ELSE 0 END)
               AS BIGINT) AS n_hit
           FROM rr GROUP BY 1)
-        SELECT p.a_id,
-          CAST(coalesce(h.n_hit, 0) AS DOUBLE) / 3.0 AS recall_at_3
-        FROM probes p LEFT JOIN hits h ON p.a_id = h.a_id""")),
+        $sqlRecallSelect""")),
 
     // ---- over-fetch tuning sweep for the two-tier search -----------------
     // e25 fixes the over-fetch at 12 (4×); this sweeps K ∈ {3, 6, 12,
@@ -1871,13 +1747,11 @@ object SimQueries {
       "e26_overfetch_sweep",
       (s, d) => {
         val ks = Seq(3, 6, 12, 24)
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
+        val e = embAsDouble(s, d, "xs")
         // Prefix slices per ROW, not per candidate pair (the e09/e16
         // per-row projection pattern — same values, evaluation point
         // below the crossJoin).
-        val probes = e.filter(col("vec_id") % mod === 0)
+        val probes = e.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"),
             slice(col("xs"), 1, TruncDims).as("a_tr"))
         def rankW(c: Column) = Window.partitionBy(col("a_id"))
@@ -1910,12 +1784,8 @@ object SimQueries {
           .select(col("a_id"), col("s.k").as("k_overfetch"),
             (col("s.nh").cast("double") / lit(3.0)).as("recall_at_3"))
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte()},
         scored AS (SELECT p.a_id, c.vec_id AS b_id,
             ${sqlCos("p.ae", "c.e")} AS cos_full,
             ${sqlCos(s"p.ae[1:$TruncDims]", s"c.e[1:$TruncDims]")} AS cos_pre
@@ -1976,11 +1846,8 @@ object SimQueries {
     GraftQuery(
       "e27_tombstone_recall",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = e.filter(col("vec_id") % mod === 0 &&
-            col("vec_id") % 7 =!= 0)
+        val e = embAsDouble(s, d, "xs")
+        val probes = e.filter(probePanel(s, d) && col("vec_id") % 7 =!= 0)
           .select(col("vec_id").as("a_id"), col("xs").as("a_emb"))
         val byAid = Window.partitionBy(col("a_id"))
         val scored = e.select(col("vec_id").as("b_id"), col("xs").as("b_emb"))
@@ -2002,20 +1869,13 @@ object SimQueries {
               .as("n_got"),
             sum(when(col("cand") && col("rn_post") <= 3 &&
                 col("rn_truth") <= 3, 1L).otherwise(0L)).as("n_hit"))
-        probes.select(col("a_id")).join(agg, Seq("a_id"), "left")
-          .select(col("a_id"),
-            coalesce(col("n_tomb_in_12"), lit(0L)).cast("bigint")
-              .as("n_tomb_in_12"),
-            coalesce(col("n_got"), lit(0L)).cast("bigint").as("n_got"),
-            (coalesce(col("n_hit"), lit(0L)).cast("double") / lit(3.0))
-              .as("recall_at_3"))
+        recallAt3(probes, agg,
+          coalesce(col("n_tomb_in_12"), lit(0L)).cast("bigint")
+            .as("n_tomb_in_12"),
+          coalesce(col("n_got"), lit(0L)).cast("bigint").as("n_got"))
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-          list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-        FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0 AND vec_id % 7 <> 0),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte(extra = " AND vec_id % 7 <> 0")},
         scored AS (SELECT p.a_id, c.vec_id AS b_id,
             ${sqlCos("p.ae", "c.e")} AS cos, (c.vec_id % 7 = 0) AS tomb
           FROM probes p JOIN b c ON p.a_id <> c.vec_id),
@@ -2070,8 +1930,7 @@ object SimQueries {
     GraftQuery(
       "e28_centroid_outliers",
       (s, d) => {
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("xs"))
+        val e = embAsDouble(s, d, "xs")
         val means = e.select(posexplode(col("xs")).as(Seq("pos", "x")))
           .groupBy(col("pos"))
           .agg((sum(round(col("x"), 6).cast("decimal(18,6)")).cast("double")
@@ -2209,8 +2068,7 @@ object SimQueries {
       "e30_pair_cos_histogram",
       (s, d) => {
         val w = Window.partitionBy(lit(1))
-        val e = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+        val e = embAsDouble(s, d, "emb")
         val a = e.select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
         val pairs = Seq(1L, 7L, 49L)
           .map(o => a.withColumn("b_id", col("a_id") + lit(o)))
@@ -2286,8 +2144,8 @@ object SimQueries {
         val emb = Tables.validEmbeddings(s, d)
           .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
             col("label"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val panel = probePanel(s, d)
+        val probes = emb.filter(panel)
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
         val w = Window.partitionBy(col("a_id"))
           .orderBy(col("cos_sim").desc, col("b_id").asc)
@@ -2310,8 +2168,7 @@ object SimQueries {
         // id-column count — both bounded construction-time actions of
         // the established e-family class.
         val n = ivfCorpusSize(s, d)
-        val nProbes = Tables.validEmbeddings(s, d)
-          .filter(col("vec_id") % mod === 0).count()
+        val nProbes = Tables.validEmbeddings(s, d).filter(panel).count()
         val total = nProbes * math.min(10L, math.max(n - 1, 0L))
         val hubs = nn.groupBy(col("b_id"))
           .agg(count(lit(1)).as("n_hits"))
@@ -2331,9 +2188,7 @@ object SimQueries {
       Some(s"""WITH b AS (SELECT vec_id, label,
             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
           FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+        ${sqlProbesCte()},
         nn AS (SELECT a_id, b_id FROM (
           SELECT p.a_id, c.vec_id AS b_id,
             row_number() OVER (PARTITION BY p.a_id
@@ -2496,10 +2351,8 @@ object SimQueries {
     GraftQuery(
       "e34_metric_agreement",
       (s, d) => {
-        val emb = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val emb = embAsDouble(s, d, "emb")
+        val probes = emb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
         val wc = Window.partitionBy(col("a_id"))
           .orderBy(col("cos_sim").desc, col("b_id").asc)
@@ -2533,12 +2386,8 @@ object SimQueries {
           .select(col("a_id").as("probe_id"), col("n_overlap"),
             col("jaccard10"), col("mean_overlap"))
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte()},
         sc AS (SELECT p.a_id, c.vec_id AS b_id,
             row_number() OVER (PARTITION BY p.a_id
               ORDER BY ${sqlCos("p.ae", "c.e")} DESC, c.vec_id ASC) AS rc,
@@ -2583,10 +2432,8 @@ object SimQueries {
     GraftQuery(
       "e35_ivf_cell_quality",
       (s, d) => {
-        import graft.operators.VectorSearch
         val emb = Tables.validEmbeddings(s, d)
-        val (centroids, _) =
-          VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
+        val (centroids, _) = pinnedIvf(emb)
         val base = emb.select(col("vec_id"),
           asDouble(col("embedding")).as("emb"))
         if (centroids.isEmpty)
@@ -2627,12 +2474,8 @@ object SimQueries {
                 / col("n_vectors").cast("double"), 6).as("mean_margin"))
         }
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM v ORDER BY vec_id ASC LIMIT 8),
+      Some(s"""WITH ${sqlEmbCte("v")},
+        ${sqlPinnedCentroidsCte("v")},
         sc AS (SELECT v.vec_id, c.cell,
             ${sqlCos("v.e", "c.ce")} AS cs,
             row_number() OVER (PARTITION BY v.vec_id
@@ -2675,10 +2518,8 @@ object SimQueries {
     GraftQuery(
       "e36_range_search",
       (s, d) => {
-        val emb = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        val mod = math.max(20L, ivfCorpusSize(s, d) / 100L)
-        val probes = emb.filter(col("vec_id") % mod === 0)
+        val emb = embAsDouble(s, d, "emb")
+        val probes = emb.filter(probePanel(s, d))
           .select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
         emb.select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
           .crossJoin(broadcast(probes))
@@ -2699,12 +2540,8 @@ object SimQueries {
                 / col("n_in_range").cast("double"), 6)).as("mean_cos"),
             col("max_cos"))
       },
-      Some(s"""WITH b AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        probes AS (SELECT vec_id AS a_id, e AS ae FROM b
-          WHERE vec_id % (SELECT greatest(20, COUNT(*) // 100)
-            FROM embeddings WHERE $sqlValidEmb) = 0),
+      Some(s"""WITH ${sqlEmbCte("b")},
+        ${sqlProbesCte()},
         sc AS (SELECT p.a_id, ${sqlCos("p.ae", "c.e")} AS cs
           FROM probes p JOIN b c ON p.a_id <> c.vec_id),
         g AS (SELECT a_id, CAST(COUNT(*) AS BIGINT) AS n_candidates,
@@ -2752,8 +2589,7 @@ object SimQueries {
           .orderBy(col("score").desc, col("doc_id").asc).limit(50)
           .withColumn("lex_rank", row_number().over(wl).cast("bigint"))
           .select(col("doc_id"), col("lex_rank"))
-        val emb = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+        val emb = embAsDouble(s, d, "emb")
         val probe = emb.filter(col("vec_id") === 0L)
           .select(col("emb").as("q_emb"))
         val wv = Window.partitionBy(lit(1))
@@ -2785,10 +2621,8 @@ object SimQueries {
               AS BIGINT) AS lex_rank
           FROM (SELECT * FROM bm ORDER BY score DESC, doc_id ASC LIMIT 50)
             t),
-        v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
+        ${sqlEmbCte("v")},
+        ${sqlProbeCte("v")},
         vt AS (SELECT doc_id,
             CAST(row_number() OVER (ORDER BY cs DESC, doc_id ASC)
               AS BIGINT) AS vec_rank
@@ -2829,10 +2663,8 @@ object SimQueries {
     GraftQuery(
       "e38_probe_cost_model",
       (s, d) => {
-        import graft.operators.VectorSearch
         val emb = Tables.validEmbeddings(s, d)
-        val (centroids, assigned) =
-          VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
+        val (centroids, assigned) = pinnedIvf(emb)
         if (centroids.isEmpty)
           emb.select(lit(0L).as("nprobe"), lit(0L).as("marginal_cell"),
             lit(0L).as("marginal_cell_size"), lit(0L).as("n_candidates"),
@@ -2866,12 +2698,8 @@ object SimQueries {
                 / col("total").cast("double"), 6).as("corpus_share"))
         }
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM v ORDER BY vec_id ASC LIMIT 8),
+      Some(s"""WITH ${sqlEmbCte("v")},
+        ${sqlPinnedCentroidsCte("v")},
         ac AS (SELECT vec_id, cell FROM (
             SELECT v.vec_id, c.cell,
               row_number() OVER (PARTITION BY v.vec_id
@@ -2879,9 +2707,8 @@ object SimQueries {
             FROM v, c) t WHERE rn = 1),
         sizes AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS cell_size
           FROM ac GROUP BY 1),
-        q AS (SELECT e AS qe FROM v WHERE vec_id = 0),
-        pr AS (SELECT c.cell, row_number() OVER (
-              ORDER BY ${sqlCos("c.ce", "qe")} DESC, c.cell ASC) AS rn
+        ${sqlProbeCte("v")},
+        pr AS (SELECT c.cell, $sqlCellRank AS rn
           FROM c, q),
         j AS (SELECT pr.rn, pr.cell, COALESCE(s.cell_size, 0) AS cell_size
           FROM pr LEFT JOIN sizes s ON pr.cell = s.cell),
@@ -2923,10 +2750,9 @@ object SimQueries {
     GraftQuery(
       "e39_cell_staleness",
       (s, d) => {
-        import graft.operators.{Sketches, VectorSearch}
+        import graft.operators.Sketches
         val emb = Tables.validEmbeddings(s, d)
-        val (centroids, assigned) =
-          VectorSearch.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 0)
+        val (centroids, assigned) = pinnedIvf(emb)
         if (centroids.isEmpty)
           emb.select(lit(0L).as("cell"), lit(0L).as("n_total"),
             lit(0L).as("n_tomb"), lit(0L).as("n_live"),
@@ -2944,12 +2770,8 @@ object SimQueries {
               (col("n_tomb") * 2L > col("n_total")).cast("int")
                 .as("compact_flag"))
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        c AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS cell,
-            e AS ce
-          FROM v ORDER BY vec_id ASC LIMIT 8),
+      Some(s"""WITH ${sqlEmbCte("v")},
+        ${sqlPinnedCentroidsCte("v")},
         ac AS (SELECT vec_id, cell FROM (
             SELECT v.vec_id, c.cell,
               row_number() OVER (PARTITION BY v.vec_id
@@ -2991,16 +2813,8 @@ object SimQueries {
     GraftQuery(
       "e40_pq_distortion",
       (s, d) => {
-        import graft.operators.VectorSearch
-        val raw = Tables.validEmbeddings(s, d)
-          .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-        val base = raw
-          .withColumn("nrm", norm(col("e")))
-          .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-            .otherwise(transform(col("e"), x => x / col("nrm"))))
-          .select(col("vec_id"), col("emb"))
-        val books = VectorSearch.pqTrain(base, "vec_id", "emb",
-          m = 8, k = 16, sample = 16, iters = 0)
+        val base = normalizedEmb(s, d)
+        val books = pinnedPqBooks(base)
         base
           .withColumn("codes", VectorSearch.pqEncode(col("emb"), books))
           .withColumn("recon",
@@ -3022,27 +2836,8 @@ object SimQueries {
               / col("n_vectors").cast("double"), 6).as("mse"),
             col("max_sq_err"))
       },
-      Some(s"""WITH v AS (SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-          FROM embeddings WHERE $sqlValidEmb),
-        b AS (SELECT vec_id, CASE WHEN ${sqlNorm("e")} = 0 THEN e
-            ELSE list_transform(e, x -> x / ${sqlNorm("e")}) END AS e
-          FROM v),
-        cb AS (SELECT row_number() OVER (ORDER BY vec_id ASC) - 1 AS ci,
-            e AS ce
-          FROM b ORDER BY vec_id ASC LIMIT 16),
-        sub AS (SELECT ci, j,
-            ce[CAST(j*8+1 AS INT):CAST(j*8+8 AS INT)] AS c
-          FROM cb, (SELECT unnest(range(0, 8)) AS j) jj),
-        enc AS (SELECT vec_id, j, ci FROM (
-            SELECT w.vec_id, s.j, s.ci,
-              row_number() OVER (PARTITION BY w.vec_id, s.j ORDER BY
-                (list_sum(list_transform(s.c, x -> x * x))
-                  - 2.0e0 * list_sum(list_transform(list_zip(
-                      w.e[CAST(s.j*8+1 AS INT):CAST(s.j*8+8 AS INT)], s.c),
-                    p -> p[1] * p[2]))) ASC,
-                s.ci ASC) AS rn
-            FROM b w, sub s) t WHERE rn = 1),
+      Some(s"""WITH $sqlNormalizedCtes,
+        ${sqlPinnedPqCtes("b", "e")},
         recon AS (SELECT e.vec_id,
             flatten(list(s.c ORDER BY e.j)) AS r
           FROM enc e JOIN sub s ON e.j = s.j AND e.ci = s.ci

@@ -44,6 +44,22 @@ object TextQueries {
          list_transform(range(1, len(toks) - 1), i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
        ELSE CAST([] AS VARCHAR[]) END"""
 
+  /** The non-overlapping 10-token chunks of a column named `toks`, each
+    * joined with single spaces; a trailing partial chunk is dropped and
+    * fewer than 10 tokens give an empty array. ONE definition for the
+    * chunk-dedup family (d22/d37/d57/d79), mirrored by [[sqlChunks10]]. */
+  private def chunks10: org.apache.spark.sql.Column =
+    when(size(col("toks")) >= 10,
+      expr("transform(sequence(0, size(toks) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
+      .otherwise(expr("cast(array() as array<string>)"))
+
+  /** DuckDB mirror of [[chunks10]] (1-based inclusive slices). */
+  private val sqlChunks10: String =
+    """CASE WHEN len(toks) >= 10 THEN
+         list_transform(range(0, len(toks) // 10),
+           i -> array_to_string(toks[i*10 + 1 : i*10 + 10], ' '))
+       ELSE CAST([] AS VARCHAR[]) END"""
+
   /** DuckDB form of TextFunctions.fingerprint — lower → squish → trim →
     * md5. ONE definition: d04/d05/d23 all hash-compare against it, and the
     * lower/squish/trim order is a known cross-engine gotcha. */
@@ -551,10 +567,7 @@ object TextQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
           .withColumn("toks", tokens(col("text")))
-          .withColumn("chunks",
-            when(size(col("toks")) >= 10,
-              expr("transform(sequence(0, size(toks) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
-              .otherwise(expr("cast(array() as array<string>)")))
+          .withColumn("chunks", chunks10)
         // One lineage, no self-join: a groupBy+join-back formulation
         // would recompute the scan→chunk→explode→md5 pipeline once per
         // side (self-join recompute trap). Instead: per-(doc, chunk)
@@ -583,10 +596,7 @@ object TextQueries {
       },
       Some(s"""WITH toks AS (SELECT doc_id, $sqlToks AS toks FROM documents),
         ck AS (SELECT doc_id,
-            CASE WHEN len(toks) >= 10 THEN
-              list_transform(range(0, len(toks) // 10),
-                i -> array_to_string(toks[i*10 + 1 : i*10 + 10], ' '))
-            ELSE CAST([] AS VARCHAR[]) END AS chunks
+            $sqlChunks10 AS chunks
           FROM toks),
         e AS (SELECT doc_id, md5(unnest(chunks)) AS ch FROM ck),
         gl AS (SELECT ch, COUNT(DISTINCT doc_id) AS nd FROM e GROUP BY 1),
@@ -1112,10 +1122,7 @@ object TextQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
           .withColumn("toks", tokens(col("text")))
-          .withColumn("chunks",
-            when(size(col("toks")) >= 10,
-              expr("transform(sequence(0, size(toks) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
-              .otherwise(expr("cast(array() as array<string>)")))
+          .withColumn("chunks", chunks10)
         val occ = docs
           .select(col("doc_id"), posexplode(col("chunks")).as(Seq("pos", "c")))
           .withColumn("ch", md5(col("c")))
@@ -1139,10 +1146,7 @@ object TextQueries {
             coalesce(col("n_dropped"), lit(0L)).as("n_dropped"))
       },
       Some(s"""WITH toks AS (SELECT doc_id, $sqlToks AS toks FROM documents),
-        ck AS (SELECT doc_id, CASE WHEN len(toks) >= 10 THEN
-            list_transform(range(0, len(toks) // 10),
-              i -> array_to_string(toks[i*10 + 1 : i*10 + 10], ' '))
-          ELSE CAST([] AS VARCHAR[]) END AS chunks FROM toks),
+        ck AS (SELECT doc_id, $sqlChunks10 AS chunks FROM toks),
         occ0 AS (SELECT doc_id, unnest(list_transform(range(1, len(chunks) + 1),
             i -> {'pos': i, 'c': chunks[i]})) AS u FROM ck),
         occ AS (SELECT doc_id, u.pos AS pos, u.c AS c, md5(u.c) AS ch
@@ -2275,10 +2279,7 @@ object TextQueries {
       (s, d) => {
         val chunks = Tables.documents(s, d)
           .withColumn("toks", tokens(col("text")))
-          .withColumn("chunks",
-            when(size(col("toks")) >= 10,
-              expr("transform(sequence(0, size(toks) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
-              .otherwise(expr("cast(array() as array<string>)")))
+          .withColumn("chunks", chunks10)
           .select(col("source"), explode(col("chunks")).as("c"))
           .select(col("source"), md5(col("c")).as("ch"))
           .distinct()
@@ -2291,10 +2292,7 @@ object TextQueries {
       Some(s"""WITH toks AS (SELECT doc_id, source, $sqlToks AS toks
           FROM documents),
         ck AS (SELECT doc_id, source,
-            CASE WHEN len(toks) >= 10 THEN
-              list_transform(range(0, len(toks) // 10),
-                i -> array_to_string(toks[i*10 + 1 : i*10 + 10], ' '))
-            ELSE CAST([] AS VARCHAR[]) END AS chunks
+            $sqlChunks10 AS chunks
           FROM toks),
         e AS (SELECT DISTINCT source, md5(unnest(chunks)) AS ch FROM ck)
         SELECT a.source AS src_a, b.source AS src_b,
@@ -3809,10 +3807,7 @@ object TextQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
           .withColumn("toks", tokens(col("text")))
-          .withColumn("chunks",
-            when(size(col("toks")) >= 10,
-              expr("transform(sequence(0, size(toks) div 10 - 1), i -> array_join(slice(toks, i*10+1, 10), ' '))"))
-              .otherwise(expr("cast(array() as array<string>)")))
+          .withColumn("chunks", chunks10)
         val occ = docs
           .select(col("source"), col("doc_id"),
             explode(col("chunks")).as("c"))
@@ -3837,10 +3832,7 @@ object TextQueries {
       Some(s"""WITH toks AS (SELECT doc_id, source, $sqlToks AS toks
           FROM documents),
         ck AS (SELECT doc_id, source,
-            CASE WHEN len(toks) >= 10 THEN
-              list_transform(range(0, len(toks) // 10),
-                i -> array_to_string(toks[i*10 + 1 : i*10 + 10], ' '))
-            ELSE CAST([] AS VARCHAR[]) END AS chunks
+            $sqlChunks10 AS chunks
           FROM toks),
         occ AS (SELECT DISTINCT source, doc_id, md5(unnest(chunks)) AS ch
           FROM ck),

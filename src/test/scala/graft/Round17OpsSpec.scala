@@ -14,14 +14,8 @@ class Round17OpsSpec extends SparkSpec {
     graft.queries.GraftQuery.all.find(_.name == name)
       .getOrElse(sys.error(s"unknown query $name"))
 
-  private def normalized = {
-    val raw = Tables.validEmbeddings(spark, sfDir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("e"))
-    raw.withColumn("nrm", norm(col("e")))
-      .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-        .otherwise(transform(col("e"), x => x / col("nrm"))))
-      .select(col("vec_id"), col("emb"))
-  }
+  private def normalized = VectorSearch.normalized(
+    Tables.validEmbeddings(spark, sfDir), "vec_id", "embedding")
 
   test("e19 IVF-PQ: mean recall@10 beats the scanned-fraction chance floor") {
     // Recall floor vs brute force, framed to survive the fixture: these
