@@ -38,12 +38,12 @@ object GraftSession {
       // so the rule is pure downside. Excluded session-wide.
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // Reliable checkpoints (the CC loop's cluster flavor) are otherwise
-      // never deleted: the loop cleans its per-round files itself, but the
-      // RETURNED frame's files survive until GC — with this flag the
-      // ContextCleaner removes them once the caller drops the frame, so
-      // repeated labelPropagate calls in a long-lived session don't
-      // accumulate one rdd-* dir each on the checkpoint filesystem.
+      // Reliable checkpoints (Checkpoints' flavor when a checkpoint dir is
+      // set) are otherwise never deleted: a released frame's files go at
+      // once, but a frame handed on (a barrier, CC's or GlobalRank's
+      // result) keeps them — with this flag the ContextCleaner removes
+      // them once the caller drops the frame, so a long-lived session
+      // doesn't accumulate one rdd-* dir per call.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
 

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * formulation and the scale-correct shape: the corpus collapses ONCE to
   * (word, count) — a map-side-combinable domain fold, vocabulary-sized
   * regardless of corpus rows — and every merge step then scans only that
-  * bounded table. k steps = k bounded scans + k one-row argmax actions;
-  * the corpus itself is never rescanned.
+  * bounded table. k steps = k bounded scans, each one job: the one-row
+  * argmax action that picks a step's merge also stores the words it
+  * scanned; the corpus itself is never rescanned.
   *
   * Each step is greedy BPE exactly: count symbol pairs weighted by word
   * frequency, take the most frequent pair (ties broken lexicographically
@@ -60,38 +61,42 @@ object Bpe {
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
       .agg(sum(col("cnt")).as("n"))
 
+  /** The most frequent (l, r, count) pair of (syms, cnt) rows — ties
+    * broken by (l asc, r asc) — or None when no word has two symbols. */
+  private def topPair(words: DataFrame): Option[(String, String, Long)] =
+    pairCounts(words)
+      .orderBy(col("n").desc, col("l").asc, col("r").asc)
+      .limit(1).collect().headOption
+      .map(row => (row.getString(0), row.getString(1), row.getLong(2)))
+
   /** Train `k` merges over a (word, cnt) frequency table. Returns the
     * merge table in step order. Each step's top pair count is
     * non-increasing (a new pair (x, lr) only occurs where (x, l) did, so
-    * no count can exceed the maximum just consumed) — spec-asserted. */
+    * no count can exceed the maximum just consumed) — spec-asserted.
+    * Stops early when no adjacent pair is left (a tiny or fully merged
+    * vocabulary): every later step would be the same empty argmax. */
   def train(wordCounts: DataFrame, k: Int): Seq[Merge] = {
-    var words = wordCounts.select(
+    // Each step's words are held by the job that finds the step's merge,
+    // which keeps the fold lineage flat (the table is vocabulary-sized,
+    // so the checkpoint is one tiny write); the previous step's words
+    // are released once the next step's are held.
+    var words = Checkpoints.materialize(wordCounts.select(
       expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))")
         .as("syms"),
-      col("cnt"))
+      col("cnt")))(topPair)
     val merges = Seq.newBuilder[Merge]
     var step = 1
-    var exhausted = false
-    while (step <= k && !exhausted) {
-      val top = pairCounts(words)
-        .orderBy(col("n").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) {
-        // no adjacent pair left (tiny or fully merged vocabulary):
-        // every later step would rerun the same provably empty
-        // pair-count job — stop instead
-        exhausted = true
-      } else {
-        val row = top.head
-        val (l, r, n) = (row.getString(0), row.getString(1), row.getLong(2))
-        merges += Merge(step, l, r, n)
-        // keep the fold lineage flat across steps: the table is
-        // vocabulary-sized, so a local checkpoint is one tiny write
-        words = Checkpoints.barrier(
-          words.select(mergePair(col("syms"), l, r).as("syms"), col("cnt")))
+    try while (step <= k && words.result.isDefined) {
+      val (l, r, n) = words.result.get
+      merges += Merge(step, l, r, n)
+      if (step < k) {
+        val next = Checkpoints.materialize(
+          words.df.select(mergePair(col("syms"), l, r).as("syms"), col("cnt")))(topPair)
+        words.release()
+        words = next
       }
       step += 1
-    }
+    } finally words.release()
     merges.result()
   }
 

@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import org.slf4j.LoggerFactory
 
 /** Distributed connected components by iterative min-label propagation —
@@ -29,20 +27,16 @@ import org.slf4j.LoggerFactory
   * (diameter ≲ 3), so 3-4 rounds in practice, `maxIter` bounds the worst
   * case. Checkpointing cuts each round's lineage — without it the plan
   * doubles per iteration and the job dies re-executing round 1 at round 10.
-  * The flavor is chosen at runtime: when the SparkContext has a checkpoint
-  * directory configured (`sc.setCheckpointDir` — HDFS/object store on a
-  * real cluster), reliable `checkpoint` is used, surviving executor loss
-  * across the long-lived loop; otherwise `localCheckpoint` (executor-local
-  * blocks — fine for local mode and short-lived jobs). In the reliable
-  * flavor the plan is persisted before checkpointing so the checkpoint
-  * write reads cached blocks instead of recomputing the (expensive) edge
-  * pipeline, and each round's checkpoint files are deleted as soon as the
-  * next round is materialized — only the RETURNED frame's blocks/files
-  * survive the call (the caller consumes them). The returned frame's own
-  * storage is freed by the ContextCleaner once the caller drops the
-  * frame: local-checkpoint blocks are tracked cached RDD blocks (cleaned
-  * on GC by default), and reliable checkpoint files are deleted on GC
-  * only when `spark.cleaner.referenceTracking.cleanCheckpoints` is true —
+  * Each round is held by [[Checkpoints.materialize]], so the loop follows
+  * the session's checkpoint flavor (reliable files when a checkpoint
+  * directory is configured, executor-local blocks otherwise), and each
+  * round's frame is released as soon as the next round is materialized —
+  * only the RETURNED frame's blocks/files survive the call (the caller
+  * consumes them). The returned frame's own storage is freed by the
+  * ContextCleaner once the caller drops the frame: local-checkpoint
+  * blocks are tracked cached RDD blocks (cleaned on GC by default), and
+  * reliable checkpoint files are deleted on GC only when
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is true —
   * GraftSession sets it; a session built elsewhere must set it or accept
   * one surviving rdd-* dir per call until application teardown.
   * For billion-edge general graphs with long chains, pass
@@ -72,18 +66,18 @@ object ConnectedComponents {
     // pipeline once per branch inside the distinct's single
     // materialization — the self-join recompute trap in union form
     // (Catalyst does not reuse a subtree across union branches).
-    val e = materializeWith(edges.select(col("src"), col("dst")))(_.count())
+    val e = Checkpoints.materialize(edges.select(col("src"), col("dst")))(_.count())
     // Both orientations, deduped, materialized once — the loop re-reads
     // this frame every round. (Pre-partitioning it on `src` to spare the
     // per-round join shuffle does NOT work: a checkpointed frame's scan
     // reports unknown partitioning — measured on Spark 4.1, the Exchange
     // comes back — so the join's und-side shuffle is paid per round and
     // the broadcast path picks it up instead when labels are small.)
-    val und = materializeWith(
+    val und = Checkpoints.materialize(
       e.df.union(e.df.select(col("dst").as("src"), col("src").as("dst")))
         .distinct())(_.count())
     e.release() // und is materialized; the one-orientation copy is dead
-    var labels = materializeWith(
+    var labels = Checkpoints.materialize(
       vertices.select(col("id"), col("id").as("comp")))(checksum)
     var prev = labels.result
     var iter = 0
@@ -109,12 +103,12 @@ object ConnectedComponents {
       // the self-join: joining the lazy frame against itself would
       // recompute the union+groupBy aggregation on BOTH sides — the same
       // union-branch recompute trap documented at the top of this loop.
-      val next = if (!pointerJumping) materializeWith(prop)(checksum) else {
-        val p = materializeWith(prop)(_.count())
+      val next = if (!pointerJumping) Checkpoints.materialize(prop)(checksum) else {
+        val p = Checkpoints.materialize(prop)(_.count())
         val byId = p.df.select(col("id").as("jid"), col("comp").as("jcomp"))
         val jumped = p.df.join(byId, col("comp") === col("jid"))
           .select(col("id"), col("jcomp").as("comp"))
-        val n = materializeWith(jumped)(checksum)
+        val n = Checkpoints.materialize(jumped)(checksum)
         p.release() // jumped is materialized; the pre-jump table is dead
         n
       }
@@ -137,66 +131,6 @@ object ConnectedComponents {
         "pointerJumping=true (O(log diameter) rounds) for long-chain graphs")
     labels.df
   }
-
-  /** A materialized (lineage-cut) frame plus a `release` that actually
-    * frees its storage. `Dataset.unpersist` is a no-op on checkpointed
-    * frames — it only uncaches CacheManager-registered plans, while
-    * (local)checkpoint blocks are plain RDD blocks — so release goes to
-    * the underlying RDD: unpersist its blocks (local flavor) and delete
-    * its checkpoint files (reliable flavor). */
-  private final case class Materialized[A](df: DataFrame, result: A,
-      release: () => Unit)
-
-  /** Checkpoint `df` lazily, then run `action` — which must compute every
-    * partition (a full aggregate or count) — so the one action job both
-    * produces the caller's result and materializes the checkpoint.
-    *
-    * Reliable flavor (checkpoint dir configured): the plan is persisted
-    * first so the checkpoint-write job (run automatically at the end of
-    * the action job) reads cached blocks instead of recomputing the plan,
-    * and the cache handle is dropped as soon as the write completes —
-    * without this, `checkpoint` executes the plan twice (once for the
-    * action, once for the write), doubling every CC round on a cluster. */
-  private def materializeWith[A](df: DataFrame)(
-      action: DataFrame => A): Materialized[A] = {
-    val sc = df.sparkSession.sparkContext
-    if (sc.getCheckpointDir.isDefined) {
-      val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
-      val cp = cached.checkpoint(eager = false)
-      // finally: a failed action job must still drop the cache handle, or
-      // every aborted run leaks a CacheManager-registered plan for the
-      // life of the session
-      val result =
-        try action(cp) // job computes plan into cache + result;
-                       // checkpoint write then reads the cache
-        finally cached.unpersist(blocking = false)
-      Materialized(cp, result, () => deleteCheckpointFiles(cp))
-    } else {
-      val cp = df.localCheckpoint(eager = false)
-      val result = action(cp) // one job: computes, caches the blocks that
-                              // become the local checkpoint
-      Materialized(cp, result, () => unpersistRdd(cp))
-    }
-  }
-
-  /** The checkpointed RDD behind a just-checkpointed frame (its analyzed
-    * plan is the single LogicalRDD the checkpoint wrapped it in). */
-  private def underlyingRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
-
-  private def unpersistRdd(df: DataFrame): Unit =
-    underlyingRdd(df).foreach(_.unpersist(blocking = false))
-
-  private def deleteCheckpointFiles(df: DataFrame): Unit =
-    for {
-      rdd <- underlyingRdd(df)
-      dir <- rdd.getCheckpointFile
-    } {
-      val path = new org.apache.hadoop.fs.Path(dir)
-      val fs = path.getFileSystem(
-        df.sparkSession.sparkContext.hadoopConfiguration)
-      fs.delete(path, true)
-    }
 
   /** Exact (overflow-proof) sum of labels — the convergence witness. */
   private def checksum(labels: DataFrame): java.math.BigDecimal = {

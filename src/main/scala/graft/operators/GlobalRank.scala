@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 /** Exact global row numbering over a total order — WITHOUT the
@@ -10,37 +11,52 @@ import org.apache.spark.sql.types.LongType
   *
   * Shape: the classic two-pass distributed ranking. `orderBy` produces a
   * RANGE-partitioned total sort (each partition holds a contiguous key
-  * range, sorted); `zipWithIndex` then runs one lightweight count job
-  * over the sorted partitions and assigns each row its partition-prefix
-  * offset + local index — exact, deterministic given a total order (the
-  * caller must include a unique tie-break key), and never concentrates
-  * rows. This is the one legitimate RDD drop-down in the codebase: the
-  * offset scheme needs per-partition imperative indexing that no
-  * DataFrame operator expresses (SPARK-24561's unbounded-window gap).
-  *
-  * Cost: one extra count job over the sorted output (zipWithIndex's
-  * first pass) — the sort itself is the dominant term and is the same
-  * sort any exact ranking needs. Rows leave codegen for the zip pass;
-  * rank consumers downstream re-enter it.
+  * range, sorted), held by [[Checkpoints.materialize]] while one
+  * shuffle-free job counts each partition's rows; each row then takes
+  * its partition-prefix offset + local index ([[numbered]], the engine's
+  * one partition-offset numbering — the tweet sink's dense ids too).
+  * Exact, deterministic given a total order (the caller must include a
+  * unique tie-break key), never concentrates rows, and stays in codegen.
+  * Cost: one extra count job, which also stores the sorted rows.
   */
 object GlobalRank {
 
   /** `df` plus a 1-based `rankCol` long column following `sort`'s total
     * order. `sort` MUST be a total order (include a unique key last).
     *
-    * EAGER: `zipWithIndex` submits its count job at *call* time, so
-    * constructing the returned DataFrame already runs the full sort —
-    * this is not a lazily-planned operator like the rest of the API. */
+    * EAGER: the count job runs at *call* time, so constructing the
+    * returned DataFrame already runs the full sort — this is not a
+    * lazily-planned operator like the rest of the API. The ContextCleaner
+    * frees the sorted rows once the returned frame is unreachable. */
   def withRowNumber(df: DataFrame, sort: Seq[Column],
       rankCol: String = "rn"): DataFrame = {
     require(!df.columns.contains(rankCol),
       s"rank column '$rankCol' collides with an existing column")
-    val sorted = df.orderBy(sort: _*)
-    val schema = sorted.schema.add(rankCol, LongType, nullable = false)
-    val ranked = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    sorted.sparkSession.createDataFrame(ranked, schema)
+    val sorted = Checkpoints.materialize(df.orderBy(sort: _*))(partitionCounts)
+    numbered(sorted.df, sorted.result, base = 0L, rankCol)
+  }
+
+  /** Rows per non-empty partition of `df`, by partition id: one job, no
+    * shuffle. */
+  def partitionCounts(df: DataFrame): Map[Int, Long] = {
+    import df.sparkSession.implicits._
+    df.select(spark_partition_id()).as[Int]
+      .mapPartitions(pids => pids.nextOption().map(p => p -> (1L + pids.size)).iterator)
+      .collect().toMap
+  }
+
+  /** `df` plus `idCol` numbering its rows `base + 1 .. base + n` in
+    * partition, then row order. `df` must be held (its partitions and
+    * row order fixed) and `counts` its [[partitionCounts]]. `base` is
+    * folded into the starts literal, so calls differ only in it. */
+  def numbered(df: DataFrame, counts: Map[Int, Long], base: Long,
+      idCol: String): DataFrame = {
+    val last = counts.keys.maxOption.getOrElse(0)
+    val starts = (0 until last).scanLeft(base)((o, p) => o + counts.getOrElse(p, 0L))
+    val pid = spark_partition_id()
+    val indexInPartition = monotonically_increasing_id() - shiftleft(pid.cast("long"), 33)
+    df.withColumn(idCol,
+      element_at(typedLit(starts.toArray), pid + 1) + indexInPartition + 1L)
   }
 
   /** `df` plus a 1-based `rankCol` AND an exact running total `cumCol`
@@ -51,7 +67,11 @@ object GlobalRank {
     * window. Same two-pass scheme as [[withRowNumber]]: range-sort,
     * then ONE light stats job collecting each partition's (row count,
     * value sum), whose scan-left prefixes seed a per-partition
-    * imperative pass. The sorted RDD is PERSISTED (MEMORY_AND_DISK)
+    * imperative pass. That pass stays on the RDD: a row number is an
+    * offset plus the row's position, which [[numbered]] reads off
+    * `monotonically_increasing_id`, but a running SUM within a partition
+    * has no shuffle-free DataFrame expression — any window that carries
+    * it adds an exchange and a sort over the sorted rows. The sorted RDD is PERSISTED (MEMORY_AND_DISK)
     * across the two jobs: without it the output pass re-runs the range
     * sort (doubling sort cost), and — worse — correctness would rest on
     * the recomputed range partitioning being bitwise-identical across

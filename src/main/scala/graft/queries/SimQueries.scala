@@ -1128,7 +1128,7 @@ object SimQueries {
     //
     // Scale shape: the probed subsets are NESTED (cell_rank ≤ 1 ⊂ ≤ 2 ⊂
     // ≤ 4), so one narrow scan scores cosine + cell_rank for every
-    // vector, localCheckpoints (the d52 barrier — four consumers, one
+    // vector, checkpoints it (the d52 barrier — four consumers, one
     // scan, and the checkpointed rows are 3 scalars/vector, not the
     // embedding), and each sweep point + the exact truth is a bounded
     // TakeOrderedAndProject off that cache — never a corpus-sized window
@@ -2161,7 +2161,7 @@ object SimQueries {
         // min(10, n−1) rows — so it never re-evaluates the expensive
         // probes × corpus lineage as a second consumer (a
         // count-the-frame branch was tried: differently-pruned subtrees
-        // defeat ReuseExchange and the scan ran twice; a localCheckpoint
+        // defeat ReuseExchange and the scan ran twice; a checkpoint
         // barrier was tried too and measured SLOWER, 64× stress
         // 11.5 s → 16.8 s, than just letting the one consumer pipeline).
         // n is the memoized corpus size; the probe count is one pruned

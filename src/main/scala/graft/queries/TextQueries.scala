@@ -1416,7 +1416,7 @@ object TextQueries {
     // every shard gets ⌈n/8⌉±1 docs in a deterministic read order.
     //
     // Scale shape: the q27 lesson applied — exact global rank via
-    // GlobalRank's range-sort + partition-offset zip, NEVER a
+    // GlobalRank's range-sort + partition-offset numbering, NEVER a
     // single-partition row_number window. Sorting on the md5 key is the
     // permutation itself, so the rank consumes the only shuffle the
     // operation fundamentally needs.
@@ -1986,8 +1986,8 @@ object TextQueries {
     // pair expansion is capped; CC shuffles (edge ∪ label) rows per round
     // with map-side min partials; the final rollup is a source-keyed agg
     // with full partials. The gated frame is CHECKPOINTED once
-    // (localCheckpoint — the d27 materialization pattern; a cluster run
-    // uses reliable checkpoint): four branches consume it (shingles,
+    // (Checkpoints.barrier — the d27 materialization pattern; local
+    // blocks, or a reliable checkpoint when a checkpoint dir is set): four branches consume it (shingles,
     // hashes, vertices, gate marks), and without the barrier each branch
     // re-ran the whole gate scan AND the admit filter's pushdown
     // substitution re-tokenized per gram iteration (measured 93 s at
@@ -2397,7 +2397,7 @@ object TextQueries {
     // ≥ 0.5), i.e. the verification bill vs the yield — what you read
     // before paying for a 100 TB candidate-verify stage.
     //
-    // Scale shape: the signature scan runs ONCE behind a localCheckpoint
+    // Scale shape: the signature scan runs ONCE behind a checkpoint barrier
     // (three configs + two sig join-backs would otherwise re-tokenize the
     // corpus five times — the d52 barrier lesson); band buckets carry
     // ONLY doc ids (the d47 rework rule), capped at lshMaxBucket with the

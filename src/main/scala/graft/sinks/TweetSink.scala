@@ -10,10 +10,11 @@ import scala.util.Using
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.slf4j.LoggerFactory
+
+import graft.operators.{Checkpoints, GlobalRank}
 
 /** The `tweet_data` sink contract (SURVEY.md §2.1 S5-S8):
   * declared 8-column schema, sink-assigned surrogate `tweet_id`,
@@ -69,8 +70,8 @@ object TweetSink {
   * tweet_id: dense like SQLite's INTEGER PRIMARY KEY rowids — each batch
   * takes `highWater + 1 .. highWater + n`, one id per row, assigned in
   * parallel: a partition's ids start after the rows of the partitions
-  * before it (the partition-offset scheme of [[graft.operators.GlobalRank]],
-  * here as DataFrame expressions so the write stays in codegen).
+  * before it ([[GlobalRank.numbered]], the engine's one partition-offset
+  * numbering, from the high-water mark; the write stays in codegen).
   *
   * S8: the high-water mark lives in this instance and is advanced after
   * each committed write; any failure drops it. Beside the data, the table
@@ -93,16 +94,19 @@ object TweetSink {
   * read-max-then-write is not atomic. Delivery stays at-least-once: a
   * batch replayed after a failure takes fresh ids.
   *
-  * The batch is held by a lazy local checkpoint, not `persist`. A loaded
-  * batch then runs three jobs: the transform's exchange (run while the
-  * checkpoint is built), the per-partition count (which stores the blocks)
-  * and the write. A persisted plan would add AQE's separate cache-stage job,
-  * and AQE may not coalesce a cached plan's output partitions, so a small
-  * batch would land as one file per shuffle partition; from a checkpoint it
-  * lands as one file. Both passes read the same stored blocks or fail — a
-  * checkpoint is never recomputed, so the counts cannot drift from the
-  * write. The blocks are executor-local: a lost executor fails the batch,
-  * and the S8 reset above makes the next append re-check the table. */
+  * The batch is held by [[Checkpoints.materialize]], not `persist`. By
+  * default that is a lazy local checkpoint, and a loaded batch runs three
+  * jobs: the transform's exchange (run while the checkpoint is built), the
+  * per-partition count (which stores the blocks) and the write. A
+  * persisted plan would add AQE's separate cache-stage job, and AQE may
+  * not coalesce a cached plan's output partitions, so a small batch would
+  * land as one file per shuffle partition; from a checkpoint it lands as
+  * one file. Both passes read the same stored rows or fail — a checkpoint
+  * is never recomputed, so the counts cannot drift from the write. Local
+  * blocks are lost with their executor, which fails the batch (the S8
+  * reset above makes the next append re-check the table); with a
+  * checkpoint directory set on the session the batch is a reliable
+  * checkpoint instead, one more job, and survives executor loss. */
 final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSink {
   import ParquetTweetSink._
 
@@ -162,50 +166,39 @@ final class ParquetTweetSink(spark: SparkSession, path: String) extends TweetSin
       case NonFatal(e) => log.warn(s"could not record the high-water mark in $dir: $e")
     }
 
-  /** One evaluation of `df`, held by a lazy local checkpoint: a per-partition
-    * count, then the write. The count computes the batch and stores its
-    * blocks; the write reads those blocks, so the counts taken by the first
-    * pass hold for the second. S4: an empty batch warns and writes nothing
-    * (main.R:75-78, 114). */
+  /** One evaluation of `df`, held by [[Checkpoints.materialize]]: a
+    * per-partition count, then the write. The count computes the batch and
+    * stores it; the write reads what was stored, so the counts taken by the
+    * first pass hold for the second. S4: an empty batch warns and writes
+    * nothing (main.R:75-78, 114). */
   override def append(df: DataFrame): Unit = {
-    import spark.implicits._
     val target = tablePath
     val dir = Paths.get(target)
-    var batch: DataFrame = null
     try {
       val seeded = mark.getOrElse(seed(dir))
       mark = Some(seeded)
       val base = seeded.highWater
-      batch = df.localCheckpoint(eager = false)
-      // (partition id, rows) for each non-empty partition, without a shuffle
-      val counts = batch.select(spark_partition_id()).as[Int]
-        .mapPartitions(pids => pids.nextOption().map(p => p -> (1L + pids.size)).iterator)
-        .collect().toMap
-      val total = counts.values.sum
-      if (total == 0L) log.warn(s"no tweets after transform; nothing appended to $target")
-      else {
-        // starts(p): the id before partition p's first row. base is folded
-        // in so that only this array literal changes between batches.
-        val starts = (0 to counts.keys.max).scanLeft(base)((o, p) => o + counts.getOrElse(p, 0L))
-        val pid = spark_partition_id()
-        val indexInPartition = monotonically_increasing_id() - shiftleft(pid.cast("long"), 33)
-        batch.withColumn("tweet_id",
-            element_at(typedLit(starts.init.toArray), pid + 1) + indexInPartition + 1L)
-          .select(TweetSink.schema.fieldNames.map(col).toIndexedSeq: _*)
-          .write.mode(SaveMode.Append).parquet(target)
-        // Spark's writer leaves one file per non-empty partition, and
-        // partition 0's file even when it is empty (it carries the schema).
-        val written = counts.size + (if (counts.contains(0)) 0 else 1)
-        val next = Mark(base + total, seeded.files + written)
-        mark = Some(next)
-        writeRecord(dir, next)
-        log.info(s"appended $total rows to tweet_data at $target")
-      }
+      val batch = Checkpoints.materialize(df)(GlobalRank.partitionCounts)
+      try {
+        val counts = batch.result
+        val total = counts.values.sum
+        if (total == 0L) log.warn(s"no tweets after transform; nothing appended to $target")
+        else {
+          GlobalRank.numbered(batch.df, counts, base, "tweet_id")
+            .select(TweetSink.schema.fieldNames.map(col).toIndexedSeq: _*)
+            .write.mode(SaveMode.Append).parquet(target)
+          // Spark's writer leaves one file per non-empty partition, and
+          // partition 0's file even when it is empty (it carries the schema).
+          val written = counts.size + (if (counts.contains(0)) 0 else 1)
+          val next = Mark(base + total, seeded.files + written)
+          mark = Some(next)
+          writeRecord(dir, next)
+          log.info(s"appended $total rows to tweet_data at $target")
+        }
+      } finally batch.release()
     } catch {
       case e: Throwable => mark = None; throw e
-    } finally Option(batch).foreach(_.queryExecution.logical.collectFirst {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false) // the checkpoint's blocks
-    })
+    }
   }
 }
 

@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.slf4j.LoggerFactory
 
 import graft.operators.TweetPipeline
@@ -51,32 +51,37 @@ object TweetStream {
   def processBatch(sink: TweetSink)(batch: DataFrame, batchId: Long): Unit =
     sink.append(TweetPipeline.transform(batch))
 
+  /** The stream both runs share: the bronze file source, the keys filter
+    * and the checkpoint location, each micro-batch handed to `onBatch`. */
+  private def start(spark: SparkSession, rawDataDir: String, keys: Option[String],
+      checkpointDir: String, trigger: Trigger)(
+      onBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    withKeysFilter(TweetSource.readStream(spark, rawDataDir), keys).writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(onBatch)
+      .start()
+
   /** Bounded streaming run: process `chunks` micro-batches (one bronze
     * file each, trigger interval = streamTimeout), then stop — the
     * `for (i in 1:stream_chunks)` loop (main.R:202-212). */
   def run(spark: SparkSession, rawDataDir: String, sink: TweetSink,
       chunks: Int, streamTimeoutSec: Long, keys: Option[String],
       checkpointDir: String): Unit = {
-    val raw = TweetSource.readStream(spark, rawDataDir)
-    val filtered = withKeysFilter(raw, keys)
     val seen = new AtomicInteger(0)
-    val query = filtered.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(streamTimeoutSec * 1000L))
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // Gate HERE, not only in the polling loop below: the stream can
-        // start chunk N+1 before the async stop() lands, and the reference
-        // runs exactly stream_chunks chunks (main.R:202) — so a batch that
-        // arrives after the quota is dropped without touching the sink.
-        if (seen.get >= chunks) log.info(s"batch $id: chunk quota reached; skipping")
-        else {
-          log.info(s"streaming chunk ${seen.get + 1}/$chunks (batch $id)")
-          processBatch(sink)(batch, id)
-          seen.incrementAndGet()
-        }
-        ()
+    val query = start(spark, rawDataDir, keys, checkpointDir,
+        Trigger.ProcessingTime(streamTimeoutSec * 1000L)) { (batch, id) =>
+      // Gate HERE, not only in the polling loop below: the stream can
+      // start chunk N+1 before the async stop() lands, and the reference
+      // runs exactly stream_chunks chunks (main.R:202) — so a batch that
+      // arrives after the quota is dropped without touching the sink.
+      if (seen.get >= chunks) log.info(s"batch $id: chunk quota reached; skipping")
+      else {
+        log.info(s"streaming chunk ${seen.get + 1}/$chunks (batch $id)")
+        processBatch(sink)(batch, id)
+        seen.incrementAndGet()
       }
-      .start()
+    }
     while (query.isActive && seen.get < chunks) query.awaitTermination(250L)
     query.stop()
     log.info(s"stream finished after ${seen.get} chunks")
@@ -86,15 +91,7 @@ object TweetStream {
     * existing bronze file as its own micro-batch, then stops. Used by
     * tests and backfills. */
   def runAvailableNow(spark: SparkSession, rawDataDir: String, sink: TweetSink,
-      keys: Option[String], checkpointDir: String): Unit = {
-    val raw = TweetSource.readStream(spark, rawDataDir)
-    val query = withKeysFilter(raw, keys).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        processBatch(sink)(batch, id)
-      }
-      .start()
-    query.awaitTermination()
-  }
+      keys: Option[String], checkpointDir: String): Unit =
+    start(spark, rawDataDir, keys, checkpointDir, Trigger.AvailableNow())(
+      processBatch(sink)).awaitTermination()
 }

@@ -37,6 +37,37 @@ class GlobalRankSpec extends SparkSpec {
     assert(out == Map(3L -> 1L, 1L -> 2L, 2L -> 3L))
   }
 
+  test("an empty frame gives zero rows and keeps the rank column") {
+    val ranked = GlobalRank.withRowNumber(
+      spark.range(0, 10).toDF("k").filter(col("k") > 100), Seq(col("k").asc))
+    assert(ranked.columns.toSeq == Seq("k", "rn"))
+    assert(ranked.count() == 0L)
+  }
+
+  test("a sort that leaves empty partitions still ranks exactly 1..N") {
+    // 990 of 1,000 rows share the largest key, so the range sort's last
+    // partition (keys above the top bound) is empty; partition
+    // coalescing, which would fold it into a neighbor, is off for this
+    // test. Mutates the shared session conf — safe only because suites
+    // run sequentially.
+    val df = spark.range(0, 1000).select(
+      when(col("id") < 990L, lit(1000L)).otherwise(col("id") - 990L).as("k"),
+      col("id")).repartition(7)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val ranked = GlobalRank.withRowNumber(df, Seq(col("k").asc))
+      val filled = ranked.select(spark_partition_id()).distinct().count()
+      assert(filled < ranked.rdd.getNumPartitions,
+        s"no empty partition: $filled of ${ranked.rdd.getNumPartitions} filled")
+      val got = ranked.select("k", "rn").as[(Long, Long)].collect()
+      assert(got.map(_._2).sorted.toSeq == (1L to 1000L))
+      // the ten distinct small keys take ranks 1..10 in key order
+      assert(got.filter(_._1 < 1000L).forall { case (k, rn) => rn == k + 1 })
+    } finally spark.conf.set(key, saved)
+  }
+
   test("running total: exact prefix sums following the total order, " +
       "independent of input partitioning") {
     val df = spark.range(0, 1000).select(

@@ -308,8 +308,8 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(m06) == 0 && !m06.contains("Join"),
       s"m06 must stay a narrow projection:\n$m06")
     // q27 deciles: the exact global rank must come from the
-    // range-sort + zip scheme (an RDD scan leaf), NEVER a single-
-    // partition window (Window with an empty partition spec)
+    // range-sort + numbering scheme (a checkpoint scan leaf), NEVER a
+    // single-partition window (Window with an empty partition spec)
     val q27 = plan("q27_spend_deciles")
     assert(!q27.contains("Window ") && q27.contains("ExistingRDD"),
       s"q27 must rank via GlobalRank, not a global window:\n$q27")
@@ -386,7 +386,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(shuffles(d40) <= 4,
       s"d40's window chain must stay at <= 4 exchanges:\n$d40")
     // d41 epoch shards: exact global rank via GlobalRank's range-sort +
-    // zip (an ExistingRDD leaf), NEVER a single-partition global window
+    // numbering (an ExistingRDD leaf), NEVER a single-partition global window
     val d41 = plan("d41_epoch_shards")
     assert(!d41.contains("Window ") && d41.contains("ExistingRDD"),
       s"d41 must rank via GlobalRank, not a global window:\n$d41")

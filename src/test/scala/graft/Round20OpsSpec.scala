@@ -76,6 +76,16 @@ class Round20OpsSpec extends SparkSpec {
     assert(distF == localF, s"fixture: distributed $distF vs local $localF")
   }
 
+  test("train releases every step's words: no RDD stays persistent that " +
+      "was not persistent before") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val merges = Bpe.train(sennrich.toDF("word", "cnt"), k = 5)
+    assert(merges.size == 5)
+    val added = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty,
+      s"train left ${added.size} persistent RDDs behind (one per step)")
+  }
+
   test("Sennrich corpus: textbook merge table and encode('lowest') = " +
       "[low, est]") {
     val merges = Bpe.trainLocal(sennrich, k = 5)
