@@ -106,6 +106,88 @@ case class ArrayNorm(child: Expression)
       newChild: Expression): ArrayNorm = copy(child = newChild)
 }
 
+/** Native codegen L2 normalise of one array<double> column — the one-call
+  * form of VectorSearch.normalized's historical tree
+  * `when(nrm = 0, e).otherwise(transform(e, x -> x / nrm))` with
+  * `nrm = array_norm(e)`, whose interpreted lambda ran once per element
+  * and, pushed into a filter (e19's `cell IN (…)`), once more per
+  * reference. Replicates the tree exactly: nrm is [[VectorOps.norm]]'s
+  * strict left-to-right fold, each element is divided by it (`x / nrm`,
+  * the IEEE division Spark's Divide performs for a non-zero divisor), a
+  * zero norm (all ±0.0 elements, or an empty array) passes the array
+  * through unchanged — signed zeros included — and a NULL element makes
+  * the norm NULL, so every element of the result is NULL (`x / NULL`). A
+  * NaN or infinite element divides like any other (NaN ≠ 0). A NULL
+  * array stays NULL. Parity under both expression factories is pinned by
+  * VectorSearchSpec. */
+case class L2Normalize(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  import org.apache.spark.sql.types.ArrayType
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def nullable: Boolean = true
+  override def prettyName: String = "l2_normalize"
+
+  override protected def nullSafeEval(input: Any): Any =
+    VectorOps.l2Normalize(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.l2Normalize($a)")
+
+  override protected def withNewChildInternal(
+      newChild: Expression): L2Normalize = copy(child = newChild)
+}
+
+/** Mean of one double column — one coordinate of a Lloyd-step centroid
+  * update (VectorSearch folds each (cell, coordinate) group with it). A
+  * declarative aggregate of two buffer slots, so Spark plans it as a
+  * codegen'd hash aggregate with map-side partial aggregation.
+  *
+  * The fold is the one the typed Aggregator it replaced ran per
+  * coordinate (that Aggregator's copy is the parity reference in
+  * VectorSearchSpec): the FIRST value of a partial buffer is copied, not
+  * added to 0.0 — Spark's Sum starts at 0.0, and 0.0 + -0.0 = +0.0 would
+  * flip the sign of an all -0.0 coordinate — and every later value is
+  * added in arrival order; merge keeps a side whose count is 0 untouched
+  * and otherwise adds the right sum into the left; the result divides
+  * the sum by the count. A NULL value is skipped, as `avg` skips it; a
+  * group with no value yields NULL. */
+case class CentroidMean(child: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
+    with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.types.LongType
+
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "centroid_mean"
+
+  private lazy val sum = AttributeReference("sum", DoubleType, nullable = false)()
+  private lazy val n = AttributeReference("n", LongType, nullable = false)()
+
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(sum, n)
+  override lazy val initialValues: Seq[Expression] = Seq(Literal(0.0), Literal(0L))
+
+  override lazy val updateExpressions: Seq[Expression] = {
+    val x = Cast(child, DoubleType)
+    Seq(
+      If(IsNull(x), sum, If(EqualTo(n, Literal(0L)), x, Add(sum, x))),
+      If(IsNull(x), n, Add(n, Literal(1L))))
+  }
+
+  override lazy val mergeExpressions: Seq[Expression] = Seq(
+    If(EqualTo(n.left, Literal(0L)), sum.right,
+      If(EqualTo(n.right, Literal(0L)), sum.left, Add(sum.left, sum.right))),
+    Add(n.left, n.right))
+
+  override lazy val evaluateExpression: Expression =
+    If(EqualTo(n, Literal(0L)), Literal(null, DoubleType),
+      Divide(sum, Cast(n, DoubleType)))
+
+  override protected def withNewChildInternal(
+      newChild: Expression): CentroidMean = copy(child = newChild)
+}
+
 /** Nearest-centroid cell id (cosine argmax, ties to the LOWER index) with
   * the centroid matrix embedded as a constructor CONSTANT — the native
   * form of VectorSearch.cellOf's literal tree
@@ -516,6 +598,25 @@ object VectorOps {
     new GenericArrayData(out)
   }
 
+  /** See [[L2Normalize]]: x / norm per element; a zero norm returns the
+    * input itself, a NULL norm (a NULL element) an all-NULL array. */
+  def l2Normalize(a: ArrayData): ArrayData = {
+    val nrm = norm(a)
+    val n = a.numElements()
+    if (nrm == null) new GenericArrayData(new Array[Any](n))
+    else {
+      val d = nrm.doubleValue()
+      if (d == 0.0) a
+      else {
+        val out = new Array[Double](n)
+        var i = 0
+        while (i < n) { out(i) = a.getDouble(i) / d; i += 1 }
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+          .fromPrimitiveArray(out)
+      }
+    }
+  }
+
   /** One-pass L2 norm; see [[ArrayNorm]] for the exact-parity contract. */
   def norm(a: ArrayData): java.lang.Double = {
     val n = a.numElements()
@@ -579,6 +680,17 @@ object VectorExprs {
   /** L2 norm of one array<double> column (native expression). */
   def norm(a: Column): Column =
     GraftSqlBridge.column(ArrayNorm(GraftSqlBridge.expression(a)))
+
+  /** L2-normalised array<double> column, zero vectors passed through
+    * (native expression; see [[L2Normalize]]). */
+  def l2Normalize(a: Column): Column =
+    GraftSqlBridge.column(L2Normalize(GraftSqlBridge.expression(a)))
+
+  /** Mean of a double column, its first value copied rather than added
+    * to 0.0 (native aggregate; see [[CentroidMean]]). */
+  def centroidMean(x: Column): Column =
+    GraftSqlBridge.column(
+      CentroidMean(GraftSqlBridge.expression(x)).toAggregateExpression())
 
   /** Dense ±1 sign projection of an array<double> column (native
     * expression; see [[SignProject]]). */

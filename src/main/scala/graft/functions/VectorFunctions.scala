@@ -1,20 +1,24 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Dense-vector column math over ArrayType columns.
   *
-  * dot, norm and cosine are native Catalyst expressions (VectorExprs),
-  * codegen'd one-pass loops; asDouble is the builtin `transform`. Every
-  * fold accumulates strictly left to right, so double results are
-  * deterministic under any partitioning AND bit-identical to DuckDB's
-  * list_sum in the oracle (verified empirically at sf0.01). No UDFs.
+  * dot, norm, cosine and l2Normalize are native Catalyst expressions
+  * (VectorExprs), codegen'd one-pass loops; asDouble is a `Cast` to
+  * array<double>. Every fold accumulates strictly left to right, so
+  * double results are deterministic under any partitioning AND
+  * bit-identical to DuckDB's list_sum in the oracle (verified empirically
+  * at sf0.01). No UDFs, no lambdas.
   */
 object VectorFunctions {
 
-  /** Widen a float array to double (float→double is exact). */
-  def asDouble(a: Column): Column = transform(a, x => x.cast("double"))
+  /** Widen a float array to double (float→double is exact): one `Cast`,
+    * the same per-element conversion the historical
+    * `transform(a, x -> cast(x as double))` ran, without the lambda. On an
+    * array that is already array<double> the optimizer drops it. */
+  def asDouble(a: Column): Column = a.cast(ArrayType(DoubleType, containsNull = true))
 
   /** Dot product of two equal-length double arrays — the native one-pass
     * expression (VectorExprs.DotProduct); bit-identical to the fold form
@@ -29,6 +33,12 @@ object VectorFunctions {
     * left-to-right accumulation — parity pinned in NearDupSpec) without
     * the two per-row lambda sweeps and the squared-array allocation. */
   def norm(a: Column): Column = VectorExprs.norm(a)
+
+  /** L2-normalised vector, a zero vector passed through unchanged — the
+    * native one-call expression (VectorExprs.L2Normalize); bit-identical
+    * to `when(norm(a) = 0, a).otherwise(transform(a, x => x / norm(a)))`
+    * (parity pinned in VectorSearchSpec). */
+  def l2Normalize(a: Column): Column = VectorExprs.l2Normalize(a)
 
   /** Cosine similarity — the native one-pass expression (VectorExprs);
     * bit-identical to `dot(a,b)/(norm(a)*norm(b))` (strict left-to-right

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -26,49 +26,15 @@ import graft.functions.VectorFunctions._
   *   - sign-bit LSH clustering (`signLshRepresentatives`).
   *
   * The evaluation helpers the e-queries share live here too:
-  * [[normalized]] (the zero-guarded L2 normalise), [[probeVector]] (one
-  * probe row's vector) and [[rankCells]] (the driver-side probe-to-cell
-  * ranking).
+  * [[normalized]] (the zero-guarded L2 normalise), [[probeVector]] and
+  * [[probeVectorFrom]] (one probe row's vector) and [[rankCells]] (the
+  * driver-side probe-to-cell ranking).
   *
   * The quantizers (k centroids, m × k codewords) are driver-side by
   * design — real quantizers are tiny (k ≤ 2^16) next to the vector set;
   * only the assignment, encoding and per-cell scans distribute.
   */
 object VectorSearch {
-
-  /** Typed UDAF: elementwise mean of double arrays (the Lloyd-step
-    * centroid update). Buffer is (running sum, count); merge is
-    * elementwise — associative and commutative, so Spark's partial
-    * aggregation applies map-side. */
-  final case class CentroidBuf(var sum: Array[Double], var n: Long)
-
-  class CentroidAggregator extends Aggregator[Seq[Double], CentroidBuf, Seq[Double]] {
-    override def zero: CentroidBuf = CentroidBuf(Array.emptyDoubleArray, 0L)
-    override def reduce(b: CentroidBuf, a: Seq[Double]): CentroidBuf = {
-      if (b.n == 0L) CentroidBuf(a.toArray, 1L)
-      else {
-        var i = 0
-        while (i < b.sum.length) { b.sum(i) += a(i); i += 1 }
-        b.n += 1; b
-      }
-    }
-    override def merge(x: CentroidBuf, y: CentroidBuf): CentroidBuf = {
-      if (x.n == 0L) y
-      else if (y.n == 0L) x
-      else {
-        var i = 0
-        while (i < x.sum.length) { x.sum(i) += y.sum(i); i += 1 }
-        x.n += y.n; x
-      }
-    }
-    override def finish(b: CentroidBuf): Seq[Double] =
-      if (b.n == 0L) Seq.empty else b.sum.map(_ / b.n).toSeq
-    override def bufferEncoder: Encoder[CentroidBuf] = Encoders.product[CentroidBuf]
-    override def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder()
-  }
-
-  val centroidUdaf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new CentroidAggregator, ExpressionEncoder[Seq[Double]]())
 
   /** Exact cosine top-k of `emb` (array<float/double>) vs the probe row
     * `probeId`. */
@@ -100,26 +66,69 @@ object VectorSearch {
         org.apache.spark.sql.GraftSqlBridge.expression(vec), centroids))
   }
 
-  /** Build the IVF index: deterministic seeds (the k lowest-id vectors),
-    * `iters` Lloyd steps, returns (centroids, assigned) where assigned =
-    * input + `cell` column. */
+  /** Build the IVF index: deterministic seeds (the k lowest-id vectors,
+    * one bounded collect), `iters` Lloyd steps (one codegen'd aggregate
+    * each, see [[cellMeans]]), returns (centroids, assigned) where
+    * assigned = input + `cell` column. */
   def ivfIndex(emb: DataFrame, idCol: String, vecCol: String, k: Int,
       iters: Int = 1): (Seq[Seq[Double]], DataFrame) = {
+    val (centroids, assigned, _) = quantize(emb, idCol, vecCol, k, iters, k)
+    (centroids, assigned)
+  }
+
+  /** [[ivfIndex]]'s build with its one seed collect widened to the `rows`
+    * (at least k) lowest-id (idCol, emb) rows, which it also returns in
+    * ascending id order. */
+  private def quantize(emb: DataFrame, idCol: String, vecCol: String,
+      k: Int, iters: Int, rows: Int)
+      : (Seq[Seq[Double]], DataFrame, Array[Row]) = {
     val base = emb.select(col(idCol), asDouble(col(vecCol)).as("emb"))
-    var centroids: Seq[Seq[Double]] =
-      base.orderBy(col(idCol).asc).limit(k)
-        .select(col("emb")).collect().map(_.getSeq[Double](0)).toSeq
+    val lowest = base.orderBy(col(idCol).asc).limit(math.max(k, rows)).collect()
+    val centroids = lloyd(base, lowest.take(k).map(_.getSeq[Double](1)).toSeq, iters)
+    (centroids, base.withColumn("cell", cellOf(col("emb"), centroids)), lowest)
+  }
+
+  /** `iters` Lloyd steps from `seeds` over `base`'s `emb`: each step
+    * assigns every vector its [[cellOf]] cell and replaces each centroid
+    * by its cell's [[cellMeans]] mean. A cell left empty keeps its
+    * centroid. */
+  private def lloyd(base: DataFrame, seeds: Seq[Seq[Double]],
+      iters: Int): Seq[Seq[Double]] = {
+    var centroids = seeds
     var it = 0
-    while (it < iters) {
-      val assigned = base.withColumn("cell", cellOf(col("emb"), centroids))
-      val updated = assigned.groupBy(col("cell"))
-        .agg(centroidUdaf(col("emb")).as("centroid"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+    while (it < iters && centroids.nonEmpty) {
+      val updated = cellMeans(
+        base.withColumn("cell", cellOf(col("emb"), centroids)),
+        centroids.head.length)
       centroids = centroids.indices.map(i => updated.getOrElse(i, centroids(i)))
       it += 1
     }
-    (centroids, base.withColumn("cell", cellOf(col("emb"), centroids)))
+    centroids
   }
+
+  /** Per `cell` of `assigned`, the elementwise mean of its `dim`-wide
+    * `emb` vectors — one job (two under AQE) and a collect of at most
+    * cells × dim rows. The vectors explode into (cell, coordinate)
+    * groups, each folded by the codegen'd [[graft.functions.CentroidMean]]
+    * in arrival order, map-side first — per coordinate the fold the
+    * typed Aggregator it replaced ran over whole vectors, so the means
+    * are bit-identical to it (VectorSearchSpec). A NULL element counts
+    * as 0.0, as that Aggregator unboxed it; a NULL vector is skipped. */
+  private[graft] def cellMeans(assigned: DataFrame,
+      dim: Int): Map[Int, Seq[Double]] =
+    assigned
+      .select(col("cell"), posexplode(col("emb")).as(Seq("pos", "x")))
+      .filter(col("pos") < dim)
+      .groupBy(col("cell"), col("pos"))
+      .agg(graft.functions.VectorExprs.centroidMean(
+        coalesce(col("x"), lit(0.0))).as("m"))
+      .collect()
+      .groupBy(_.getInt(0))
+      .map { case (cell, rows) =>
+        val v = new Array[Double](dim)
+        rows.foreach(r => v(r.getInt(1)) = r.getDouble(2))
+        cell -> v.toSeq
+      }
 
   /** ANN top-k: probe the `nprobe` cells whose centroids are nearest the
     * query vector; exact cosine within those cells only. */
@@ -145,13 +154,13 @@ object VectorSearch {
     * double and divided elementwise by its norm. A zero vector passes
     * through un-normalised — 0/0 would be a NaN score everywhere
     * downstream (the e01 cosine guard). The input the PQ-family queries
-    * (e13/e15/e19/e20/e21/e40) train and score on. */
+    * (e13/e15/e19/e20/e21/e40) train and score on. One native expression
+    * over one cast ([[graft.functions.L2Normalize]]), bit-identical to the
+    * historical `when(nrm = 0, e).otherwise(transform(e, x -> x / nrm))`
+    * tree, whose interpreted lambda a pushed-down filter re-ran per
+    * reference. */
   def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol), asDouble(col(vecCol)).as("e"))
-      .withColumn("nrm", norm(col("e")))
-      .withColumn("emb", when(col("nrm") === lit(0.0), col("e"))
-        .otherwise(transform(col("e"), x => x / col("nrm"))))
-      .select(col(idCol), col("emb"))
+    df.select(col(idCol), l2Normalize(asDouble(col(vecCol))).as("emb"))
 
   /** The `emb` vector of the row whose `idCol` is `id` — one bounded
     * head(1) job at plan-build time; None when the row is absent (e.g. an
@@ -159,6 +168,19 @@ object VectorSearch {
   def probeVector(df: DataFrame, idCol: String, id: Long): Option[Seq[Double]] =
     df.filter(col(idCol) === id).select(col("emb")).head(1)
       .headOption.map(_.getSeq[Double](0))
+
+  /** [[probeVector]] read from `lowest`, (idCol, emb) rows of `df` that a
+    * lowest-id collect returned in ascending id order (an [[IvfPq]]'s
+    * `lowest`): the head job runs only when those rows cannot tell
+    * whether `id` exists, i.e. none of them is `id` and none is higher. */
+  def probeVectorFrom(df: DataFrame, idCol: String, id: Long,
+      lowest: Seq[Row]): Option[Seq[Double]] = {
+    def idOf(r: Row): Option[Long] =
+      if (r.isNullAt(0)) None else Some(r.getAs[Number](0).longValue)
+    lowest.find(idOf(_).contains(id)).map(_.getSeq[Double](1)).orElse(
+      if (lowest.exists(idOf(_).exists(_ > id))) None
+      else probeVector(df, idCol, id))
+  }
 
   /** Every cell index, nearest first: descending driver-side cosine of
     * `probe` to each centroid, ties to the lower cell — the order the
@@ -231,10 +253,17 @@ object VectorSearch {
     * codeword index. Returns m × (≤k) × (dim/m) codebooks (empty inner
     * seqs on an empty corpus — [[pqEncode]] guards that). */
   def pqTrain(emb: DataFrame, idCol: String, vecCol: String, m: Int,
-      k: Int, sample: Int = 256, iters: Int = 2): Seq[Seq[Seq[Double]]] = {
-    val rows = emb.select(col(idCol), asDouble(col(vecCol)).as("e"))
-      .orderBy(col(idCol).asc).limit(sample)
-      .select(col("e")).collect().map(_.getSeq[Double](0).toArray)
+      k: Int, sample: Int = 256, iters: Int = 2): Seq[Seq[Seq[Double]]] =
+    pqTrainLocal(
+      emb.select(col(idCol), asDouble(col(vecCol)).as("e"))
+        .orderBy(col(idCol).asc).limit(sample)
+        .select(col("e")).collect().map(_.getSeq[Double](0).toArray),
+      m, k, iters)
+
+  /** [[pqTrain]]'s driver-side training over already-collected sample
+    * vectors, in id order. */
+  private def pqTrainLocal(rows: Array[Array[Double]], m: Int, k: Int,
+      iters: Int): Seq[Seq[Seq[Double]]] = {
     if (rows.isEmpty) return Seq.fill(m)(Seq.empty)
     val dim = rows.head.length
     // A non-divisible split would silently drop the trailing dims and make
@@ -348,26 +377,36 @@ object VectorSearch {
   // paper's measured reason IVFADC beats IVF+flat-PQ at equal bytes.
   // ---------------------------------------------------------------------
 
+  /** An IVF-PQ index ([[ivfPqIndex]]): the coarse centroids, the residual
+    * PQ codebooks, the (idCol, cell, codes) frame, and the build's one
+    * collect — the max(kCells, sample) lowest-id (idCol, emb) rows in
+    * ascending id order, from which [[probeVectorFrom]] reads a probe. */
+  final case class IvfPq(centroids: Seq[Seq[Double]],
+      books: Seq[Seq[Seq[Double]]], index: DataFrame, lowest: Seq[Row])
+
   /** Build the composed index: coarse quantizer ([[ivfIndex]]) → residual
-    * per vector (one narrow zip_with against the centroid literal — no
-    * join) → PQ codebooks trained on the `sample` lowest-id RESIDUALS
+    * per vector (one native SubCentroid against the centroid constants —
+    * no join) → PQ codebooks trained on the `sample` lowest-id RESIDUALS
     * (driver-side, bounded by contract like [[pqTrain]]) → per-vector
-    * codes. Returns (centroids, books, index) where index =
-    * (idCol, cell, codes) — the complete 100 TB layout: ~1+m bytes of
-    * index state per vector, raw vectors never needed again at query
-    * time. Deterministic end to end (lowest-id seeds everywhere). */
+    * codes. The index is (idCol, cell, codes) — the complete 100 TB
+    * layout: ~1+m bytes of index state per vector, raw vectors never
+    * needed again at query time. Deterministic end to end (lowest-id seeds
+    * everywhere).
+    *
+    * ONE bounded collect of the max(kCells, sample) lowest-id vectors
+    * serves the seeds and the PQ sample: the sample's residuals are
+    * computed on the driver with the kernels the native expressions call
+    * (VectorOps.nearestCentroidCos/subCentroid), so they equal the index's
+    * own. The build's jobs are that collect plus one aggregate per Lloyd
+    * step. */
   def ivfPqIndex(emb: DataFrame, idCol: String, vecCol: String,
       kCells: Int, m: Int, k: Int, iters: Int = 1, sample: Int = 256,
-      pqIters: Int = 2)
-      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) = {
-    val (centroids, assigned) = ivfIndex(emb, idCol, vecCol, kCells, iters)
-    // Empty quantizer (empty corpus): cellOf is the LITERAL -1, so an
-    // element_at(..., cell+1) would constant-fold to index 0 and throw at
-    // plan time even over zero rows — skip the (row-free) subtraction.
-    // Native residual (see graft.functions.SubCentroid): the zip_with
-    // form carried the centroid matrix as an inline literal — the last
-    // large constant in the IVF-PQ plans after the round-21 quantizer
-    // expressions — and dispatched its lambda per element.
+      pqIters: Int = 2): IvfPq = {
+    val (centroids, assigned, lowest) =
+      quantize(emb, idCol, vecCol, kCells, iters, sample)
+    // Empty quantizer (empty corpus): cellOf is the LITERAL -1, so a
+    // residual against centroid -1 would fail — skip the (row-free)
+    // subtraction.
     val resCol =
       if (centroids.isEmpty) col("emb")
       else org.apache.spark.sql.GraftSqlBridge.column(
@@ -375,12 +414,22 @@ object VectorSearch {
           org.apache.spark.sql.GraftSqlBridge.expression(col("emb")),
           org.apache.spark.sql.GraftSqlBridge.expression(col("cell")),
           centroids))
-    val withRes = assigned.withColumn("res", resCol)
-    val books = pqTrain(withRes, idCol, "res", m, k, sample, pqIters)
-    val index = withRes
-      .withColumn("codes", pqEncode(col("res"), books))
+    val cents = centroids.map(_.toArray).toArray
+    val residuals = lowest.take(sample).map { r =>
+      val v: ArrayData = new GenericArrayData(r.getSeq[Any](1).toArray)
+      val res =
+        if (cents.isEmpty) v
+        else graft.functions.VectorOps.subCentroid(v,
+          graft.functions.VectorOps.nearestCentroidCos(v, cents), cents)
+      // a NULL element trains as 0.0, as pqTrain's collect unboxes it
+      Array.tabulate(res.numElements())(i =>
+        if (res.isNullAt(i)) 0.0 else res.getDouble(i))
+    }
+    val books = pqTrainLocal(residuals, m, k, pqIters)
+    val index = assigned
+      .withColumn("codes", pqEncode(resCol, books))
       .select(col(idCol), col("cell"), col("codes"))
-    (centroids, books, index)
+    IvfPq(centroids, books, index, lowest.toSeq)
   }
 
   /** Per-subspace table-lookup ADC score of one probe against a `codes`

@@ -302,8 +302,7 @@ object SimQueries {
       iters = 0)
 
   /** The pinned IVF-PQ index over a (vec_id, emb) frame. */
-  private def pinnedIvfPq(base: DataFrame)
-      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) =
+  private def pinnedIvfPq(base: DataFrame): VectorSearch.IvfPq =
     VectorSearch.ivfPqIndex(base, "vec_id", "emb", kCells = 8, m = 8,
       k = 16, iters = 0, sample = 16, pqIters = 0)
 
@@ -1294,9 +1293,10 @@ object SimQueries {
         val base = normalizedEmb(s, d)
         val n = ivfCorpusSize(s, d)
         val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-        val (centroids, books, index) = VectorSearch.ivfPqIndex(
-          base, "vec_id", "emb", kCells = cells, m = 8, k = 16)
-        VectorSearch.probeVector(base, "vec_id", 0L) match {
+        val VectorSearch.IvfPq(centroids, books, index, lowest) =
+          VectorSearch.ivfPqIndex(base, "vec_id", "emb", kCells = cells,
+            m = 8, k = 16)
+        VectorSearch.probeVectorFrom(base, "vec_id", 0L, lowest) match {
           case None => // probe absent (empty corpus): zero rows, correct
             index      // schema — the ivfTopK guard
               .select(col("vec_id"), col("cell").cast("bigint").as("cell"),
@@ -1329,8 +1329,9 @@ object SimQueries {
       "e20_ivfpq_pinned",
       (s, d) => {
         val base = normalizedEmb(s, d)
-        val (centroids, books, index) = pinnedIvfPq(base)
-        VectorSearch.probeVector(base, "vec_id", 0L) match {
+        val VectorSearch.IvfPq(centroids, books, index, lowest) =
+          pinnedIvfPq(base)
+        VectorSearch.probeVectorFrom(base, "vec_id", 0L, lowest) match {
           case None =>
             index
               .select(col("vec_id").as("b_id"),
@@ -1390,8 +1391,9 @@ object SimQueries {
       "e21_ivfpq_rerank",
       (s, d) => {
         val base = normalizedEmb(s, d)
-        val (centroids, books, index) = pinnedIvfPq(base)
-        VectorSearch.probeVector(base, "vec_id", 0L) match {
+        val VectorSearch.IvfPq(centroids, books, index, lowest) =
+          pinnedIvfPq(base)
+        VectorSearch.probeVectorFrom(base, "vec_id", 0L, lowest) match {
           case None =>
             base.select(col("vec_id").as("b_id"), lit(0.0).as("cos_sim"),
               lit(0.0).as("adc_score")).filter(lit(false))

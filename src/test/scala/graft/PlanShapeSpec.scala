@@ -873,4 +873,34 @@ class PlanShapeSpec extends SparkSpec {
     assert(over.isEmpty,
       s"exchange budgets exceeded:\n${over.mkString("\n")}")
   }
+
+  test("e19's IVF-PQ build runs at most 7 Spark jobs on a cold corpus") {
+    // Two schema inferences (the query's load and the corpus count's),
+    // the corpus count (2 jobs under AQE), the one lowest-id collect
+    // (seeds, PQ sample, probe) and the Lloyd aggregate (2 jobs). A fresh
+    // copy of the table starts the corpus-size memo cold.
+    val dir = java.nio.file.Files.createTempDirectory("graft-e19-jobs")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sfDir, "embeddings.parquet"),
+      dir.resolve("embeddings.parquet"))
+    val q = GraftQuery.all.find(_.name == "e19_ivfpq_topk").get
+    val jobs = jobsDuring(q.run(spark, dir.toString))
+    assert(jobs <= 7, s"e19's build ran $jobs jobs")
+  }
+
+  test("the PQ family's normalise and float widening plan no lambda") {
+    // VectorSearch.normalized is one native L2Normalize over one Cast;
+    // the interpreted forms they replaced — transform(e, x -> cast(x as
+    // double)) and transform(e, x -> x / nrm) — were re-run per row by
+    // every filter pushed below them (e19's `cell IN (…)`). e40's own
+    // per-subspace error fold is a different lambda and stays.
+    val historical = """lambdafunction\(cast\(lambda |lambdafunction\(\(lambda \S+ / """.r
+    val pq = Seq("e13_pq_adc_recall", "e15_pq_pinned", "e19_ivfpq_topk",
+      "e20_ivfpq_pinned", "e21_ivfpq_rerank", "e40_pq_distortion")
+    val lambdas = pq.filter { name =>
+      historical.findFirstIn(GraftQuery.all.find(_.name == name).get
+        .run(spark, sfDir).queryExecution.optimizedPlan.toString).nonEmpty
+    }
+    assert(lambdas.isEmpty,
+      s"normalise/widening lambda in the optimized plan of: ${lambdas.mkString(", ")}")
+  }
 }

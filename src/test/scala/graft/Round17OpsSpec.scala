@@ -33,7 +33,7 @@ class Round17OpsSpec extends SparkSpec {
     val n = base.count()
     val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
     val nprobe = math.max(2, cells / 8)
-    val (cents, books, index) = VectorSearch.ivfPqIndex(
+    val VectorSearch.IvfPq(cents, books, index, _) = VectorSearch.ivfPqIndex(
       base, "vec_id", "emb", cells, m = 8, k = 16)
     val probeIds = base.select(col("vec_id")).collect()
       .map(_.getLong(0)).filter(_ % 20 == 0).take(25)
@@ -61,7 +61,7 @@ class Round17OpsSpec extends SparkSpec {
     // so they must agree to float round-off on every vector — this is the
     // identity that lets e20's DuckDB hash-match vouch for e19's kernel.
     val base = normalized
-    val (cents, books, index) = VectorSearch.ivfPqIndex(
+    val VectorSearch.IvfPq(cents, books, index, _) = VectorSearch.ivfPqIndex(
       base, "vec_id", "emb", kCells = 8, m = 8, k = 16)
     val probe = base.filter(col("vec_id") === 0L)
       .select(col("emb")).head().getSeq[Double](0)
@@ -83,7 +83,7 @@ class Round17OpsSpec extends SparkSpec {
     // The 100 TB property the composition exists for: after the build,
     // query-time plans read ~1+m bytes of state per vector. The schema is
     // the contract.
-    val (_, _, index) = VectorSearch.ivfPqIndex(
+    val VectorSearch.IvfPq(_, _, index, _) = VectorSearch.ivfPqIndex(
       normalized, "vec_id", "emb", kCells = 8, m = 8, k = 16)
     assert(index.columns.toSeq == Seq("vec_id", "cell", "codes"))
     assert(index.schema("codes").dataType.simpleString == "array<int>")
@@ -102,7 +102,7 @@ class Round17OpsSpec extends SparkSpec {
     val n = base.count()
     val cells = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
     val nprobe = math.max(2, cells / 8)
-    val (cents, books, index) = VectorSearch.ivfPqIndex(
+    val VectorSearch.IvfPq(cents, books, index, _) = VectorSearch.ivfPqIndex(
       base, "vec_id", "emb", cells, m = 8, k = 16)
     val probeIds = base.select(col("vec_id")).collect()
       .map(_.getLong(0)).filter(_ % 20 == 0).take(15)

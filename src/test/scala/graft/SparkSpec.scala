@@ -27,6 +27,25 @@ abstract class SparkSpec extends AnyFunSuite {
   protected def shuffles(plan: String): Int =
     "[+:]- Exchange ".r.findAllIn(plan).length
 
+  /** Spark jobs started while `body` runs, counted by a listener after
+    * the listener bus has delivered every event. */
+  protected def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   /** Runs each selected registered query against `dir` through the noop
     * sink; returns "<name>: <root-cause>" per failure. Shared by the
     * robustness sweeps (EmptyCorpusSpec, DegenerateCorpusSpec) so both
