@@ -11,14 +11,13 @@ package graft
   * An untimed warmup runs first: a cold JVM charges the first few queries
   * seconds of one-time cost (JIT, codegen compiler, parquet reader init —
   * measured ~4.7 s for a trivial first scan) that has nothing to do with
-  * the query being timed. The default warmup is LIGHT — one noop-sink scan
-  * per table (parquet reader + page cache + scan/sink JIT) plus one tiny
-  * join-agg (exchange/agg/codegen infra) — because the old full untimed
-  * pass spent ~half the bench wall-clock re-running every query (round-5
+  * the query being timed. The warmup is LIGHT — one noop-sink scan per
+  * table (parquet reader + page cache + scan/sink JIT) plus one tiny
+  * join-agg (exchange/agg/codegen infra) — because a full untimed pass
+  * spent ~half the bench wall-clock re-running every query (round-5
   * verdict, next-round #7). Per-query timings therefore include each
   * query's own codegen compile (~0.1 s) — steady-state minus that is what
-  * a long-lived cluster session sees. SPARK_GRAFT_BENCH_WARMUP: "1"
-  * (default) = light, "full" = full untimed pass, "0" = none. */
+  * a long-lived cluster session sees. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -37,39 +36,31 @@ object Bench {
     val only = MainEnv.only("SPARK_GRAFT_BENCH_ONLY")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") match {
-      case "0" => ()
-      case "full" =>
-        selected.foreach { case (_, fn) =>
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () } // failures reported in the timed pass
-        }
-      case _ => // light (default): tables + one exchange/agg/join warm.
-        // Per-step try: one missing table must not abort the remaining
-        // warm steps (a cold first timed query would silently absorb the
-        // ~4.7 s one-time cost the warmup exists to exclude).
-        graft.sources.Tables.names.foreach { t =>
-          try spark.read.parquet(s"$sfDir/$t.parquet")
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-        try graft.sources.Tables.nation(spark, sfDir)
-          .join(graft.sources.Tables.region(spark, sfDir),
-            org.apache.spark.sql.functions.col("n_regionkey") ===
-              org.apache.spark.sql.functions.col("r_regionkey"))
-          .groupBy("r_name").count()
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        // One 64-row pass of the native text-cleaning expression: the
-        // first text query otherwise absorbs ~1.7 s of one-time codegen /
-        // regex-compile cost that has nothing to do with its own plan
-        // (measured: d01 2.4 s as first timed query vs 0.7 s warm).
-        try graft.sources.Tables.documents(spark, sfDir).limit(64)
-          .select(graft.functions.TextFunctions.cleanTextAscii(
-            org.apache.spark.sql.functions.col("text")).as("c"))
-          .write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+    // Warmup: tables + one exchange/agg/join warm. Per-step try: one
+    // missing table must not abort the remaining warm steps (a cold first
+    // timed query would silently absorb the ~4.7 s one-time cost the
+    // warmup exists to exclude).
+    graft.sources.Tables.names.foreach { t =>
+      try spark.read.parquet(s"$sfDir/$t.parquet")
+        .write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
     }
+    try graft.sources.Tables.nation(spark, sfDir)
+      .join(graft.sources.Tables.region(spark, sfDir),
+        org.apache.spark.sql.functions.col("n_regionkey") ===
+          org.apache.spark.sql.functions.col("r_regionkey"))
+      .groupBy("r_name").count()
+      .write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
+    // One 64-row pass of the native text-cleaning expression: the
+    // first text query otherwise absorbs ~1.7 s of one-time codegen /
+    // regex-compile cost that has nothing to do with its own plan
+    // (measured: d01 2.4 s as first timed query vs 0.7 s warm).
+    try graft.sources.Tables.documents(spark, sfDir).limit(64)
+      .select(graft.functions.TextFunctions.cleanTextAscii(
+        org.apache.spark.sql.functions.col("text")).as("c"))
+      .write.format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
     // Per-query wall-clock budget (SPARK_GRAFT_BENCH_TIMEOUT seconds,
     // default 300): a hung query reports one null-with-reason entry
     // instead of eating the round's whole bench window (QueryBudget

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -95,66 +94,54 @@ object MinHashExprs {
 
 /** See [[MinHashExprs.bandMd5Sigs]]. */
 case class BandMd5Sigs(child: Expression, numTables: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "band_md5_sigs"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.bandMd5Sigs(input.asInstanceOf[ArrayData], numTables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.MinHashOps.bandMd5Sigs($c, $numTables);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "bandMd5Sigs"
+  override protected def kernelNullable: Boolean = true
+  override protected def constants: Seq[Expression] = Seq(Literal(numTables))
 
   override protected def withNewChildInternal(newChild: Expression): BandMd5Sigs =
     copy(child = newChild)
 }
 
-case class SimHashMd5Bits(child: Expression) extends UnaryExpression {
+case class SimHashMd5Bits(child: Expression)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def prettyName: String = "simhash_md5_bits"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.simhashMd5Bits(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashOps.simhashMd5Bits($c);")
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "simhashMd5Bits"
 
   override protected def withNewChildInternal(newChild: Expression): SimHashMd5Bits =
     copy(child = newChild)
 }
 
-case class ShingleHashes(child: Expression) extends UnaryExpression {
+case class ShingleHashes(child: Expression)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.shingleHashes(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashOps.shingleHashes($c);")
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "shingleHashes"
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
 }
 
 case class MinHashSigs(child: Expression, numTables: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_sigs"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.minhashSigs(input.asInstanceOf[ArrayData], numTables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.MinHashOps.minhashSigs($c, $numTables);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "minhashSigs"
+  override protected def kernelNullable: Boolean = true
+  override protected def constants: Seq[Expression] = Seq(Literal(numTables))
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
     copy(child = newChild)
@@ -168,18 +155,15 @@ case class MinHashSigs(child: Expression, numTables: Int)
   * hex is order-monotonic with the digest bytes, so min-of-hex-strings ==
   * hex-of-min-digest — parity with the SQL formulation is pinned by
   * NearDupSpec. */
-case class MinMd5Shingle(child: Expression) extends UnaryExpression {
+case class MinMd5Shingle(child: Expression)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
   override def nullable: Boolean = true
   override def prettyName: String = "min_md5_shingle"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.minMd5Shingle(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.MinHashOps.minMd5Shingle($c);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "minMd5Shingle"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): MinMd5Shingle =
     copy(child = newChild)
@@ -194,18 +178,16 @@ case class MinMd5Shingle(child: Expression) extends UnaryExpression {
   * hex-encodes once at the end. Duplicate shingles are harmless (min over
   * a multiset equals min over its set — the oracle's list_distinct
   * mirror). Parity with the SQL-expr formulation pinned by NearDupSpec. */
-case class KMinMd5Sigs(child: Expression, k: Int) extends UnaryExpression {
+case class KMinMd5Sigs(child: Expression, k: Int)
+    extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "k_min_md5_sigs"
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.kMinMd5Sigs(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.MinHashOps.kMinMd5Sigs($c, $k);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "kMinMd5Sigs"
+  override protected def kernelNullable: Boolean = true
+  override protected def constants: Seq[Expression] = Seq(Literal(k))
 
   override protected def withNewChildInternal(newChild: Expression): KMinMd5Sigs =
     copy(child = newChild)
@@ -225,21 +207,14 @@ case class KMinMd5Sigs(child: Expression, k: Int) extends UnaryExpression {
   * null; null (not NaN) if both are empty, mirroring the SQL form's
   * 0-element guard. */
 case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "jaccard_sorted"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    MinHashOps.jaccardSorted(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Double ${ev.value}$$box =
-         |  graft.functions.MinHashOps.jaccardSorted($a, $b);
-         |if (${ev.value}$$box == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}$$box.doubleValue(); }""".stripMargin)
+  override protected def kernels: AnyRef = MinHashOps
+  override protected def kernel: String = "jaccardSorted"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSorted =

@@ -1,13 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XXH64}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions (with `doGenCode`) for the two text operators
+/** Native, codegen'd Catalyst expressions for the two text operators
   * whose `functions._` formulations dominate the bench profile:
   *
   *   - [[ScrubWords]] — whole-word stopword removal. The regex form
@@ -20,11 +19,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *     each token once and keeps 64 scalar counters.
   *
   * Both are null-safe unary string expressions that stay inside whole-stage
-  * codegen (the generated code calls the static helpers in [[TextOps]]), so
-  * they fuse with the surrounding scan/project stage — no UDF boundary, no
-  * serialization. Semantics notes live on each class.
+  * codegen (the generated code calls the static helpers in [[TextOps]]
+  * through [[KernelCall]]), so they fuse with the surrounding scan/project
+  * stage — no UDF boundary, no serialization. Semantics notes live on each
+  * class.
   */
 object TextExprs {
+
+  /** A word list as the word-set kernels take it. */
+  private[functions] def wordSet(words: Seq[String]): Literal = {
+    val s = new java.util.HashSet[String](words.size * 2)
+    words.foreach(s.add)
+    KernelCall.const(s)
+  }
 
   /** Remove every maximal ASCII-word run (`[A-Za-z0-9_]+`) of `c` that is in
     * `words`, keeping all other characters. Equivalent to
@@ -109,25 +116,14 @@ object TextExprs {
   * separate (much smaller) regex pass — see TextFunctions.cleanTextAscii.
   */
 case class ScrubWords(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = StringType
   override def prettyName: String = "scrub_words"
 
-  @transient private lazy val wordSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](words.size * 2)
-    words.foreach(s.add)
-    s
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.scrub(input.asInstanceOf[UTF8String], wordSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("wordSet", wordSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.scrub($c, $setRef);")
-  }
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "scrub"
+  override protected def constants: Seq[Expression] = Seq(TextExprs.wordSet(words))
 
   override protected def withNewChildInternal(newChild: Expression): ScrubWords =
     copy(child = newChild)
@@ -140,17 +136,13 @@ case class ScrubWords(child: Expression, words: Seq[String])
   * boundaries to `filter(split(trim(c), "\\s+"), t -> length(t) > 0)`.
   * Empty/whitespace-only input hashes to signature 0. */
 case class SimHash64(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.simhash64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.simhash64($c);")
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "simhash64"
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
@@ -159,25 +151,14 @@ case class SimHash64(child: Expression)
 /** Whole-word hit counter: counts maximal `[A-Za-z0-9_]+` runs contained in
   * the word set (see [[ScrubWords]] for the regex-equivalence argument). */
 case class CountWordsIn(child: Expression, words: Seq[String])
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "count_words_in"
 
-  @transient private lazy val wordSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String](words.size * 2)
-    words.foreach(s.add)
-    s
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.countWordsIn(input.asInstanceOf[UTF8String], wordSet)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("wordSet", wordSet, "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.countWordsIn($c, $setRef);")
-  }
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "countWordsIn"
+  override protected def constants: Seq[Expression] = Seq(TextExprs.wordSet(words))
 
   override protected def withNewChildInternal(newChild: Expression): CountWordsIn =
     copy(child = newChild)
@@ -194,23 +175,15 @@ case class CountWordsIn(child: Expression, words: Seq[String])
   * replace-chain form (d94's oracle-checkable geometry). Output
   * array<string> is never null for non-null input ("" → empty array). */
 case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "bpe_encode"
 
-  @transient private lazy val mergeArr: Array[Array[String]] =
-    merges.map { case (l, r) => Array(l, r) }.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.bpeEncode(input.asInstanceOf[UTF8String], mergeArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val mRef = ctx.addReferenceObj("bpeMerges", mergeArr, "java.lang.String[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.bpeEncode($c, $mRef);")
-  }
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "bpeEncode"
+  override protected def constants: Seq[Expression] =
+    Seq(KernelCall.const(merges.map { case (l, r) => Array(l, r) }.toArray))
 
   override protected def withNewChildInternal(newChild: Expression): BpeEncode =
     copy(child = newChild)
@@ -227,19 +200,15 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   * native path and the oracle-pinned d86 emit IDENTICAL doubles
   * (spec-asserted frame equality). Returns null when n_bigrams = 0. */
 case class CharBigramStats(child: Expression)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = CharBigramStats.schema
   override def nullable: Boolean = true
   override def prettyName: String = "char_bigram_stats"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.charBigramStats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      InternalRow r = graft.functions.TextOps.charBigramStats($c);
-      if (r == null) { ${ev.isNull} = true; } else { ${ev.value} = r; }""")
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "charBigramStats"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): CharBigramStats =
     copy(child = newChild)
@@ -261,21 +230,17 @@ object CharBigramStats {
   * window contains it (concat's null rule — concatWs alone would SKIP
   * nulls, hence the explicit window check). Parity with the tree is
   * pinned by TextFunctionsSpec. */
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
+case class WordNgrams(child: Expression, n: Int)
+    extends UnaryExpression with KernelCall {
 
   require(n >= 1, s"n-gram width must be positive, got $n")
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "word_ngrams"
 
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.wordNgrams(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.wordNgrams($c, $n);")
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "wordNgrams"
+  override protected def constants: Seq[Expression] = Seq(Literal(n))
 
   override protected def withNewChildInternal(newChild: Expression): WordNgrams =
     copy(child = newChild)
@@ -285,8 +250,8 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   * one pass, array_join null-skip semantics per gram. Parity with the
   * concat-of-CASE-transform tree pinned by TextFunctionsSpec. */
 case class TaggedNgrams(child: Expression, ns: Seq[Int])
-    extends UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    extends UnaryExpression with KernelCall {
+  import org.apache.spark.sql.types.{StructField, StructType}
 
   require(ns.nonEmpty && ns.forall(_ >= 1), s"bad n-gram widths: $ns")
 
@@ -297,23 +262,16 @@ case class TaggedNgrams(child: Expression, ns: Seq[Int])
     StructField("gram", StringType, nullable = true))), containsNull = true)
   override def prettyName: String = "tagged_ngrams"
 
-  @transient private lazy val widths: Array[Int] = ns.toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    TextOps.taggedNgrams(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], widths)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val wRef = ctx.addReferenceObj("ngramWidths", widths, "int[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextOps.taggedNgrams($c, $wRef);")
-  }
+  override protected def kernels: AnyRef = TextOps
+  override protected def kernel: String = "taggedNgrams"
+  override protected def constants: Seq[Expression] =
+    Seq(KernelCall.const(ns.toArray))
 
   override protected def withNewChildInternal(newChild: Expression): TaggedNgrams =
     copy(child = newChild)
 }
 
-/** Static helpers called from both interpreted eval and generated code. */
+/** The text expressions' static kernels, bound by [[KernelCall]]. */
 object TextOps {
 
   /** See [[TaggedNgrams]]. */

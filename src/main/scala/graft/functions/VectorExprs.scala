@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+
+import KernelCall.const
 
 /** Native codegen expression for cosine similarity over two array<double>
   * columns.
@@ -27,20 +28,15 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * yields null on zero divisor in non-ANSI mode).
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Double ${ev.value}_r = graft.functions.VectorOps.cosine($a, $b);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "cosine"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim =
@@ -56,20 +52,15 @@ case class CosineSim(left: Expression, right: Expression)
   * `list_sum(list_transform(list_zip(...)))`. Null semantics match the
   * fold form: null array, length mismatch, or any null element → null. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "dot_product"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""java.lang.Double ${ev.value}_r = graft.functions.VectorOps.dot($a, $b);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "dot"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -84,23 +75,18 @@ case class DotProduct(left: Expression, right: Expression)
   * left-to-right `s += x·x` IEEE sequence, and Math.sqrt is correctly
   * rounded in both forms, so doubles are bit-identical — including to the
   * DuckDB oracle's `sqrt(list_sum(list_transform(x, x -> x*x)))`. Null
-  * semantics match the fold form: null array → null (nullSafeEval); a
+  * semantics match the fold form: null array → null (KernelCall); a
   * null element nulls the whole accumulation; empty array → sqrt(0) = 0. */
 case class ArrayNorm(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "array_norm"
 
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.norm(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""java.lang.Double ${ev.value}_r = graft.functions.VectorOps.norm($a);
-         |if (${ev.value}_r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_r.doubleValue(); }""".stripMargin)
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "norm"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildInternal(
       newChild: Expression): ArrayNorm = copy(child = newChild)
@@ -121,18 +107,14 @@ case class ArrayNorm(child: Expression)
   * array stays NULL. Parity under both expression factories is pinned by
   * VectorSearchSpec. */
 case class L2Normalize(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "l2_normalize"
 
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.l2Normalize(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.VectorOps.l2Normalize($a)")
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "l2Normalize"
 
   override protected def withNewChildInternal(
       newChild: Expression): L2Normalize = copy(child = newChild)
@@ -203,11 +185,11 @@ case class CentroidMean(child: Expression)
   * the argmax compares scores with Spark's SQL double ordering
   * (SQLOrderingUtil: NaN largest, -0.0 == 0.0) and the struct ordering's
   * null-first rule (a null score never beats a non-null one; all-null →
-  * cell 0) with ties to the lower index. Parity with the literal tree is
-  * pinned by NearDupSpec. */
+  * cell 0) with ties to the lower index. A NULL vector scores null
+  * against every centroid, so it too is cell 0. Parity with the literal
+  * tree is pinned by NearDupSpec. */
 case class NearestCentroidCos(child: Expression, centroids: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.IntegerType
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = false
@@ -216,17 +198,11 @@ case class NearestCentroidCos(child: Expression, centroids: Seq[Seq[Double]])
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"<${centroids.length} centroids>")
 
-  @transient private lazy val centArr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.nearestCentroidCos(input.asInstanceOf[ArrayData], centArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorOps.nearestCentroidCos($c, $cRef);")
-  }
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "nearestCentroidCos"
+  override protected def kernelTakesNull: Boolean = true
+  override protected def constants: Seq[Expression] =
+    Seq(const(VectorOps.matrix(centroids)))
 
   override protected def withNewChildInternal(
       newChild: Expression): NearestCentroidCos = copy(child = newChild)
@@ -248,8 +224,7 @@ case class NearestCentroidCos(child: Expression, centroids: Seq[Seq[Double]])
   * result; comparisons use Spark's SQL double ordering. Parity pinned by
   * NearDupSpec. */
 case class PqEncodeCodes(child: Expression, books: Seq[Seq[Seq[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def nullable: Boolean = true
@@ -258,22 +233,13 @@ case class PqEncodeCodes(child: Expression, books: Seq[Seq[Seq[Double]]])
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"<${books.length}x${books.headOption.map(_.length).getOrElse(0)} codebooks>")
 
-  @transient private lazy val bookArr: Array[Array[Array[Double]]] =
-    books.map(_.map(_.toArray).toArray).toArray
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "pqEncodeCodes"
   // ‖c‖² per codeword, the SAME Seq.sum left fold the literal tree
   // computed at plan-build time — precomputed once per expression.
-  @transient private lazy val c2Arr: Array[Array[Double]] =
-    books.map(_.map(cw => cw.map(x => x * x).sum).toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.pqEncodeCodes(input.asInstanceOf[ArrayData], bookArr, c2Arr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("pqBooks", bookArr, "double[][][]")
-    val cRef = ctx.addReferenceObj("pqC2", c2Arr, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.VectorOps.pqEncodeCodes($c, $bRef, $cRef);")
-  }
+  override protected def constants: Seq[Expression] = Seq(
+    const(books.map(VectorOps.matrix).toArray),
+    const(VectorOps.matrix(books.map(_.map(cw => cw.map(x => x * x).sum)))))
 
   override protected def withNewChildInternal(
       newChild: Expression): PqEncodeCodes = copy(child = newChild)
@@ -287,15 +253,14 @@ case class PqEncodeCodes(child: Expression, books: Seq[Seq[Seq[Double]]])
   * round-21 encode expression) and paid m element_at dispatches plus a
   * concat allocation per row; this is ONE node, one static call.
   *
-  * Replicates the tree exactly: a NULL codes array → null (nullSafeEval);
+  * Replicates the tree exactly: a NULL codes array → null (KernelCall);
   * a NULL code element → null result (the tree's concat-of-null rule); a
   * codes array shorter than m, or a code outside [0, k), throws — as the
   * ANSI element_at did (both unreachable for pqEncode output). Output
   * element type matches the tree (non-null doubles). Parity pinned by
   * NearDupSpec. */
 case class PqReconstruct(child: Expression, books: Seq[Seq[Seq[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
@@ -304,18 +269,11 @@ case class PqReconstruct(child: Expression, books: Seq[Seq[Seq[Double]]])
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"<${books.length}x${books.headOption.map(_.length).getOrElse(0)} codebooks>")
 
-  @transient private lazy val bookArr: Array[Array[Array[Double]]] =
-    books.map(_.map(_.toArray).toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.pqReconstruct(input.asInstanceOf[ArrayData], bookArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bRef = ctx.addReferenceObj("pqBooks", bookArr, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.VectorOps.pqReconstruct($c, $bRef);
-         |if (${ev.value} == null) { ${ev.isNull} = true; }""".stripMargin)
-  }
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "pqReconstruct"
+  override protected def kernelNullable: Boolean = true
+  override protected def constants: Seq[Expression] =
+    Seq(const(books.map(VectorOps.matrix).toArray))
 
   override protected def withNewChildInternal(
       newChild: Expression): PqReconstruct = copy(child = newChild)
@@ -332,28 +290,19 @@ case class PqReconstruct(child: Expression, books: Seq[Seq[Seq[Double]]])
   * preserved). `cell` is cellOf's output — always a valid index here.
   * Parity pinned by NearDupSpec. */
 case class AddCentroid(left: Expression, right: Expression,
-    centroids: Seq[Seq[Double]]) extends BinaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, DoubleType => DT}
+    centroids: Seq[Seq[Double]]) extends BinaryExpression with KernelCall {
 
-  override def dataType: DataType = ArrayType(DT, containsNull = true)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "add_centroid"
   // keep the centroid matrix out of plan text
   override def stringArgs: Iterator[Any] =
     Iterator(left, right, s"<${centroids.length} centroids>")
 
-  @transient private lazy val centArr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override protected def nullSafeEval(vec: Any, cell: Any): Any =
-    VectorOps.addCentroid(vec.asInstanceOf[ArrayData],
-      cell.asInstanceOf[Int], centArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.VectorOps.addCentroid($v, $c, $cRef);")
-  }
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "addCentroid"
+  override protected def constants: Seq[Expression] =
+    Seq(const(VectorOps.matrix(centroids)))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): AddCentroid =
@@ -371,28 +320,19 @@ case class AddCentroid(left: Expression, right: Expression,
   * output — always a valid index here (the empty-quantizer case never
   * constructs this node). Parity pinned by NearDupSpec. */
 case class SubCentroid(left: Expression, right: Expression,
-    centroids: Seq[Seq[Double]]) extends BinaryExpression {
-  import org.apache.spark.sql.types.{ArrayType, DoubleType => DT}
+    centroids: Seq[Seq[Double]]) extends BinaryExpression with KernelCall {
 
-  override def dataType: DataType = ArrayType(DT, containsNull = true)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
   override def prettyName: String = "sub_centroid"
   // keep the centroid matrix out of plan text
   override def stringArgs: Iterator[Any] =
     Iterator(left, right, s"<${centroids.length} centroids>")
 
-  @transient private lazy val centArr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override protected def nullSafeEval(vec: Any, cell: Any): Any =
-    VectorOps.subCentroid(vec.asInstanceOf[ArrayData],
-      cell.asInstanceOf[Int], centArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.VectorOps.subCentroid($v, $c, $cRef);")
-  }
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "subCentroid"
+  override protected def constants: Seq[Expression] =
+    Seq(const(VectorOps.matrix(centroids)))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SubCentroid =
@@ -414,8 +354,7 @@ case class SubCentroid(left: Expression, right: Expression,
   * [[graft.sources.Tables.validEmbeddings]] (size-filtered, so never
   * null); the reachable domain is pinned by NearDupSpec. */
 case class SignProject(child: Expression, signs: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.types.ArrayType
+    extends UnaryExpression with KernelCall {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
@@ -424,17 +363,10 @@ case class SignProject(child: Expression, signs: Seq[Seq[Double]])
   override def stringArgs: Iterator[Any] =
     Iterator(child, s"<${signs.length}x${signs.headOption.map(_.length).getOrElse(0)} signs>")
 
-  @transient private lazy val signArr: Array[Array[Double]] =
-    signs.map(_.toArray).toArray
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorOps.signProject(input.asInstanceOf[ArrayData], signArr)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sRef = ctx.addReferenceObj("rpSigns", signArr, "double[][]")
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.VectorOps.signProject($v, $sRef);")
-  }
+  override protected def kernels: AnyRef = VectorOps
+  override protected def kernel: String = "signProject"
+  override protected def constants: Seq[Expression] =
+    Seq(const(VectorOps.matrix(signs)))
 
   override protected def withNewChildInternal(
       newChild: Expression): SignProject = copy(child = newChild)
@@ -442,6 +374,10 @@ case class SignProject(child: Expression, signs: Seq[Seq[Double]])
 
 object VectorOps {
   import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+
+  /** A row-major matrix constant as the kernels take it. */
+  def matrix(rows: Seq[Seq[Double]]): Array[Array[Double]] =
+    rows.map(_.toArray).toArray
 
   /** See [[SignProject]]: element r = dot(vec, signs(r)), each the strict
     * left-to-right fold of [[dot]] (null on length mismatch / null
@@ -527,9 +463,10 @@ object VectorOps {
   }
 
   /** See [[NearestCentroidCos]]: cosine argmax over the centroid rows,
-    * SQL double ordering, null scores lose, ties (and all-null) to the
-    * lower index. */
+    * SQL double ordering, null scores lose, ties (and all-null, a NULL
+    * vector's) to the lower index. */
   def nearestCentroidCos(vec: ArrayData, cents: Array[Array[Double]]): Int = {
+    if (vec == null) return 0
     var bestIdx = 0
     var bestS: java.lang.Double = null
     var i = 0

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftSqlBridge}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,24 +46,21 @@ object WinnowExprs {
 }
 
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
   require(k >= 1 && w >= 1, s"k and w must be positive (got k=$k, w=$w)")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fingerprints"
 
-  override protected def nullSafeEval(input: Any): Any =
-    WinnowOps.fingerprints(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WinnowOps.fingerprints($c, $k, $w);")
+  override protected def kernels: AnyRef = WinnowOps
+  override protected def kernel: String = "fingerprints"
+  override protected def constants: Seq[Expression] = Seq(Literal(k), Literal(w))
 
   override protected def withNewChildInternal(newChild: Expression): WinnowFingerprints =
     copy(child = newChild)
 }
 
-/** Static helper called from both interpreted eval and generated code. */
+/** The winnowing expression's static kernel, bound by [[KernelCall]]. */
 object WinnowOps {
 
   private val Mod = 2147483648L // 2^31

@@ -71,40 +71,38 @@ object GlobalRank {
     * offset plus the row's position, which [[numbered]] reads off
     * `monotonically_increasing_id`, but a running SUM within a partition
     * has no shuffle-free DataFrame expression — any window that carries
-    * it adds an exchange and a sort over the sorted rows. The sorted RDD is PERSISTED (MEMORY_AND_DISK)
-    * across the two jobs: without it the output pass re-runs the range
-    * sort (doubling sort cost), and — worse — correctness would rest on
-    * the recomputed range partitioning being bitwise-identical across
-    * jobs, which a nondeterministically ordered upstream source breaks.
-    * The cache is released by Spark's ContextCleaner once the returned
-    * frame (whose lineage holds the only reference) becomes unreachable
-    * — an explicit unpersist here would race the consuming job, and one
-    * deferred to "after consumption" is not expressible from inside the
-    * operator. NULL values count as 0. EAGER like [[withRowNumber]]
-    * (the stats job runs at call time). */
+    * it adds an exchange and a sort over the sorted rows. The sorted rows
+    * are held by [[Checkpoints.materialize]], whose action is the stats
+    * job: without the hold the output pass re-runs the range sort, and
+    * correctness would rest on the recomputed range partitioning being
+    * bitwise-identical across jobs, which a nondeterministically ordered
+    * upstream source breaks. The ContextCleaner frees the held rows once
+    * the returned frame is unreachable, as for [[withRowNumber]]. NULL
+    * values count as 0. EAGER like [[withRowNumber]] (the stats job runs
+    * at call time). */
   def withRunningTotal(df: DataFrame, sort: Seq[Column], valueCol: String,
       rankCol: String = "rn", cumCol: String = "cum"): DataFrame = {
     require(!df.columns.contains(rankCol) && !df.columns.contains(cumCol),
       s"'$rankCol'/'$cumCol' collides with an existing column")
-    val sorted = df.orderBy(sort: _*)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    require(sorted.schema(vIdx).dataType == LongType,
+    val vIdx = df.schema.fieldIndex(valueCol)
+    require(df.schema(vIdx).dataType == LongType,
       s"'$valueCol' must be LongType (exact integer units)")
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = rdd.mapPartitionsWithIndex { (i, it) =>
-      var n = 0L; var s = 0L
-      it.foreach { r =>
-        n += 1L; if (!r.isNullAt(vIdx)) s += r.getLong(vIdx)
-      }
-      Iterator((i, n, s))
-    }.collect().sortBy(_._1)
+    val sorted = Checkpoints.materialize(df.orderBy(sort: _*)) { held =>
+      held.rdd.mapPartitionsWithIndex { (i, it) =>
+        var n = 0L; var s = 0L
+        it.foreach { r =>
+          n += 1L; if (!r.isNullAt(vIdx)) s += r.getLong(vIdx)
+        }
+        Iterator((i, n, s))
+      }.collect().sortBy(_._1)
+    }
+    val stats = sorted.result
     val nOff = stats.scanLeft(0L)(_ + _._2).init
     val sOff = stats.scanLeft(0L)(_ + _._3).init
-    val schema = sorted.schema
+    val schema = df.schema
       .add(rankCol, LongType, nullable = false)
       .add(cumCol, LongType, nullable = false)
-    val out = rdd.mapPartitionsWithIndex { (i, it) =>
+    val out = sorted.df.rdd.mapPartitionsWithIndex { (i, it) =>
       var rn = nOff(i); var cum = sOff(i)
       it.map { r =>
         rn += 1L
@@ -112,6 +110,6 @@ object GlobalRank {
         Row.fromSeq(r.toSeq :+ rn :+ cum)
       }
     }
-    sorted.sparkSession.createDataFrame(out, schema)
+    df.sparkSession.createDataFrame(out, schema)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorExprs.{cosine, l2Normalize}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -414,7 +415,7 @@ object VectorSearch {
           org.apache.spark.sql.GraftSqlBridge.expression(col("emb")),
           org.apache.spark.sql.GraftSqlBridge.expression(col("cell")),
           centroids))
-    val cents = centroids.map(_.toArray).toArray
+    val cents = graft.functions.VectorOps.matrix(centroids)
     val residuals = lowest.take(sample).map { r =>
       val v: ArrayData = new GenericArrayData(r.getSeq[Any](1).toArray)
       val res =
@@ -493,8 +494,7 @@ object VectorSearch {
     emb.select(col(idCol), col(vecCol))
       .join(adcTop, idCol)
       .select(col(idCol),
-        graft.functions.VectorFunctions.cosine(col(vecCol), typedlit(probe))
-          .as("cos_sim"),
+        cosine(col(vecCol), typedlit(probe)).as("cos_sim"),
         col("adc_score"))
       .orderBy(col("cos_sim").desc, col(idCol).asc)
       .limit(k)

@@ -24,6 +24,7 @@ import graft.sources.Tables
   * engines.
   */
 object SimQueries {
+  import graft.functions.VectorExprs.{cosine, dot, norm}
   import graft.functions.VectorFunctions._
   import graft.operators.VectorSearch
 
@@ -578,7 +579,7 @@ object SimQueries {
     GraftQuery(
       "e08_scalar_quantize",
       (s, d) => {
-        val xs = transform(col("embedding"), x => x.cast("double"))
+        val xs = asDouble(col("embedding"))
         // greatest(0, ..): no-op for finite inputs (x >= mn by
         // construction) but makes the documented clamp(0..255) literal —
         // a NaN element can't smuggle engine-specific semantics through

@@ -87,7 +87,7 @@ class EmbeddingSkewSpec extends SparkSpec {
     val a = base.select(col("vec_id").as("a_id"), col("emb").as("a_emb"))
     val b = base.select(col("vec_id").as("b_id"), col("emb").as("b_emb"))
     val want = a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cos_sim", graft.functions.VectorFunctions
+      .withColumn("cos_sim", graft.functions.VectorExprs
         .cosine(col("a_emb"), col("b_emb")))
       .filter(col("cos_sim") >= 0.4)
       .select(col("a_id"), col("b_id"), col("cos_sim"))

@@ -279,7 +279,7 @@ class NearDupSpec extends SparkSpec {
     val sub = books.head.head.length
     val legacyCell = {
       val scored = cents.zipWithIndex.map { case (c, i) =>
-        struct(graft.functions.VectorFunctions.cosine(col("emb"), typedlit(c))
+        struct(graft.functions.VectorExprs.cosine(col("emb"), typedlit(c))
           .as("s"), lit(i).as("cell"))
       }
       val best = array_max(array(scored.map(s =>

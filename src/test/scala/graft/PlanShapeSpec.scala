@@ -892,10 +892,12 @@ class PlanShapeSpec extends SparkSpec {
     // the interpreted forms they replaced — transform(e, x -> cast(x as
     // double)) and transform(e, x -> x / nrm) — were re-run per row by
     // every filter pushed below them (e19's `cell IN (…)`). e40's own
-    // per-subspace error fold is a different lambda and stays.
+    // per-subspace error fold, and e08's code and error lambdas, are
+    // different lambdas and stay.
     val historical = """lambdafunction\(cast\(lambda |lambdafunction\(\(lambda \S+ / """.r
-    val pq = Seq("e13_pq_adc_recall", "e15_pq_pinned", "e19_ivfpq_topk",
-      "e20_ivfpq_pinned", "e21_ivfpq_rerank", "e40_pq_distortion")
+    val pq = Seq("e08_scalar_quantize", "e13_pq_adc_recall", "e15_pq_pinned",
+      "e19_ivfpq_topk", "e20_ivfpq_pinned", "e21_ivfpq_rerank",
+      "e40_pq_distortion")
     val lambdas = pq.filter { name =>
       historical.findFirstIn(GraftQuery.all.find(_.name == name).get
         .run(spark, sfDir).queryExecution.optimizedPlan.toString).nonEmpty

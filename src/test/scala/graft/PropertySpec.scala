@@ -107,14 +107,14 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: native CosineSim is bit-identical to the aggregate-fold form") {
-    import graft.functions.{VectorExprs, VectorFunctions}
+    import graft.functions.VectorExprs
     val vecGen = Gen.listOfN(16, Gen.chooseNum(-5.0, 5.0))
     val pairs = samples(Gen.zip(vecGen, vecGen), 120)
     val df = pairs.toDF("a", "b")
     val rows = df.select(
       VectorExprs.cosine($"a", $"b").as("native"),
-      (VectorFunctions.dot($"a", $"b") /
-        (VectorFunctions.norm($"a") * VectorFunctions.norm($"b"))).as("fold"))
+      (VectorExprs.dot($"a", $"b") /
+        (VectorExprs.norm($"a") * VectorExprs.norm($"b"))).as("fold"))
       .as[(Double, Double)].collect()
     rows.foreach { case (n, f) =>
       assert(java.lang.Double.doubleToLongBits(n) ==

@@ -8,6 +8,7 @@ import graft.sources.Tables
 /** Round-17 additions: the IVF-PQ composed index (e19/e20) and the
   * checkpoint-dir-aware barrier seam (Checkpoints.barrier). */
 class Round17OpsSpec extends SparkSpec {
+  import graft.functions.VectorExprs.dot
   import graft.functions.VectorFunctions._
 
   private def query(name: String) =

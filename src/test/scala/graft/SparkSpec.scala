@@ -27,6 +27,25 @@ abstract class SparkSpec extends AnyFunSuite {
   protected def shuffles(plan: String): Int =
     "[+:]- Exchange ".r.findAllIn(plan).length
 
+  /** Runs `body` under each expression factory with whole-stage codegen
+    * off: NO_CODEGEN takes the interpreted projection (the expressions'
+    * `eval`), CODEGEN_ONLY the generated one. */
+  protected def underEachFactory(body: String => Unit): Unit = {
+    val conf = spark.conf
+    val saved = Seq("spark.sql.codegen.wholeStage",
+      "spark.sql.codegen.factoryMode").map(k => k -> conf.getOption(k))
+    try {
+      conf.set("spark.sql.codegen.wholeStage", "false")
+      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
+        conf.set("spark.sql.codegen.factoryMode", mode)
+        body(mode)
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
+
   /** Spark jobs started while `body` runs, counted by a listener after
     * the listener bus has delivered every event. */
   protected def jobsDuring(body: => Unit): Int = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.VectorExprs
+import graft.functions.VectorExprs.norm
 import graft.functions.VectorFunctions._
 import graft.operators.VectorSearch
 import graft.sources.Tables
@@ -75,25 +76,6 @@ class VectorSearchSpec extends SparkSpec {
       .withColumn("nrm", norm(col("e")))
       .select(col("vec_id"), when(col("nrm") === lit(0.0), col("e"))
         .otherwise(transform(col("e"), x => x / col("nrm"))).as("emb"))
-  }
-
-  /** Runs `body` under each expression factory with whole-stage codegen
-    * off: NO_CODEGEN takes the interpreted projection (the expressions'
-    * `eval`), CODEGEN_ONLY the generated one (`doGenCode`). */
-  private def underEachFactory(body: String => Unit): Unit = {
-    val conf = spark.conf
-    val saved = Seq("spark.sql.codegen.wholeStage",
-      "spark.sql.codegen.factoryMode").map(k => k -> conf.getOption(k))
-    try {
-      conf.set("spark.sql.codegen.wholeStage", "false")
-      for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY")) {
-        conf.set("spark.sql.codegen.factoryMode", mode)
-        body(mode)
-      }
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
-    }
   }
 
   private def f(x: Float): java.lang.Float = java.lang.Float.valueOf(x)
