@@ -57,7 +57,7 @@ object Bench {
     // regex-compile cost that has nothing to do with its own plan
     // (measured: d01 2.4 s as first timed query vs 0.7 s warm).
     try graft.sources.Tables.documents(spark, sfDir).limit(64)
-      .select(graft.functions.TextFunctions.cleanTextAscii(
+      .select(graft.functions.TextFunctions.cleanText(
         org.apache.spark.sql.functions.col("text")).as("c"))
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }

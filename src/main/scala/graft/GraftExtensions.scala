@@ -17,10 +17,11 @@ import graft.functions.{CosineSim, CountWordsIn, DotProduct, JaccardSorted, MinH
   * `spark.sql.extensions=graft.GraftExtensions`.
   *
   * SQL surface (word lists are comma-separated string literals — they must
-  * be foldable, the sets are baked into the expression at plan time):
+  * be foldable, the sets are baked into the expression at plan time; a
+  * word is a maximal `(?U)\w` run, as Java's Unicode `\b` bounds it):
   *
-  *   scrub_words(s, 'w1,w2,…')      → s minus whole-word stopwords
-  *   count_words_in(s, 'w1,w2,…')   → int hit count
+  *   scrub_words(s, 'w1,w2,…')      → s minus the listed whole words
+  *   count_words_in(s, 'w1,w2,…')   → int count of the listed whole words
   *   simhash64(s)                   → 64-bit SimHash of the tokens
   *   cosine_sim(a, b)               → cosine of two array<double>
   *   dot_product(a, b)              → dot product of two array<double>

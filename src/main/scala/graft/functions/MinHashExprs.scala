@@ -29,12 +29,12 @@ import org.apache.spark.unsafe.types.UTF8String
 object MinHashExprs {
 
   /** Sorted distinct hashed 3-gram shingles of a token array (array<long>);
-    * null if the input is null, empty if < 3 tokens. */
+    * null if the input is null or holds a NULL token, empty if < 3 tokens. */
   def shingleHashes(toks: Column): Column =
     GraftSqlBridge.column(ShingleHashes(GraftSqlBridge.expression(toks)))
 
   /** `numTables` banded minhash values of a token array (array<long>);
-    * null if the input is null or has < 3 tokens. */
+    * null if the input is null, holds a NULL token or has < 3 tokens. */
   def minhashSigs(toks: Column, numTables: Int): Column =
     GraftSqlBridge.column(MinHashSigs(GraftSqlBridge.expression(toks), numTables))
 
@@ -42,7 +42,8 @@ object MinHashExprs {
     * array — byte-identical to
     * `array_min(transform(shingles, s -> md5(s)))` over
     * `concat(toks[i], ' ', toks[i+1], ' ', toks[i+2])` shingles, but one
-    * codegen'd pass; null if the input is null or has < 3 tokens. */
+    * codegen'd pass; null if the input is null, holds a NULL token or has
+    * < 3 tokens. */
   def minMd5Shingle(toks: Column): Column =
     GraftSqlBridge.column(MinMd5Shingle(GraftSqlBridge.expression(toks)))
 
@@ -57,9 +58,10 @@ object MinHashExprs {
     * word-3-gram shingles of a token array — byte-identical to
     * `transform(sequence(0, k-1), i -> array_min(transform(grams, g ->
     * md5(concat(cast(i as string), '|', g)))))` but one codegen'd pass;
-    * null if the input is null or has < 3 tokens. The DuckDB-mirrorable
-    * analog of [[minhashSigs]] (d38's estimate-vs-exact eval needs an
-    * oracle; production candidate generation keeps the xxhash64 form). */
+    * null if the input is null, holds a NULL token or has < 3 tokens. The
+    * DuckDB-mirrorable analog of [[minhashSigs]] (d38's estimate-vs-exact
+    * eval needs an oracle; production candidate generation keeps the
+    * xxhash64 form). */
   def kMinMd5Sigs(toks: Column, k: Int): Column =
     GraftSqlBridge.column(KMinMd5Sigs(GraftSqlBridge.expression(toks), k))
 
@@ -71,8 +73,8 @@ object MinHashExprs {
     * one digest per token, integer shifts for the 64 votes, no hex-string
     * or lambda dispatch. The DuckDB-mirrorable analog of
     * [[graft.functions.TextExprs]]' SimHash64 (d50/d51; production
-    * SimHash stays on the xxhash64 expression). Null input → null;
-    * empty → all-'0' (the fold's zero accumulator). */
+    * SimHash stays on the xxhash64 expression). Null input or a NULL
+    * token → null; empty → all-'0' (the fold's zero accumulator). */
   def simhashMd5Bits(toks: Column): Column =
     GraftSqlBridge.column(SimHashMd5Bits(GraftSqlBridge.expression(toks)))
 
@@ -111,10 +113,12 @@ case class BandMd5Sigs(child: Expression, numTables: Int)
 case class SimHashMd5Bits(child: Expression)
     extends UnaryExpression with KernelCall {
   override def dataType: DataType = StringType
+  override def nullable: Boolean = true
   override def prettyName: String = "simhash_md5_bits"
 
   override protected def kernels: AnyRef = MinHashOps
   override protected def kernel: String = "simhashMd5Bits"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): SimHashMd5Bits =
     copy(child = newChild)
@@ -123,10 +127,12 @@ case class SimHashMd5Bits(child: Expression)
 case class ShingleHashes(child: Expression)
     extends UnaryExpression with KernelCall {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = true
   override def prettyName: String = "shingle_hashes"
 
   override protected def kernels: AnyRef = MinHashOps
   override protected def kernel: String = "shingleHashes"
+  override protected def kernelNullable: Boolean = true
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
@@ -242,9 +248,20 @@ object MinHashOps {
     false
   }
 
+  /** Whether a token array holds a NULL element. The token kernels answer
+    * NULL for it, the rule VectorOps applies to a NULL vector element. */
+  private def anyNull(toks: ArrayData): Boolean = {
+    var i = 0
+    while (i < toks.numElements()) {
+      if (toks.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
   def minMd5Shingle(toks: ArrayData): UTF8String = {
     val n = toks.numElements()
-    if (n < 3) return null
+    if (n < 3 || anyNull(toks)) return null
     val md = md5Local.get()
     val tokBytes = new Array[Array[Byte]](n)
     var i = 0
@@ -283,6 +300,7 @@ object MinHashOps {
     * sum ±1 votes over the token MULTISET; output char j is '1' iff
     * counter j ends positive (ties to '0'). Empty input → all-'0'. */
   def simhashMd5Bits(toks: ArrayData): UTF8String = {
+    if (anyNull(toks)) return null
     val n = toks.numElements()
     val counters = new Array[Int](64)
     val md = md5Local.get()
@@ -335,6 +353,7 @@ object MinHashOps {
   }
 
   def shingleHashes(toks: ArrayData): ArrayData = {
+    if (anyNull(toks)) return null
     val raw = rawShingleHashes(toks)
     java.util.Arrays.sort(raw)
     // distinct on the sorted array, in place
@@ -382,7 +401,7 @@ object MinHashOps {
 
   def kMinMd5Sigs(toks: ArrayData, k: Int): ArrayData = {
     val n = toks.numElements()
-    if (n < 3) return null
+    if (n < 3 || anyNull(toks)) return null
     val md = md5Local.get()
     val tokBytes = new Array[Array[Byte]](n)
     var i = 0
@@ -472,6 +491,7 @@ object MinHashOps {
   }
 
   def minhashSigs(toks: ArrayData, numTables: Int): ArrayData = {
+    if (anyNull(toks)) return null
     val raw = rawShingleHashes(toks)
     if (raw.isEmpty) return null
     val sigs = Array.fill(numTables)(Long.MaxValue)

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * whose `functions._` formulations dominate the bench profile:
   *
   *   - [[ScrubWords]] — whole-word stopword removal. The regex form
-  *     (`regexp_replace(c, "\\b(?:w1|…|w308)\\b", "")`) retries a 308-way
+  *     (`regexp_replace(c, "(?U)\\b(?:w1|…|w308)\\b", "")`) retries a 308-way
   *     alternation at every character position; this expression does one
   *     linear pass with an O(1) hash-set probe per word.
   *   - [[SimHash64]] — 64-bit SimHash over whitespace tokens. The SQL
@@ -33,11 +33,12 @@ object TextExprs {
     KernelCall.const(s)
   }
 
-  /** Remove every maximal ASCII-word run (`[A-Za-z0-9_]+`) of `c` that is in
-    * `words`, keeping all other characters. Equivalent to
-    * `regexp_replace(c, "\\b(?:" + words.mkString("|") + ")\\b", "")` (ASCII
-    * `\b`/`\w` dialect) for stopword lists whose entries are pure ASCII word
-    * characters — verified by TextFunctionsSpec against the regex form. */
+  /** Remove every maximal word run (`(?U)\w+`) of `c` that is in `words`,
+    * keeping all other characters. Equivalent to
+    * `regexp_replace(c, "(?U)\\b(?:" + words.mkString("|") + ")\\b", "")`
+    * for word lists whose entries are made of word characters only, and so
+    * to the ASCII `\b` form on ASCII text — verified by TextFunctionsSpec
+    * against both regex forms. */
   def scrubWords(c: Column, words: Seq[String]): Column =
     GraftSqlBridge.column(ScrubWords(GraftSqlBridge.expression(c), words))
 
@@ -46,10 +47,10 @@ object TextExprs {
   def simhash64(c: Column): Column =
     GraftSqlBridge.column(SimHash64(GraftSqlBridge.expression(c)))
 
-  /** Count of maximal ASCII-word runs of `c` contained in `words` —
-    * equivalent to `size(regexp_extract_all(c, "\\b(?:w1|…)\\b", 0))` for
-    * pure-word-char entries (same equivalence argument as [[ScrubWords]]),
-    * in one linear pass. */
+  /** Count of maximal word runs (`(?U)\w+`) of `c` contained in `words` —
+    * equivalent to `size(regexp_extract_all(c, "(?U)\\b(?:w1|…)\\b", 0))`
+    * for word-character entries (same equivalence argument as
+    * [[ScrubWords]]), in one linear pass. */
   def countWordsIn(c: Column, words: Seq[String]): Column =
     GraftSqlBridge.column(CountWordsIn(GraftSqlBridge.expression(c), words))
 
@@ -104,16 +105,17 @@ object TextExprs {
         "cast(array() as array<struct<n: bigint, gram: string>>)"))
 }
 
-/** Whole-word stopword scrub: removes maximal `[A-Za-z0-9_]+` runs contained
-  * in the word set.
+/** Whole-word stopword scrub: removes the maximal word runs contained in
+  * the word set. A word character is Java's `(?U)\w` (letters, marks,
+  * decimal digits, connector punctuation, ZWNJ/ZWJ), taken by code point.
   *
-  * Equivalence with the ASCII regex form `\b(?:w1|…)\b` for pure-word-char
-  * entries: `\b` bounds a match by non-word characters (or string edges) on
-  * both sides, and the alternation entries are all word characters, so a
-  * match is exactly a maximal word run equal to some entry. Entries that
-  * contain non-word characters (e.g. accented Spanish stopwords under the
-  * ASCII dialect) can never equal a maximal run and must be handled by a
-  * separate (much smaller) regex pass — see TextFunctions.cleanTextAscii.
+  * Equivalence with the regex form `(?U)\b(?:w1|…)\b` for entries made of
+  * word characters only (all 308 Snowball Spanish stopwords are): `(?U)\b`
+  * is a transition of the same predicate, so it bounds a match by non-word
+  * characters (or string edges) on both sides, and a match is exactly a
+  * maximal word run equal to some entry. On ASCII text the predicate is
+  * `[A-Za-z0-9_]`, so the scrub also equals the ASCII `\b` form the
+  * DuckDB oracle writes.
   */
 case class ScrubWords(child: Expression, words: Seq[String])
     extends UnaryExpression with KernelCall {
@@ -148,8 +150,9 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
-/** Whole-word hit counter: counts maximal `[A-Za-z0-9_]+` runs contained in
-  * the word set (see [[ScrubWords]] for the regex-equivalence argument). */
+/** Whole-word hit counter: counts the maximal word runs (`(?U)\w+`)
+  * contained in the word set (see [[ScrubWords]] for the word predicate
+  * and the regex-equivalence argument). */
 case class CountWordsIn(child: Expression, words: Seq[String])
     extends UnaryExpression with KernelCall {
 
@@ -345,44 +348,59 @@ object TextOps {
     new GenericArrayData(out)
   }
 
-  @inline private def isWordChar(c: Char): Boolean =
-    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-      (c >= '0' && c <= '9') || c == '_'
+  /** Character types of Java's `(?U)\w` besides the alphabetic ones. */
+  private val WordTypes =
+    (1 << Character.NON_SPACING_MARK) | (1 << Character.ENCLOSING_MARK) |
+      (1 << Character.COMBINING_SPACING_MARK) |
+      (1 << Character.DECIMAL_DIGIT_NUMBER) |
+      (1 << Character.CONNECTOR_PUNCTUATION)
 
-  /** Count maximal ASCII-word runs of `input` found in `words`. */
+  /** Java's `(?U)\w` (`java.util.regex.CharPredicates.WORD`): alphabetic,
+    * a Mn/Me/Mc mark, a decimal digit, connector punctuation, or the
+    * ZWNJ/ZWJ join controls. `(?U)\b` is a transition of this predicate,
+    * so on ASCII text it is `[A-Za-z0-9_]`, the ASCII `\w`. */
+  private def isWordChar(cp: Int): Boolean =
+    Character.isAlphabetic(cp) || ((WordTypes >> Character.getType(cp)) & 1) != 0 ||
+      cp == 0x200C || cp == 0x200D
+
+  /** The end of the maximal word run of `s` starting at `i`. */
+  private def runEnd(s: String, i: Int): Int = {
+    var j = i
+    while (j < s.length && isWordChar(s.codePointAt(j)))
+      j += Character.charCount(s.codePointAt(j))
+    j
+  }
+
+  /** Count maximal word runs of `input` found in `words`. */
   def countWordsIn(input: UTF8String, words: java.util.HashSet[String]): Int = {
     val s = input.toString
-    val n = s.length
     var count = 0
     var i = 0
-    while (i < n) {
-      if (isWordChar(s.charAt(i))) {
-        var j = i + 1
-        while (j < n && isWordChar(s.charAt(j))) j += 1
+    while (i < s.length) {
+      val j = runEnd(s, i)
+      if (j > i) {
         if (words.contains(s.substring(i, j))) count += 1
         i = j
-      } else i += 1
+      } else i += Character.charCount(s.codePointAt(i))
     }
     count
   }
 
   /** Single pass over the string: copy through everything except maximal
-    * ASCII-word runs found in `stop`. */
+    * word runs found in `stop`. */
   def scrub(input: UTF8String, stop: java.util.HashSet[String]): UTF8String = {
     val s = input.toString
-    val n = s.length
-    val sb = new java.lang.StringBuilder(n)
+    val sb = new java.lang.StringBuilder(s.length)
     var i = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (isWordChar(c)) {
-        var j = i + 1
-        while (j < n && isWordChar(s.charAt(j))) j += 1
+    while (i < s.length) {
+      val j = runEnd(s, i)
+      if (j > i) {
         if (!stop.contains(s.substring(i, j))) sb.append(s, i, j)
         i = j
       } else {
-        sb.append(c)
-        i += 1
+        val next = i + Character.charCount(s.codePointAt(i))
+        sb.append(s, i, next)
+        i = next
       }
     }
     UTF8String.fromString(sb.toString)

@@ -34,19 +34,12 @@ object TextFunctions {
   /** T3 — @mention strip. (?U) so \w is Unicode-aware like ICU's. */
   val mentionPattern = "(?U)@\\w+"
 
-  /** T4 — whole-word stopword alternation. (?U) makes \b Unicode-aware,
-    * matching tm's perl (*UCP) semantics — accented words (él, más) would
-    * otherwise fail at the boundary. */
-  def stopwordPattern(words: Seq[String]): String =
-    words.map(java.util.regex.Pattern.quote).mkString("(?U)\\b(?:", "|", ")\\b")
-
-  lazy val spanishStopwordPattern: String = stopwordPattern(spanishStopwords)
-
-  /** ASCII-dialect variants for oracle-checked queries: DuckDB's RE2 has no
-    * (?U) flag (there `U` means ungreedy!), and both Java-without-(?U) and
-    * RE2 use ASCII \w/\b — so on ASCII corpora (documents.parquet is
-    * verified pure-ASCII) these patterns behave identically in both
-    * engines. The (?U) forms above remain the tweet-parity versions. */
+  /** ASCII-dialect word alternations for the DuckDB oracle SQL: RE2 has no
+    * (?U) flag (there `U` means ungreedy!) and uses ASCII \w/\b. The Spark
+    * side matches whole words with the word-run kernels (`ScrubWords`,
+    * `CountWordsIn`), whose `(?U)\w` runs are `[A-Za-z0-9_]+` on ASCII
+    * text — so on ASCII corpora (documents.parquet is verified pure-ASCII)
+    * both engines match the same words. */
   def plainWordPattern(words: Seq[String]): String =
     words.mkString("\\b(?:", "|", ")\\b")
 
@@ -64,48 +57,21 @@ object TextFunctions {
 
   /** T1-T5 composed: the full reference cleaning pipeline as one Column
     * expression (reference applies the same closure to content and
-    * quoted_content via mutate_at, main.R:93-104). */
-  def cleanText(c: Column, stopwords: String): Column =
-    squish(regexp_replace(regexp_replace(regexp_replace(lower(c), urlPattern, ""), mentionPattern, ""), stopwords, ""))
+    * quoted_content via mutate_at, main.R:93-104). T4 is tm::removeWords'
+    * `(*UCP)\b(w1|…)\b` alternation, run as one ScrubWords pass: its
+    * `(?U)\w` word runs make it equal to that regex on any text, and to
+    * the ASCII oracle regex on ASCII text. */
+  def cleanText(c: Column): Column =
+    squish(TextExprs.scrubWords(
+      regexp_replace(regexp_replace(lower(c), urlPattern, ""), mentionPattern, ""),
+      spanishStopwords))
 
-  def cleanText(c: Column): Column = cleanText(c, spanishStopwordPattern)
-
-  /** cleanText with ASCII-dialect patterns — identical output to the (?U)
-    * form on ASCII input, and reproducible in DuckDB RE2 for the oracle.
-    *
-    * Perf: the 308-word alternation regex is split into a single-pass
-    * hash-set scrub (ScrubWords, a codegen'd Catalyst expression) for the
-    * 224 pure-ASCII-word entries plus a 84-word regex for the accented
-    * entries. Equivalent to the one-big-regex form: under ASCII `\b`, a
-    * pure-word entry matches exactly a maximal word run (handled by the
-    * scrub) and a removal can never create a new word-run adjacency (runs
-    * are bounded by non-word chars), so the two passes commute with the
-    * single pass. TextFunctionsSpec asserts equality against the regex
-    * form; the DuckDB oracle keeps the one-regex formulation. */
-  def cleanTextAscii(c: Column): Column = {
-    val (pure, accented) = spanishStopwords.partition(_.forall(ch =>
-      (ch >= 'a' && ch <= 'z') || (ch >= 'A' && ch <= 'Z') ||
-        (ch >= '0' && ch <= '9') || ch == '_'))
-    val noUrls = regexp_replace(regexp_replace(lower(c), urlPattern, ""),
-      asciiMentionPattern, "")
-    val scrubbed = TextExprs.scrubWords(noUrls, pure)
-    // The accented entries contain non-ASCII characters, so they can only
-    // match in strings that contain non-ASCII bytes — gate the 84-way
-    // alternation behind a one-compare-per-char ASCII check (pure-ASCII
-    // corpora skip it entirely).
-    val accentedScrubbed = when(scrubbed.rlike("[^\\x00-\\x7F]"),
-      regexp_replace(scrubbed, plainWordPattern(accented), ""))
-      .otherwise(scrubbed)
-    squish(accentedScrubbed)
-  }
-
-  /** Regex-hit stopword density: whole-word stopword matches over total
-    * whitespace tokens. Pure narrow expression, zero state. */
-  def stopwordHitRatio(c: Column, pattern: String): Column = {
+  /** Stopword density: whole-word hits of `words` in the lower-cased text
+    * over its whitespace tokens. Pure narrow expression, zero state. */
+  def stopwordHitRatio(c: Column, words: Seq[String]): Column = {
     val nTok = size(tokens(c))
     when(nTok === 0, lit(0.0)).otherwise(
-      size(regexp_extract_all(lower(c), lit(pattern), lit(0))).cast("double") /
-        nTok.cast("double"))
+      TextExprs.countWordsIn(lower(c), words).cast("double") / nTok.cast("double"))
   }
 
   /** T5 — str_squish: collapse whitespace runs to single spaces, then trim.
@@ -229,7 +195,7 @@ object TextFunctions {
     df.withColumn("n_tokens", tokenCount(col("text")).cast("bigint"))
       .withColumn("quality_score", qualityScore(col("text")))
       .withColumn("stopword_ratio",
-        stopwordHitRatio(col("text"), englishStopwordPattern))
+        stopwordHitRatio(col("text"), englishStopwords))
       .withColumn("lang_pred", langId(col("text")))
 
   /** The admission predicate over [[withQualitySignals]] columns. */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions._
+import graft.sources.TweetSource
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,7 +33,7 @@ object TweetPipeline {
     * (main.R:96). NULL-on-failure is the parity behavior. */
   private val createdAtTs =
     try_to_timestamp(substring(col("created_at"), 5, 26),
-      lit("MMM dd HH:mm:ss Z yyyy"))
+      lit(TweetSource.twitterTimestampFormat))
 
   def filterProject(raw: DataFrame): DataFrame =
     raw

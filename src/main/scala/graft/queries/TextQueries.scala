@@ -231,7 +231,7 @@ object TextQueries {
       "d01_clean_text",
       (s, d) =>
         Tables.documents(s, d)
-          .select(col("doc_id"), cleanTextAscii(col("text")).as("clean")),
+          .select(col("doc_id"), cleanText(col("text")).as("clean")),
       // trim AFTER collapsing (str_squish strips all edge whitespace; see
       // TextFunctions.squish)
       Some(s"""SELECT doc_id,
@@ -316,7 +316,7 @@ object TextQueries {
       (s, d) =>
         Tables.documents(s, d).select(
           col("doc_id"),
-          stopwordHitRatio(col("text"), englishStopwordPattern).as("stopword_ratio")),
+          stopwordHitRatio(col("text"), englishStopwords).as("stopword_ratio")),
       Some(s"""SELECT doc_id,
         CASE WHEN len($sqlToks) = 0 THEN 0.0
           ELSE CAST(len(regexp_extract_all(lower(text), '$englishStopwordPattern')) AS DOUBLE)

@@ -18,8 +18,7 @@ import graft.operators.{Checkpoints, GlobalRank}
 
 /** The `tweet_data` sink contract (SURVEY.md §2.1 S5-S8):
   * declared 8-column schema, sink-assigned surrogate `tweet_id`,
-  * append-only loads, existence-rename guard, connection-per-operation
-  * lifecycle.
+  * append-only loads, existence-rename guard.
   *
   * Reference: CREATE TABLE /root/reference/main.R:26-39; rename guard
   * main.R:20-24; append main.R:117-119; empty-input no-op main.R:114.
@@ -62,10 +61,8 @@ object TweetSink {
 }
 
 /** Parquet-table implementation. No SQLite JDBC driver ships in the
-  * offline environment, so the same contract runs against a parquet
-  * directory table — append-only, schema-checked, surrogate ids. (The
-  * JDBC formulation is [[JdbcTweetSink]]; swap via the CLI `--database`
-  * URL scheme.)
+  * offline environment, so the contract runs against a parquet directory
+  * table — append-only, schema-checked, surrogate ids.
   *
   * tweet_id: dense like SQLite's INTEGER PRIMARY KEY rowids — each batch
   * takes `highWater + 1 .. highWater + n`, one id per row, assigned in
@@ -233,43 +230,4 @@ object ParquetTweetSink {
     if (!Files.isDirectory(dir)) 0L
     else Using.resource(Files.list(dir))(_.iterator().asScala
       .count(p => !hiddenFromReaders(p.getFileName.toString)).toLong)
-}
-
-/** JDBC formulation of the same contract (S5-S8) for environments that do
-  * ship a driver (e.g. sqlite-jdbc, postgres). Not exercisable offline —
-  * no JDBC driver jar is present — but the code path is the documented
-  * production shape: DDL pass-through + df.write.jdbc append per batch.
-  *
-  * Delivery is at-least-once: a batch replayed after a failure between its
-  * insert and the stream's commit is inserted again. The sink keeps no
-  * high-water record, since the database assigns the rowids itself. */
-final class JdbcTweetSink(spark: SparkSession, url: String,
-    table: String = "tweet_data") extends TweetSink {
-  private val log = LoggerFactory.getLogger(getClass)
-
-  val createTableSql: String =
-    s"""CREATE TABLE IF NOT EXISTS $table(
-       |  tweet_id INTEGER PRIMARY KEY,
-       |  date_created INTEGER,
-       |  "user" TEXT,
-       |  content TEXT,
-       |  source TEXT,
-       |  location TEXT,
-       |  quoted_user TEXT,
-       |  quoted_content TEXT)""".stripMargin
-
-  override def ensureTable(): String = {
-    val conn = java.sql.DriverManager.getConnection(url)
-    try { conn.createStatement().execute(createTableSql); url }
-    finally conn.close()
-  }
-
-  override def append(df: DataFrame): Unit = {
-    // Sink assigns tweet_id (rowid) — write only the 7 transform columns,
-    // exactly like dbWriteTable(append=TRUE) (main.R:117-119). An empty
-    // batch inserts no rows.
-    df.write.mode(SaveMode.Append)
-      .jdbc(url, table, new java.util.Properties())
-    log.info(s"appended batch to $table via $url")
-  }
 }

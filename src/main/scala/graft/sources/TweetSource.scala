@@ -41,7 +41,6 @@ object TweetSource {
       .schema(rawSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("timestampFormat", twitterTimestampFormat)
       .json(path: _*)
 
   /** Streaming read over the bronze directory (micro-batch source for the
@@ -51,7 +50,6 @@ object TweetSource {
       .schema(rawSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("timestampFormat", twitterTimestampFormat)
       .option("maxFilesPerTrigger", "1") // one bronze file == one reference chunk
       .json(dir)
 }

@@ -29,10 +29,10 @@ object TweetStream {
   /** F2 — the `--keys` server-side keyword predicate
     * (main.R:61, 133-137), emulated as a case-insensitive any-of-keys
     * match on the raw text, applied before the transform so the filter
-    * sits directly above the scan. */
-  /** None when no usable token survives trimming (e.g. keys = "," or
-    * ", ") — compiling those into an empty alternation "(?i)()" would
-    * silently match every row instead of filtering. */
+    * sits directly above the scan. None when no usable token survives
+    * trimming (e.g. keys = "," or ", ") — compiling those into an empty
+    * alternation "(?i)()" would silently match every row instead of
+    * filtering. */
   def keysPattern(keys: String): Option[String] = {
     val toks = keys.split(",").map(_.trim).filter(_.nonEmpty)
     if (toks.isEmpty) None

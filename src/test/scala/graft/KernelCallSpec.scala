@@ -18,8 +18,8 @@ class KernelCallSpec extends SparkSpec {
 
   /** Fixture text and vectors, zipped by position, plus edge rows: a NULL
     * input, a NULL element, empty values, a NaN element, all -0.0 and
-    * mixed ±0.0 vectors. `words` never holds a NULL element (the shingle
-    * kernels take tokenizer output), `grams` may. */
+    * mixed ±0.0 vectors, and a NULL token (row -7, the only `words` row
+    * that holds one; `grams` holds them elsewhere too). */
   private lazy val input: DataFrame = {
     val texts = Tables.documents(spark, sfDir).orderBy("doc_id").limit(n)
       .select("text").collect().map(_.getString(0))
@@ -57,7 +57,10 @@ class KernelCallSpec extends SparkSpec {
         Seq(-7L, 0L, 7L), Seq(-7L, 0L, 7L)),
       Row(-6L, boxed(signedZeros), boxed(vecs(1)), 1, codes(6), "x",
         Seq("p", "q", "p", "q", "p"), Seq("p", "q", "p", "q", "p"),
-        Seq(2L), Seq(2L)))
+        Seq(2L), Seq(2L)),
+      Row(-7L, boxed(vecs(2)), boxed(vecs(3)), 2, codes(7), "a b c",
+        Seq("a", null, "b", "c"), Seq("a", null, "b", "c"),
+        Seq(1L), Seq(1L)))
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("vec", ArrayType(DoubleType)),
@@ -139,7 +142,14 @@ class KernelCallSpec extends SparkSpec {
       "default settings on fixture and edge rows") {
     assert(cases.map(_._2.getClass).distinct.size === 25)
     val want = cases.map { case (name, x) => name -> rows(x) }
-    want.foreach { case (name, w) => assert(w.size === n + 6, name) }
+    want.foreach { case (name, w) => assert(w.size === n + 7, name) }
+    val tokenKernels = Set("ShingleHashes", "MinHashSigs", "MinMd5Shingle",
+      "KMinMd5Sigs", "SimHashMd5Bits")
+    val onNullToken = want.collect {
+      case (name, w) if tokenKernels(name) => name -> w(-7L)
+    }
+    assert(onNullToken.size === 5 && onNullToken.forall(_._2 == null),
+      s"a NULL token must give NULL: $onNullToken")
     underEachFactory { mode =>
       cases.zip(want).foreach { case ((name, x), (_, w)) =>
         val got = rows(x)

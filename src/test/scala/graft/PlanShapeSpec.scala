@@ -874,6 +874,16 @@ class PlanShapeSpec extends SparkSpec {
       s"exchange budgets exceeded:\n${over.mkString("\n")}")
   }
 
+  test("the tweet ETL removes stopwords with one scrub_words per cleaned " +
+      "column and no stopword regex") {
+    val raw = graft.sources.TweetSource.read(spark, fixture("stream_basic.json"))
+    val optimized = graft.operators.TweetPipeline.transform(raw)
+      .queryExecution.optimizedPlan.toString
+    assert("scrub_words\\(".r.findAllIn(optimized).size === 2, optimized)
+    // both whole-word alternation dialects open with this group
+    assert(!optimized.contains("\\b(?:"), optimized)
+  }
+
   test("e19's IVF-PQ build runs at most 7 Spark jobs on a cold corpus") {
     // Two schema inferences (the query's load and the corpus count's),
     // the corpus count (2 jobs under AQE), the one lowest-id collect

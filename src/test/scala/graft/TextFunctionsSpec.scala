@@ -141,8 +141,34 @@ class TextFunctionsSpec extends SparkSpec {
       "el que quiera de los nuestros para la causa",
       "", "   ", "sin_cambios de_nada", "de la que el en y a los del se")
     val df = inputs.toDF("t").select(
-      TextFunctions.cleanTextAscii($"t").as("fast"), oneRegex($"t").as("slow"))
+      TextFunctions.cleanText($"t").as("fast"), oneRegex($"t").as("slow"))
     df.collect().foreach(r => assert(r.getString(0) == r.getString(1)))
+  }
+
+  test("scrubWords with the Spanish list equals the (?U) alternation on " +
+      "random Unicode strings") {
+    import graft.functions.TextExprs
+    val words = TextFunctions.spanishStopwords
+    val regex = words.map(java.util.regex.Pattern.quote)
+      .mkString("(?U)\\b(?:", "|", ")\\b")
+    // Pieces glued with no separator, so word runs form across them:
+    // stopwords (accented ones too), letters, a combining acute (U+0301),
+    // ZWNJ/ZWJ, the connector U+203F, an Arabic-Indic digit, an astral
+    // letter (U+1D400), an emoji, dotted I, sharp s, underscore,
+    // punctuation and whitespace.
+    val pieces = Seq("de", "la", "que", "el", "él", "más", "también", "estás",
+      "sí", "a", "e", "x", "á", "ñ", "\u0301", "\u200C", "\u200D", "\u203F",
+      "\u0663", "\uD835\uDC00", "\uD83D\uDE00", "İ", "ß", "_", ".", ",",
+      "¿", "!", "-", "'", " ", " ", " ", "\t", "\n")
+    val rnd = new scala.util.Random(14)
+    val inputs = (1 to 2000).map(_ =>
+      (1 to rnd.nextInt(24)).map(_ => pieces(rnd.nextInt(pieces.length))).mkString)
+    val df = inputs.toDF("t").select($"t",
+      TextExprs.scrubWords($"t", words).as("scrub"),
+      regexp_replace($"t", regex, "").as("re"))
+    df.collect().foreach { r =>
+      assert(r.getString(1) == r.getString(2), s"input '${r.getString(0)}'")
+    }
   }
 
   test("simhash64 expression matches a reference implementation") {
