@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** Session factory with the engine's standard tuning.
   *
@@ -46,6 +47,20 @@ object GraftSession {
       // doesn't accumulate one rdd-* dir per call.
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
+      // Streaming checkpoint logs through the FileSystem API: the default
+      // FileContext-based manager resolves links with FileUtil.readLink,
+      // which forks a `readlink` process when the libhadoop native library
+      // is absent — 8 per log per micro-batch. FileSystem.rename is one
+      // atomic rename(2) on the local FS and atomic on HDFS. `classOf` makes
+      // a future move of the class a compile error, not a silent fall-back.
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+      // The `file:` scheme through GraftLocalFileSystem, which sets
+      // permissions in-process: without libhadoop, Hadoop's local FS forks
+      // `chmod` for every file create and mkdirs. Hadoop caches one
+      // FileSystem per scheme per JVM and the first one created wins, so a
+      // main must build its session here before touching any FileSystem.
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
 
   /** Worker-thread count: SPARK_GRAFT_CPUS if set and valid, else every
     * available core (the driver's config is local[32] on a 32-core box —

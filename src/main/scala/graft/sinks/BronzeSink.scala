@@ -4,6 +4,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
+import scala.util.Using
+
 import org.apache.spark.sql.DataFrame
 import org.slf4j.LoggerFactory
 
@@ -43,16 +45,17 @@ object BronzeSink {
     val target = dir.resolve(chunkFileName(now()))
     log.debug(s"Writing raw chunk into $target")
     // Single-file NDJSON: write via a temp dir, then move the part file to
-    // the timestamped name (Spark writers emit part-files + _SUCCESS).
+    // the timestamped name (Spark writers emit part-files + _SUCCESS). The
+    // temp dir goes whether or not the write succeeds.
     val tmp = Files.createTempDirectory(dir, ".chunk_")
-    val tmpOut = tmp.resolve("out")
-    raw.toJSON.coalesce(1).write.text(tmpOut.toString)
-    val part = Files.list(tmpOut).filter(p =>
-      p.getFileName.toString.startsWith("part-")).findFirst().get()
-    Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-    // clean up the temp write dir
-    Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
+    try {
+      val tmpOut = tmp.resolve("out")
+      raw.toJSON.coalesce(1).write.text(tmpOut.toString)
+      val part = Using.resource(Files.list(tmpOut))(_.filter(p =>
+        p.getFileName.toString.startsWith("part-")).findFirst().get())
+      Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
+    } finally Using.resource(Files.walk(tmp))(
+      _.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.deleteIfExists(p)))
     log.debug("Chunk write completed")
     target
   }
