@@ -86,7 +86,10 @@ class LocalFileSystemSpec extends SparkSpec {
   }
 
   test("streaming micro-batches and a bronze chunk write fork no process") {
-    streamAndWriteChunk(1, "warm") // one-off class initialisation stays outside
+    // one-off JVM initialisation stays outside: class loading, and the
+    // heartbeat's first metrics poll, which forks `getconf PAGESIZE` once
+    streamAndWriteChunk(1, "warm")
+    org.apache.spark.HeartbeatMetrics.poll(spark.sparkContext)
     val started = processesStartedDuring(streamAndWriteChunk(3, "timed"))
     assert(started.size == 0, s"forked: ${started.take(5).mkString("; ")}")
   }
